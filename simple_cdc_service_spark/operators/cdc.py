@@ -19,6 +19,9 @@ Scale notes (100 TB):
     partial aggregation: each map task pre-collapses its partition before
     the shuffle, so the reducer for a hot key receives at most one row per
     map task. AQE skew-join handling is irrelevant here — this is an agg.
+  * The envelope → changelog derivation is SQL text (changelog_sql), so a
+    streaming sink plans it as one statement per micro-batch instead of
+    rebuilding ~100 Column calls; planning is fixed per-batch driver time.
 """
 
 from __future__ import annotations
@@ -129,6 +132,119 @@ def collapse_changelog_window(changelog: DataFrame, cfg: ChangeTableConfig) -> D
     )
 
 
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier for the SQL text builders. Braces are
+    doubled because the text is a ``spark.sql(text, parsed=df)`` format
+    template."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def sql_str(s: str) -> str:
+    """Single-quoted SQL string literal (a named_struct field name, a
+    from_json schema), escaped the same way."""
+    s = s.replace("\\", "\\\\").replace("'", "\\'")
+    return "'" + s.replace("{", "{{").replace("}", "}}") + "'"
+
+
+# classify_op's null-ness branch, as the Debezium op code it implies:
+# only `after` → insert, both → update, only `before` → delete, neither →
+# truncate (main.py:49,54,75,88).
+_OP_CODE = (
+    "CASE WHEN before IS NULL THEN IF(after IS NULL, 't', 'c') "
+    "ELSE IF(after IS NULL, 'd', 'u') END"
+)
+
+
+def changelog_sql(cfg: ChangeTableConfig, passthrough: "dict[str, str]") -> str:
+    """SELECT text of the envelope → flat changelog derivation (the one
+    implementation behind envelope_changelog, snapshot_from_envelopes and
+    the streaming merges' batch collapse), reading the parsed envelopes
+    from the ``{parsed}`` slot of ``spark.sql(text, parsed=df)``.
+
+    ``passthrough`` maps output name → SQL expression over the parsed
+    envelopes (order coordinates, raw message, …). The text depends only
+    on its arguments, so a sink builds it once and re-plans it per
+    micro-batch."""
+    keys, vals = cfg.key_columns, cfg.value_columns
+    names = [sql_ident(n) for n in passthrough]
+    pass_exprs = [f"{e} AS {n}" for n, e in zip(names, passthrough.values())]
+    key_changed = " OR ".join(
+        f"before.{sql_ident(k)} <> after.{sql_ident(k)}" for k in keys
+    )
+
+    def event(op: str, key_src: str) -> str:
+        # values always come from `after`; a 'd' row's values are never
+        # read by the collapse (keeps the struct type uniform across the
+        # array branches)
+        fields = [f"'__op', {op}"]
+        fields += [f"{sql_str(k)}, {key_src}.{sql_ident(k)}" for k in keys]
+        fields += [f"{sql_str(v)}, after.{sql_ident(v)}" for v in vals]
+        return f"named_struct({', '.join(fields)})"
+
+    # for deletes/truncates `after` is null → keys fall back to `before`
+    out = [
+        *names,
+        f"__e.__op AS {sql_ident(cfg.op_column)}",
+        *[
+            f"coalesce(__e.{sql_ident(k)}, before.{sql_ident(k)}) AS {sql_ident(k)}"
+            for k in keys
+        ],
+        *[f"__e.{sql_ident(v)} AS {sql_ident(v)}" for v in vals],
+    ]
+    # PK-changing update → delete(before.key) + insert(after.key)
+    delete_old, insert_new = event("'d'", "before"), event("'c'", "after")
+    events = (
+        f"CASE WHEN __code = 'u' AND ({key_changed}) "
+        f"THEN array({delete_old}, {insert_new}) "
+        f"ELSE array({event('__code', 'after')}) END"
+    )
+    coded = (
+        f"SELECT {', '.join([*pass_exprs, 'before', 'after'])}, "
+        f"{_OP_CODE} AS __code FROM {{parsed}}"
+    )
+    exploded = (
+        f"SELECT {', '.join([*names, 'before'])}, explode({events}) AS __e "
+        f"FROM ({coded})"
+    )
+    return f"SELECT {', '.join(out)} FROM ({exploded})"
+
+
+def last_event_sql(cfg: ChangeTableConfig, order: str) -> str:
+    """One statement: parsed envelopes → changelog_sql → each key's last
+    event. Output columns: the key columns; ``__op`` and the value
+    columns of the key's last non-truncate event by ``order`` (an SQL
+    expression over the parsed envelopes); ``__ord``, that event's order
+    coordinate; and ``__tk``, the group's last truncate coordinate. Final
+    deletes are KEPT (a merge needs them to erase existing state).
+
+    Truncate events have no row images, so all of them fall in the
+    all-NULL-key group and the batch's truncate epoch is that group's
+    ``__tk`` (NULL everywhere when the batch has no truncate). No epoch
+    filter runs before the aggregate: a key survives the truncate iff its
+    ``__ord`` is after the epoch, and when it survives its last event over
+    the live events is its last event over all of them — so the merge
+    applies truncate_epoch_filter's comparison once, to the collapsed
+    rows, instead of joining the epoch back onto every event.
+
+    Plan shape: one shuffle on the key. ``max_by`` skips rows whose
+    ordering is NULL, which is how truncate events stay out of ``__op``
+    and the values."""
+    op = sql_ident(cfg.op_column)
+    keys = ", ".join(sql_ident(k) for k in cfg.key_columns)
+    live_ord = f"IF({op} <> 't', __ord, NULL)"
+    aggs = [
+        f"max_by({op}, {live_ord}) AS __op",
+        *[
+            f"max_by({sql_ident(v)}, {live_ord}) AS {sql_ident(v)}"
+            for v in cfg.value_columns
+        ],
+        f"max({live_ord}) AS __ord",
+        f"max(IF({op} = 't', __ord, NULL)) AS __tk",
+    ]
+    changelog = changelog_sql(cfg, {"__ord": order})
+    return f"SELECT {keys}, {', '.join(aggs)} FROM ({changelog}) GROUP BY {keys}"
+
+
 def envelope_changelog(
     parsed: DataFrame,
     cfg: ChangeTableConfig,
@@ -153,54 +269,11 @@ def envelope_changelog(
     rows from one envelope via a conditional explode.
 
     ``passthrough_cols`` are copied through unchanged (default:
-    ``cfg.order_columns``) — order coordinates, raw message, etc.
-    """
-    passthrough = tuple(passthrough_cols or cfg.order_columns)
-    cls = classify_op(F.col("before"), F.col("after"))
-    code = (
-        F.when(cls == "insert", F.lit("c"))
-        .when(cls == "update", F.lit("u"))
-        .when(cls == "delete", F.lit("d"))
-        .when(cls == "truncate", F.lit("t"))
-        .otherwise(F.lit("?"))
-    )
-    key_changed = F.lit(False)
-    for k in cfg.key_columns:
-        key_changed = key_changed | (
-            F.col(f"before.{k}").isNotNull()
-            & F.col(f"after.{k}").isNotNull()
-            & (F.col(f"before.{k}") != F.col(f"after.{k}"))
-        )
-
-    def event(op_col, key_src):
-        # values always come from `after`; a 'd' row's values are never
-        # read by the collapse (keeps the struct type uniform across the
-        # array branches)
-        return F.struct(
-            op_col.alias("__op"),
-            *[F.col(f"{key_src}.{k}").alias(k) for k in cfg.key_columns],
-            *[F.col(f"after.{v}").alias(v) for v in cfg.value_columns],
-        )
-
-    events = F.when(
-        (code == F.lit("u")) & key_changed,
-        F.array(event(F.lit("d"), "before"), event(F.lit("c"), "after")),
-    ).otherwise(F.array(event(code, "after")))
-    # for deletes/truncates `after` is null → keys fall back to `before`
-    fallback_keys = [
-        F.coalesce(F.col(f"__e.{k}"), F.col(f"before.{k}")).alias(k)
-        for k in cfg.key_columns
-    ]
-    return parsed.select(
-        *[F.col(c) for c in passthrough],
-        F.explode(events).alias("__e"),
-        F.col("before"),
-    ).select(
-        *passthrough,
-        F.col("__e.__op").alias(cfg.op_column),
-        *fallback_keys,
-        *[F.col(f"__e.{v}").alias(v) for v in cfg.value_columns],
-    )
+    ``cfg.order_columns``) — order coordinates, raw message, etc. The plan
+    is one ``spark.sql`` statement from changelog_sql."""
+    passthrough = passthrough_cols or cfg.order_columns
+    text = changelog_sql(cfg, {c: sql_ident(c) for c in passthrough})
+    return parsed.sparkSession.sql(text, parsed=parsed)
 
 
 def snapshot_from_envelopes(parsed: DataFrame, cfg: ChangeTableConfig) -> DataFrame:

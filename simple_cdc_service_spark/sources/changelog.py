@@ -22,12 +22,14 @@ declared schema.
 
 from __future__ import annotations
 
+import functools
 import json
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cdc import sql_str
 from ..schemas import INVOICE_ROW, kafka_message_schema
 
 # ---------------------------------------------------------------------------
@@ -193,49 +195,63 @@ def envelopes_df(spark: SparkSession, messages: list[str]) -> DataFrame:
     return spark.createDataFrame(rows, "offset long, timestamp long, value string")
 
 
+def _decoded(row_schema) -> str:
+    """FROM-clause text shared by parse_envelopes and corrupt_records:
+    the non-tombstone messages of the ``{kafka}`` frame (tombstone skip,
+    R2) with their envelope decoded as ``msg`` by one ``from_json`` over
+    the declared schema."""
+    schema = sql_str(kafka_message_schema(row_schema).json())
+    return (
+        "(SELECT `offset`, `timestamp`, CAST(value AS STRING) AS raw, "
+        f"from_json(CAST(value AS STRING), {schema}) AS msg "
+        "FROM {kafka} WHERE value IS NOT NULL)"
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _parse_sql(row_schema) -> str:
+    payload = [
+        "before", "after", "op", "ts_ms",
+        # routes a multi-table stream (start_multi_table_merge)
+        "source.table AS source_table",
+        # Binlog coordinates: the cross-partition total order of the
+        # streaming merges. NULL for sources without them.
+        "source.file AS source_file",
+        "source.pos AS source_pos",
+        "source.row AS source_row",
+    ]
+    cols = ", ".join(f"msg.payload.{c}" for c in payload)
+    # Malformed JSON yields a NULL struct from from_json. Without the
+    # payload guard such a record has before=after=NULL and the null-ness
+    # classifier reads it as a TRUNCATE — one corrupt message would wipe
+    # the replica. Corrupt records are dropped here; route them to a
+    # dead-letter sink with ``corrupt_records`` for auditing.
+    return (
+        f"SELECT `offset`, `timestamp`, raw, {cols} "
+        f"FROM {_decoded(row_schema)} WHERE msg.payload IS NOT NULL"
+    )
+
+
 def parse_envelopes(kafka_df: DataFrame, row_schema=INVOICE_ROW) -> DataFrame:
-    """Decode Kafka messages into typed change events.
+    """Decode Kafka messages into typed change events — the one envelope
+    parser of the batch operators and every streaming sink.
 
     Reference: bytes → utf-8 → json.loads per message (main.py:43). Here:
     one ``from_json`` over the declared envelope schema — JVM-side,
     whole-stage-codegen friendly, no Python in the loop. Tombstones (null
-    value) are dropped exactly as the consumer does (main.py:37-38).
+    value) are dropped exactly as the consumer does (main.py:37-38), and
+    so are corrupt (unparseable) messages. The plan is one ``spark.sql``
+    statement whose text is built once per row schema; streaming frames
+    parse the same way.
     """
-    parsed = (
-        kafka_df.filter(F.col("value").isNotNull())  # tombstone skip (R2)
-        .withColumn(
-            "msg", F.from_json(F.col("value").cast("string"), kafka_message_schema(row_schema))
-        )
-        # Malformed JSON yields a NULL struct from from_json. Without this
-        # guard such a record has before=after=NULL and the null-ness
-        # classifier reads it as a TRUNCATE — one corrupt message would
-        # wipe the replica. Corrupt records are dropped here; route them to
-        # a dead-letter sink with ``corrupt_records`` for auditing.
-        .filter(F.col("msg.payload").isNotNull())
-        .select(
-            "offset",
-            "timestamp",
-            F.col("value").cast("string").alias("raw"),
-            F.col("msg.payload.before").alias("before"),
-            F.col("msg.payload.after").alias("after"),
-            F.col("msg.payload.op").alias("op"),
-            F.col("msg.payload.ts_ms").alias("ts_ms"),
-            F.col("msg.payload.source.file").alias("source_file"),
-            F.col("msg.payload.source.pos").alias("source_pos"),
-            F.col("msg.payload.source.row").alias("source_row"),
-        )
-    )
-    return parsed
+    return kafka_df.sparkSession.sql(_parse_sql(row_schema), kafka=kafka_df)
 
 
 def corrupt_records(kafka_df: DataFrame, row_schema=INVOICE_ROW) -> DataFrame:
     """Dead-letter view: non-tombstone messages whose envelope failed to
     parse (the complement of parse_envelopes' corrupt guard)."""
-    return (
-        kafka_df.filter(F.col("value").isNotNull())
-        .withColumn(
-            "msg", F.from_json(F.col("value").cast("string"), kafka_message_schema(row_schema))
-        )
-        .filter(F.col("msg.payload").isNull())
-        .select("offset", "timestamp", F.col("value").cast("string").alias("raw"))
+    return kafka_df.sparkSession.sql(
+        f"SELECT `offset`, `timestamp`, raw FROM {_decoded(row_schema)} "
+        "WHERE msg.payload IS NULL",
+        kafka=kafka_df,
     )

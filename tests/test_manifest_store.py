@@ -104,17 +104,19 @@ class TestManifestMergeCorrectness:
         import glob
 
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_manifest_batch,
-            _parse,
         )
 
         state = str(tmp_path / "state")
         msgs, expected = generate_envelopes(
             n=120, seed=7, truncate_every=50, key_space=40
         )
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
         _merge_manifest_batch(parsed, INVOICE, state, 0, 200_000)
         snap = {
             f: os.path.getmtime(f)
@@ -151,10 +153,12 @@ class TestManifestPruning:
         the merge must read <15% of files and carry the rest BY
         REFERENCE into the new manifest."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_manifest_batch,
-            _parse,
             _read_manifest,
         )
 
@@ -172,7 +176,7 @@ class TestManifestPruning:
             )
             for k in range(100)
         ]
-        parsed = _parse(envelopes_df(spark, hot), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, hot), INVOICE_ROW)
         _merge_manifest_batch(parsed, INVOICE, state, 1, 5_000)
         m1 = _read_manifest(state, 1)
         assert m1["files_total"] == len(m0["files"])
@@ -194,10 +198,12 @@ class TestManifestPruning:
         """Keys spanning the whole range touch every file — graceful
         degradation to the versioned rewrite, still exact."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_manifest_batch,
-            _parse,
             _read_manifest,
         )
 
@@ -215,7 +221,7 @@ class TestManifestPruning:
             )
             for k in range(400)
         ]
-        parsed = _parse(envelopes_df(spark, uni), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, uni), INVOICE_ROW)
         _merge_manifest_batch(parsed, INVOICE, state, 1, 5_000)
         m1 = _read_manifest(state, 1)
         assert m1["files_touched"] / m1["files_total"] > 0.9
@@ -223,10 +229,12 @@ class TestManifestPruning:
 
     def test_deletes_erase_and_vacuum_reclaims(self, spark, tmp_path):
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_manifest_batch,
-            _parse,
         )
 
         state = str(tmp_path / "state")
@@ -239,7 +247,7 @@ class TestManifestPruning:
             )
             for k in range(500)
         ]
-        parsed = _parse(envelopes_df(spark, dels), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, dels), INVOICE_ROW)
         _merge_manifest_batch(parsed, INVOICE, state, 1, 1_000)
         rep = read_replica_manifest(spark, state)
         assert rep.count() == 19_500
@@ -301,11 +309,13 @@ class TestAdviceR10Fixes:
 
         from simple_cdc_service_spark.config import ChangeTableConfig
         from simple_cdc_service_spark.schemas import row_schema
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _latest_manifest,
             _merge_manifest_batch,
-            _parse,
         )
 
         state = str(tmp_path / "state")
@@ -327,7 +337,7 @@ class TestAdviceR10Fixes:
                 _envelope("c", None, {"order_id": 10_000, "invoice_number": 1}, 1, 1)
             )
         ]
-        parsed = _parse(envelopes_df(spark, batch), narrow_row)
+        parsed = parse_envelopes(envelopes_df(spark, batch), narrow_row)
         _merge_manifest_batch(parsed, cfg, state, 0, 200_000)
         ddl = _latest_manifest(state)["schema_ddl"]
         assert "bigint" in ddl and "invoice_number` int" not in ddl, ddl
@@ -636,3 +646,81 @@ class TestMultiTableManifest:
                 read_changelog_stream(spark, src), tables,
                 str(tmp_path / "s2"), str(tmp_path / "c2"), store="bogus",
             )
+
+
+class TestOnePassCollapse:
+    """A micro-batch is parsed and collapsed ONCE (one planned statement,
+    materialized), and what the collapse materializes is freed when the
+    batch ends."""
+
+    @staticmethod
+    def _parsed(spark, msgs):
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
+
+        return parse_envelopes(envelopes_df(spark, msgs))
+
+    def test_hot_batch_runs_at_most_seven_jobs(self, spark, tmp_path):
+        """One non-truncate batch on a bootstrapped store: the collapse
+        (2 jobs), its probe collect (1) and the pruned rewrite. Before the
+        one-pass collapse the same batch ran 16 jobs, because every read
+        of the batch re-ran the derivation and its truncate broadcast."""
+        from simple_cdc_service_spark.streaming.pipeline import _merge_manifest_batch
+
+        state = str(tmp_path / "state")
+        bootstrap_manifest_store(
+            spark.range(20_000).selectExpr("id AS order_id", "id * 7 AS invoice_number"),
+            INVOICE, state, target_rows_per_file=1_000,
+        )
+        msgs = [
+            json.dumps(_envelope(
+                "u",
+                {"order_id": 5_000 + k % 150, "invoice_number": 0},
+                {"order_id": 5_000 + k % 150, "invoice_number": k},
+                100 + k, 100 + k,
+            ))
+            for k in range(400)
+        ]
+        parsed = self._parsed(spark, msgs)
+        sc = spark.sparkContext
+        sc.setJobGroup("one-pass-collapse", "one hot micro-batch")
+        try:
+            _merge_manifest_batch(parsed, INVOICE, state, 0, 1_000)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("one-pass-collapse")
+        assert 0 < len(jobs) <= 7, sorted(jobs)
+        got = {
+            r.order_id: r.invoice_number
+            for r in read_replica_manifest(spark, state)
+            .filter("order_id BETWEEN 5000 AND 5149").collect()
+        }
+        # key 5000+j last written by the largest k < 400 with k % 150 == j
+        assert got == {5_000 + j: max(range(j, 400, 150)) for j in range(150)}
+
+    def test_fifty_batches_hold_no_blocks(self, spark, tmp_path):
+        """50 small batches, truncates among them: the RDD blocks held by
+        the block manager do not grow, so materialized batches do not
+        leak."""
+        from simple_cdc_service_spark.streaming.pipeline import _merge_manifest_batch
+
+        def rdd_blocks():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return sum(i.numCachedPartitions() for i in infos)
+
+        msgs, expected = generate_envelopes(
+            n=500, seed=5, truncate_every=37, key_space=60
+        )
+        state = str(tmp_path / "state")
+        before = rdd_blocks()
+        for b in range(50):
+            chunk = msgs[b * 10:(b + 1) * 10]
+            _merge_manifest_batch(self._parsed(spark, chunk), INVOICE, state, b, 1_000)
+            assert rdd_blocks() <= before, f"blocks leaked after batch {b}"
+        got = {
+            r.order_id: r.invoice_number
+            for r in read_replica_manifest(spark, state).collect()
+        }
+        assert got == expected

@@ -2,7 +2,7 @@
 collapse must equal a sequential dict replay — the generalization of the
 reference's oracle-equality tests beyond the seeded generator."""
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from simple_cdc_service_spark.config import ChangeTableConfig
 from simple_cdc_service_spark.operators import cdc
@@ -278,3 +278,190 @@ def test_interval_distinct_hll_within_bound(spark, pts, ivs, bucket):
             assert j not in got
         else:
             assert abs(got[j] - exact) <= max(1.0, 0.05 * exact), (j, got[j], exact)
+
+
+# ---------------------------------------------------------------------------
+# Streaming replica sinks: for ANY envelope stream — c/u/d/t, PK-changing
+# updates, tombstones, corrupt messages, with or without binlog
+# coordinates — split into 1-3 micro-batches, the manifest merge, the
+# versioned merge with its incremental aggregate, and the multi-table
+# manifest route must all land on a sequential replay. With coordinates,
+# each batch's lines arrive shuffled (Kafka offset order ≠ source order),
+# so the merges must order by the binlog position.
+# ---------------------------------------------------------------------------
+
+stream_event = st.tuples(
+    st.sampled_from(["c", "u", "d", "t", "pk", "tomb", "bad"]),
+    st.integers(min_value=0, max_value=7),   # key (before-key for pk)
+    st.integers(min_value=0, max_value=7),   # after-key of a pk update
+    st.integers(min_value=0, max_value=99),  # value
+)
+stream_spec = st.tuples(
+    st.lists(stream_event, min_size=1, max_size=24),
+    st.lists(st.integers(min_value=1, max_value=23), max_size=2),  # cuts
+    st.booleans(),  # binlog coordinates present
+    st.integers(min_value=0, max_value=2**16),  # in-batch arrival shuffle
+)
+# the manifest stores start from a bootstrapped snapshot
+BOOT = {k: 1000 + k for k in range(0, 8, 2)}
+
+
+def _message(kind, k, k2, v, pos, coords):
+    import json
+    import random
+
+    from simple_cdc_service_spark.sources.changelog import _envelope
+
+    if kind == "tomb":
+        return None
+    if kind == "bad":
+        return random.Random(pos).choice(["NOT JSON {", "123", '{"payload": 7}'])
+    def row(key):
+        return {"order_id": key, "invoice_number": v}
+
+    op, before, after = {
+        "c": ("c", None, row(k)),
+        "u": ("u", row(k), row(k)),
+        "d": ("d", row(k), None),
+        "t": ("t", None, None),
+        "pk": ("u", row(k), row(k2)),
+    }[kind]
+    env = _envelope(op, before, after, pos, pos)
+    if not coords:
+        env["payload"]["source"] = {"table": "invoice"}
+    return json.dumps(env)
+
+
+def stream_replay(events, state):
+    state = dict(state)
+    for kind, k, k2, v in events:
+        if kind == "t":
+            state.clear()
+        elif kind == "d":
+            state.pop(k, None)
+        elif kind == "pk":
+            state.pop(k, None)
+            state[k2] = v
+        elif kind in ("c", "u"):
+            state[k] = v
+    return state
+
+
+def _write_stream(src, spec):
+    """One file per micro-batch, modification times in batch order (the
+    sinks read with maxFilesPerTrigger=1)."""
+    import json
+    import os
+    import random
+
+    events, cuts, coords, shuffle_seed = spec
+    bounds = sorted({0, len(events), *[c for c in cuts if c < len(events)]})
+    os.makedirs(src)
+    offset = 0
+    for b, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        lines = [
+            _message(*events[i], pos=100 + 10 * i, coords=coords)
+            for i in range(lo, hi)
+        ]
+        if coords:
+            random.Random(shuffle_seed + b).shuffle(lines)
+        path = os.path.join(src, f"b{b}.json")
+        with open(path, "w") as f:
+            for m in lines:
+                f.write(json.dumps({"offset": offset, "timestamp": offset, "value": m}) + "\n")
+                offset += 1
+        os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+    return len(bounds) - 1
+
+
+def _batches_stream(spark, src):
+    from simple_cdc_service_spark.streaming.pipeline import KAFKA_LIKE_SCHEMA
+
+    return (
+        spark.readStream.schema(KAFKA_LIKE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(src)
+    )
+
+
+def _replica(df):
+    return {r.order_id: r.invoice_number for r in df.collect()}
+
+
+C = lambda k, v: ("c", k, 0, v)  # noqa: E731
+T = ("t", 0, 0, 0)
+
+
+@given(stream_spec)
+@settings(max_examples=6, deadline=None)
+# a truncate mid-batch, between two batches of upserts
+@example(([C(1, 1), C(3, 3), ("u", 1, 0, 5), T, C(5, 5), ("d", 5, 0, 0), C(7, 7),
+           ("pk", 7, 1, 8)], [2], True, 3))
+# a batch that is only a truncate
+@example(([C(1, 1), ("tomb", 0, 0, 0), C(3, 3), T, C(5, 5)], [3, 4], False, 0))
+# truncate then inserts in one batch on the bootstrapped manifest stores:
+# the truncate events' NULL-key group must stay out of the pruning keys
+@example(([T, C(3, 30), C(5, 50), ("bad", 0, 0, 0)], [], True, 1))
+def test_replica_sinks_equal_sequential_replay(spark, spec):
+    import os
+    import tempfile
+
+    from simple_cdc_service_spark.config import INVOICE
+    from simple_cdc_service_spark.schemas import INVOICE_ROW
+    from simple_cdc_service_spark.streaming import (
+        bootstrap_manifest_store,
+        read_agg,
+        read_replica,
+        read_replica_manifest,
+        start_multi_table_merge,
+        start_replica_merge,
+        start_replica_merge_manifest,
+    )
+
+    boot = spark.createDataFrame(
+        sorted(BOOT.items()), "order_id long, invoice_number long"
+    )
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "src")
+        n_batches = _write_stream(src, spec)
+
+        def ckpt(name):
+            return os.path.join(d, f"ck_{name}")
+
+        manifest = os.path.join(d, "manifest")
+        bootstrap_manifest_store(boot, INVOICE, manifest, target_rows_per_file=2)
+        start_replica_merge_manifest(
+            _batches_stream(spark, src), INVOICE, manifest, ckpt("manifest"),
+            target_rows_per_file=2,
+        ).awaitTermination()
+
+        versioned = os.path.join(d, "versioned")
+        start_replica_merge(
+            _batches_stream(spark, src), INVOICE, versioned, ckpt("versioned"),
+            agg_col="invoice_number",
+        ).awaitTermination()
+
+        multi = os.path.join(d, "multi")
+        bootstrap_manifest_store(
+            boot, INVOICE, os.path.join(multi, "invoice"), target_rows_per_file=2
+        )
+        start_multi_table_merge(
+            _batches_stream(spark, src), {"invoice": (INVOICE, INVOICE_ROW)},
+            multi, ckpt("multi"), store="manifest", target_rows_per_file=2,
+        ).awaitTermination()
+
+        # one micro-batch per file, or the split was not exercised
+        commits = os.listdir(os.path.join(d, "ck_manifest", "commits"))
+        assert sum(f.isdigit() for f in commits) == n_batches
+        events = spec[0]
+        want_boot = stream_replay(events, BOOT)
+        want = stream_replay(events, {})
+        assert _replica(read_replica_manifest(spark, manifest)) == want_boot
+        assert _replica(
+            read_replica_manifest(spark, os.path.join(multi, "invoice"))
+        ) == want_boot
+        rep = read_replica(spark, versioned)
+        assert (_replica(rep) if rep is not None else {}) == want
+        agg = read_agg(spark, versioned)
+        got_agg = (agg.sum_value, agg.n_keys) if agg else (0.0, 0)
+        assert got_agg == (float(sum(want.values())), len(want))

@@ -99,16 +99,18 @@ class TestCrashRecoveryReplay:
         version short-circuits instead."""
         import glob
 
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_parsed_batch,
-            _parse,
         )
         from simple_cdc_service_spark.schemas import INVOICE_ROW
 
         state = str(tmp_path / "state")
         msgs, expected = generate_envelopes(n=120, seed=7, truncate_every=50, key_space=40)
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
 
         _merge_parsed_batch(parsed, INVOICE, state, batch_id=0)
         files_before = {
@@ -166,22 +168,6 @@ class TestPKChangingUpdate:
         got = {r.order_id: r.invoice_number
                for r in read_replica(spark, str(tmp_path / "state")).collect()}
         assert got == {2: 11, 5: 50}  # key 1 gone, key 2 present
-
-    def test_bucketed_merge(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            read_replica_bucketed,
-            start_replica_merge_bucketed,
-        )
-
-        src = str(tmp_path / "src")
-        _write_batch(src, "a.json", self._msgs(), 0)
-        start_replica_merge_bucketed(
-            read_changelog_stream(spark, src), INVOICE,
-            str(tmp_path / "state"), str(tmp_path / "ckpt"), n_buckets=4,
-        ).awaitTermination()
-        got = {r.order_id: r.invoice_number
-               for r in read_replica_bucketed(spark, str(tmp_path / "state")).collect()}
-        assert got == {2: 11, 5: 50}
 
     def test_cross_batch(self, spark, tmp_path):
         """Old key deleted even when the PK-changing update arrives in a
@@ -326,15 +312,17 @@ class TestIncrementalAggMaintenance:
         """Re-delivering a fully committed batch must change neither the
         state nor the aggregate (commit marker short-circuit)."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_parsed_batch,
-            _parse,
             read_agg,
         )
 
         msgs, _ = generate_envelopes(n=80, seed=2, truncate_every=None, key_space=30)
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
         state = str(tmp_path / "state")
         _merge_parsed_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
         first = read_agg(spark, state)
@@ -349,10 +337,13 @@ class TestIncrementalAggMaintenance:
         comes from an explicit state-join marker, never from the agg
         value's nullness."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
-        from simple_cdc_service_spark.sources.changelog import _envelope, envelopes_df
+        from simple_cdc_service_spark.sources.changelog import (
+            _envelope,
+            envelopes_df,
+            parse_envelopes,
+        )
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_parsed_batch,
-            _parse,
             read_agg,
         )
 
@@ -360,7 +351,7 @@ class TestIncrementalAggMaintenance:
 
         def merge(batch_id, events):
             msgs = [json.dumps(e) for e in events]
-            parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+            parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
             _merge_parsed_batch(
                 parsed, INVOICE, state, batch_id, agg_col="invoice_number"
             )
@@ -581,136 +572,6 @@ class TestStatefulReplica:
                 by_key[r.order_id] = r
         assert by_key[1].invoice_number == 11 and not by_key[1].is_deleted
         assert by_key[2].is_deleted
-
-
-class TestBucketedReplicaMerge:
-    def test_matches_replay_and_touches_only_needed_buckets(self, spark, tmp_path):
-        from simple_cdc_service_spark.sources.changelog import _envelope
-        from simple_cdc_service_spark.streaming.pipeline import (
-            read_replica_bucketed,
-            start_replica_merge_bucketed,
-        )
-
-        src = str(tmp_path / "src")
-        state = str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-
-        msgs, expected = generate_envelopes(n=500, seed=13, truncate_every=200, key_space=150)
-        _write_batch(src, "a.json", msgs[:300], 0)
-        start_replica_merge_bucketed(
-            read_changelog_stream(spark, src), INVOICE, state, ckpt, n_buckets=8
-        ).awaitTermination()
-
-        # snapshot per-bucket file listing + sizes
-        import glob
-
-        def bucket_files():
-            out = {}
-            for b in glob.glob(os.path.join(state, "bucket=*")):
-                files = sorted(
-                    (os.path.basename(f), os.path.getsize(f), os.path.getmtime(f))
-                    for f in glob.glob(os.path.join(b, "*.parquet"))
-                )
-                out[os.path.basename(b)] = files
-            return out
-
-        before = bucket_files()
-
-        # single-key update -> exactly one bucket rewritten
-        k = next(iter(expected))
-        up = [
-            json.dumps(
-                _envelope(
-                    "u",
-                    {"order_id": k, "invoice_number": expected[k]},
-                    {"order_id": k, "invoice_number": expected[k] + 1000},
-                    9999,
-                    9999,
-                )
-            )
-        ]
-        _write_batch(src, "b.json", up, 300)
-        start_replica_merge_bucketed(
-            read_changelog_stream(spark, src), INVOICE, state, ckpt, n_buckets=8
-        ).awaitTermination()
-        after = bucket_files()
-        changed = [b for b in before if before[b] != after.get(b)]
-        assert len(changed) == 1, f"expected 1 rewritten bucket, got {changed}"
-
-        # full workload: feed the rest, compare with sequential replay
-        expected[k] = expected[k] + 1000  # our manual update, offset beyond the rest
-        _write_batch(src, "c.json", msgs[300:], 301)
-        start_replica_merge_bucketed(
-            read_changelog_stream(spark, src), INVOICE, state, ckpt, n_buckets=8
-        ).awaitTermination()
-        # replay msgs[300:] on top of expected-state-after-our-update
-        import json as _json
-
-        st = dict(expected)
-        for m in msgs[300:]:
-            p = _json.loads(m)["payload"]
-            if p["op"] == "t":
-                st.clear()
-            elif p["op"] == "d":
-                st.pop(p["before"]["order_id"], None)
-            else:
-                st[p["after"]["order_id"]] = p["after"]["invoice_number"]
-        got = {
-            r.order_id: r.invoice_number
-            for r in read_replica_bucketed(spark, state).collect()
-        }
-        assert got == st
-
-    def test_truncate_after_merge_batches_leaves_no_stale_buckets(
-        self, spark, tmp_path
-    ):
-        """Truncate arriving AFTER ordinary merge batches must wipe every
-        bucket, not only the buckets the post-truncate upserts touch. The
-        merge path's dynamic partition-overwrite mode must stay per-write:
-        leaked into the session conf it turns the truncate branch's full
-        overwrite into a partial one, stranding pre-truncate rows in
-        untouched buckets (observed: 16 stale rows of 20)."""
-        from simple_cdc_service_spark.sources.changelog import _envelope
-        from simple_cdc_service_spark.streaming.pipeline import (
-            read_replica_bucketed,
-            start_replica_merge_bucketed,
-        )
-
-        src = str(tmp_path / "src")
-        state = str(tmp_path / "state")
-        ckpt = str(tmp_path / "ckpt")
-
-        def run():
-            start_replica_merge_bucketed(
-                read_changelog_stream(spark, src), INVOICE, state, ckpt,
-                n_buckets=8,
-            ).awaitTermination()
-
-        # batch 1: 20 inserts spread across all 8 buckets (merge path)
-        b1 = [
-            json.dumps(_envelope("c", None, {"order_id": k, "invoice_number": k * 10}, k, k))
-            for k in range(1, 21)
-        ]
-        _write_batch(src, "b1.json", b1, 0)
-        run()
-        # batch 2: one update — the DYNAMIC overwrite merge path
-        b2 = [json.dumps(_envelope(
-            "u", {"order_id": 1, "invoice_number": 10},
-            {"order_id": 1, "invoice_number": 11}, 30, 30))]
-        _write_batch(src, "b2.json", b2, 20)
-        run()
-        # batch 3: truncate + a single insert touching ONE bucket
-        b3 = [
-            json.dumps(_envelope("t", None, None, 40, 40)),
-            json.dumps(_envelope("c", None, {"order_id": 9, "invoice_number": 90}, 41, 41)),
-        ]
-        _write_batch(src, "b3.json", b3, 21)
-        run()
-        got = {
-            r.order_id: r.invoice_number
-            for r in read_replica_bucketed(spark, state).collect()
-        }
-        assert got == {9: 90}
 
 
 class TestMultiTableRouting:

@@ -149,13 +149,12 @@ def test_scd2_schema_evolution_mid_stream(spark, tmp_path):
 
     from simple_cdc_service_spark.config import ChangeTableConfig
     from simple_cdc_service_spark.schemas import INVOICE_ROW, row_schema
-    from simple_cdc_service_spark.sources.changelog import envelopes_df
-    from simple_cdc_service_spark.streaming.pipeline import _merge_scd2_batch, _parse
+    from simple_cdc_service_spark.streaming.pipeline import _merge_scd2_batch
 
     state = str(tmp_path / "state")
     cfg_v1 = INVOICE
     b0 = [json.dumps(_envelope("c", None, {"order_id": 1, "invoice_number": 10}, 1, 1))]
-    _merge_scd2_batch(_parse(envelopes_df(spark, b0), INVOICE_ROW), cfg_v1, state, 0)
+    _merge_scd2_batch(parse_envelopes(envelopes_df(spark, b0), INVOICE_ROW), cfg_v1, state, 0)
 
     evolved_row = row_schema(
         {
@@ -180,7 +179,7 @@ def test_scd2_schema_evolution_mid_stream(spark, tmp_path):
             )
         )
     ]
-    _merge_scd2_batch(_parse(envelopes_df(spark, b1), evolved_row), cfg_v2, state, 1)
+    _merge_scd2_batch(parse_envelopes(envelopes_df(spark, b1), evolved_row), cfg_v2, state, 1)
 
     hist = read_scd2(spark, state).toPandas()
     old = hist[~hist["is_current"]].iloc[0]

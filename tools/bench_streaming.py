@@ -290,14 +290,14 @@ def bench_replica_store_scale(
         transactional format). Expected: FLAT batch walls (store
         dominated), merge plan = broadcast anti join (the batch's key
         set broadcasts; the store NEVER shuffles).
-      * bucketed merge, UNIFORM keys: hash-bucketed state can only
-        bound I/O to touched buckets, and ~8.7k distinct uniform keys
-        per batch touch ~all 1024 buckets — an honest negative recorded
-        as touched_fraction ≈ 1 (hash bucketing destroys key locality;
-        this is why Delta/Iceberg use file-level key stats instead).
-      * bucketed merge, HOT-KEY feed (100 distinct keys): the realistic
-        frequent-updaters pattern — ~95/1024 buckets touched, per-batch
-        rewrite ~9% of the store.
+      * manifest store (start_replica_merge_manifest), HOT-KEY feed
+        (100 distinct keys): file-level key stats prune each batch to
+        the few files its key range lives in.
+      * manifest store, UNIFORM keys over the whole store: every file is
+        touched, so the merge degrades to the flat rewrite. (A hash-
+        bucketed store was measured here too and removed: ~11 s hot-key
+        walls against ~1.5 s for the manifest store, ~50x the flat
+        rewrite on uniform keys — BENCH_streaming_r10_store.json.)
 
     Preload protocol: a 1-event bootstrap batch consumes micro-batch id
     0, then v0's payload is REPLACED by a synthesized n_store-row
@@ -309,10 +309,6 @@ def bench_replica_store_scale(
     from simple_cdc_service_spark.streaming import (
         read_replica,
         start_replica_merge,
-    )
-    from simple_cdc_service_spark.streaming.pipeline import (
-        read_replica_bucketed,
-        start_replica_merge_bucketed,
     )
 
     spark = get_spark("bench-replica-store")
@@ -396,60 +392,7 @@ def bench_replica_store_scale(
         or "Exchange rangepartitioning" in plan,
     }
 
-    # ---- legs 2+3: bucketed merge, uniform vs hot keys ----
-    for leg, key_space in (("bucketed_uniform", n_events // 3), ("bucketed_hot", 100)):
-        if legs is not None and leg not in legs:
-            continue
-        d2 = tempfile.mkdtemp()
-        src2, state2, ckpt2 = f"{d2}/src", f"{d2}/state", f"{d2}/ckpt"
-        os.makedirs(src2)
-        n_buckets = 1024
-        t0 = time.perf_counter()
-        spark.range(n_store).selectExpr(
-            "id AS order_id",
-            "id * 7 AS invoice_number",
-            f"pmod(hash(id), {n_buckets}) AS bucket",
-        ).write.partitionBy("bucket").mode("overwrite").parquet(state2)
-        preload_sec = round(time.perf_counter() - t0, 2)
-        msgs2, _ = generate_envelopes(
-            n=n_events, seed=43, truncate_every=None, key_space=key_space
-        )
-        walls2 = feed_chunks(
-            src2,
-            msgs2,
-            0,
-            lambda: start_replica_merge_bucketed(
-                read_changelog_stream(spark, src2), INVOICE, state2, ckpt2,
-                n_buckets=n_buckets,
-            ).awaitTermination(),
-        )
-        feed_keys = sorted(
-            {
-                m["payload"][side]["order_id"]
-                for m in (json.loads(s) if isinstance(s, str) else s for s in msgs2)
-                for side in ("after", "before")
-                if m["payload"].get(side)
-            }
-        )
-        touched_buckets = (
-            spark.createDataFrame([(int(k),) for k in feed_keys], "order_id long")
-            .selectExpr(f"pmod(hash(order_id), {n_buckets}) AS b")
-            .distinct()
-            .count()
-        )
-        final2 = read_replica_bucketed(spark, state2)
-        out[leg] = {
-            "n_buckets": n_buckets,
-            "preload_sec": preload_sec,
-            "distinct_feed_keys": len(feed_keys),
-            # the bounded-I/O claim's operative number: fraction of the
-            # store's buckets any batch can rewrite
-            "touched_bucket_fraction": round(touched_buckets / n_buckets, 3),
-            "batch_sec": walls2,
-            "events_per_sec": round(n_events / sum(walls2), 1),
-            "final_rows": final2.count(),
-        }
-    # ---- legs 4+5: MANIFEST store (file-level key stats, VERDICT r9 #3)
+    # ---- legs 2+3: MANIFEST store (file-level key stats, VERDICT r9 #3)
     # — hot keys should touch few files; uniform keys degrade gracefully
     # to ~the flat rewrite. Preload: bootstrap at the RESERVED version -1
     # (ADVICE r10 fix) — no sacrificial boot batch; the stream's first
@@ -796,7 +739,11 @@ def bench_manifest_longfeed(
     import tempfile as _tf
 
     from simple_cdc_service_spark.schemas import INVOICE_ROW
-    from simple_cdc_service_spark.sources.changelog import _envelope, envelopes_df
+    from simple_cdc_service_spark.sources.changelog import (
+        _envelope,
+        envelopes_df,
+        parse_envelopes,
+    )
     from simple_cdc_service_spark.streaming import (
         bootstrap_manifest_store,
         compact_manifest_store,
@@ -806,7 +753,6 @@ def bench_manifest_longfeed(
     from simple_cdc_service_spark.streaming.pipeline import (
         _latest_manifest,
         _merge_manifest_batch,
-        _parse,
     )
 
     spark = get_spark("bench-manifest-longfeed")
@@ -839,7 +785,7 @@ def bench_manifest_longfeed(
             )
             expected[k] = v
             off += 1
-        parsed = _parse(envelopes_df(spark, msgs), INVOICE_ROW)
+        parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
         tb = time.perf_counter()
         _merge_manifest_batch(parsed, INVOICE, state, b, 20_000)
         walls.append(round(time.perf_counter() - tb, 3))
