@@ -2475,7 +2475,7 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .config import ChangeTableConfig
     from .sources.changelog import parse_envelopes
-    from .streaming.pipeline import _merge_parsed_batch, read_agg
+    from .streaming.pipeline import _merge_manifest_batch, read_agg
 
     ch = derive_changelog(_t(spark, sf_dir, "events"))
     k = F.col("user_id").cast("string")
@@ -2508,10 +2508,10 @@ def cdc_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = kafka_like.agg(F.expr("percentile(offset, 0.5)")).collect()[0][0] or 0
     parsed = parse_envelopes(kafka_like)
     state = tempfile.mkdtemp(prefix="cdc_inc_agg_")
-    _merge_parsed_batch(parsed.filter(F.col("offset") <= mid), cfg, state, 0,
-                        agg_col="invoice_number")
-    _merge_parsed_batch(parsed.filter(F.col("offset") > mid), cfg, state, 1,
-                        agg_col="invoice_number")
+    _merge_manifest_batch(parsed.filter(F.col("offset") <= mid), cfg, state, 0,
+                          agg_col="invoice_number")
+    _merge_manifest_batch(parsed.filter(F.col("offset") > mid), cfg, state, 1,
+                          agg_col="invoice_number")
     agg = read_agg(spark, state)
     # empty changelog: no batch ever wrote an agg version -> the MV is the
     # empty-replica aggregate, matching the oracle's coalesce(sum, 0)/count

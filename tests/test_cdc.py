@@ -166,8 +166,8 @@ class TestReplay:
 
         from simple_cdc_service_spark.streaming import (
             read_changelog_stream,
-            read_replica,
-            start_replica_merge,
+            read_replica_manifest,
+            start_replica_merge_manifest,
         )
 
         messages, expected = generate_envelopes(
@@ -188,14 +188,14 @@ class TestReplay:
 
         state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
         write("a.json", messages[:250], 0)
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, state, ckpt
         ).awaitTermination()
         write("b.json", messages[250:], 250)
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, state, ckpt
         ).awaitTermination()
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == expected
 
 
@@ -228,8 +228,8 @@ class TestCorruptRecords:
         from simple_cdc_service_spark.config import INVOICE as CFG_INV
         from simple_cdc_service_spark.streaming import (
             read_changelog_stream,
-            read_replica,
-            start_replica_merge,
+            read_replica_manifest,
+            start_replica_merge_manifest,
         )
         from simple_cdc_service_spark.sources.changelog import _envelope
 
@@ -241,10 +241,10 @@ class TestCorruptRecords:
             f.write(_json.dumps({"offset": 1, "timestamp": 2, "value": "garbage!!"}) + "\n")
         state = str(tmp_path / "state")
         ckpt = str(tmp_path / "ckpt")
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), CFG_INV, state, ckpt
         ).awaitTermination()
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == {5: 50}
 
 

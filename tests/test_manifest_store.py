@@ -14,9 +14,7 @@ from simple_cdc_service_spark.sources.changelog import _envelope, generate_envel
 from simple_cdc_service_spark.streaming import (
     bootstrap_manifest_store,
     read_changelog_stream,
-    read_replica,
     read_replica_manifest,
-    start_replica_merge,
     start_replica_merge_manifest,
     vacuum_manifest_store,
 )
@@ -31,25 +29,78 @@ def spark():
     return get_spark("test-manifest-store")
 
 
+def _count_jobs(spark, group, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _merge_upserts(spark, state, batch_id, rows, target_rows_per_file):
+    """Merge one batch upserting ``rows`` (order_id → invoice_number)
+    straight into the manifest store at ``state``; returns its manifest."""
+    from simple_cdc_service_spark.schemas import INVOICE_ROW
+    from simple_cdc_service_spark.sources.changelog import (
+        envelopes_df,
+        parse_envelopes,
+    )
+    from simple_cdc_service_spark.streaming.pipeline import (
+        _merge_manifest_batch,
+        _read_manifest,
+    )
+
+    msgs = [
+        json.dumps(_envelope(
+            "u",
+            {"order_id": key, "invoice_number": 0},
+            {"order_id": key, "invoice_number": value},
+            100 + k, 100 + k,
+        ))
+        for k, (key, value) in enumerate(rows.items())
+    ]
+    parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
+    _merge_manifest_batch(parsed, INVOICE, state, batch_id, target_rows_per_file)
+    return _read_manifest(state, batch_id)
+
+
+def _replica(spark, state) -> dict:
+    return {
+        r.order_id: r.invoice_number
+        for r in read_replica_manifest(spark, state).collect()
+    }
+
+
 class TestManifestMergeCorrectness:
     def test_matches_replay_and_versioned_merge(self, spark, tmp_path):
         """Two availableNow chunks through one checkpoint: the manifest
-        replica must equal BOTH the sequential replay and the versioned
-        merge's result on the identical feed (replica_exact)."""
+        replica must equal the sequential replay after EACH chunk
+        (replica_exact). The reference is the pure-Python oracle:
+        generate_envelopes(n=prefix) with the same seed returns the exact
+        state after that prefix, because its draws depend only on it."""
         msgs, expected = generate_envelopes(
             n=600, seed=3, truncate_every=250, key_space=200
         )
         src = str(tmp_path / "src")
         state = str(tmp_path / "state")
         ckpt = str(tmp_path / "ckpt")
-        vstate = str(tmp_path / "vstate")
-        vckpt = str(tmp_path / "vckpt")
 
         _write_batch(src, "part1.json", msgs[:400], 0)
         start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, state, ckpt,
             target_rows_per_file=50,
         ).awaitTermination()
+        first = {
+            r.order_id: r.invoice_number
+            for r in read_replica_manifest(spark, state).collect()
+        }
+        _, after_400 = generate_envelopes(
+            n=400, seed=3, truncate_every=250, key_space=200
+        )
+        assert first == after_400
         _write_batch(src, "part2.json", msgs[400:], 400)
         start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, state, ckpt,
@@ -60,15 +111,6 @@ class TestManifestMergeCorrectness:
             for r in read_replica_manifest(spark, state).collect()
         }
         assert got == expected
-
-        start_replica_merge(
-            read_changelog_stream(spark, src), INVOICE, vstate, vckpt
-        ).awaitTermination()
-        ref = {
-            r.order_id: r.invoice_number
-            for r in read_replica(spark, vstate).collect()
-        }
-        assert got == ref
 
     def test_truncate_drops_all_references(self, spark, tmp_path):
         src = str(tmp_path / "src")
@@ -195,8 +237,10 @@ class TestManifestPruning:
         assert got == {50_000 + k: 999_000 + k for k in range(100)}
 
     def test_uniform_batch_degrades_to_flat_rewrite(self, spark, tmp_path):
-        """Keys spanning the whole range touch every file — graceful
-        degradation to the versioned rewrite, still exact."""
+        """Keys spanning the whole range touch every file: nothing can be
+        carried by reference, so the rewrite is written flat — no range
+        sampling job, no shuffle — and runs fewer jobs than the clustered
+        rewrite of a hot batch on the same store. Still exact."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import (
             envelopes_df,
@@ -207,25 +251,88 @@ class TestManifestPruning:
             _read_manifest,
         )
 
+        want = {k: k * 7 for k in range(100_000)}
+
+        def merge(batch_id, keys):
+            want.update({key: -k for k, key in enumerate(keys)})
+            msgs = [
+                json.dumps(
+                    _envelope(
+                        "u",
+                        {"order_id": key, "invoice_number": 0},
+                        {"order_id": key, "invoice_number": -k},
+                        100 + k,
+                        100 + k,
+                    )
+                )
+                for k, key in enumerate(keys)
+            ]
+            parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
+            return _count_jobs(
+                spark, f"merge-{batch_id}",
+                lambda: _merge_manifest_batch(parsed, INVOICE, state, batch_id, 5_000),
+            )
+
         state = str(tmp_path / "state")
         self._bootstrap(spark, state)
-        uni = [
-            json.dumps(
-                _envelope(
-                    "u",
-                    {"order_id": k * 997 % 100_000, "invoice_number": 0},
-                    {"order_id": k * 997 % 100_000, "invoice_number": -k},
-                    100 + k,
-                    100 + k,
-                )
-            )
-            for k in range(400)
-        ]
-        parsed = parse_envelopes(envelopes_df(spark, uni), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 1, 5_000)
+        hot_jobs = merge(1, [50_000 + k for k in range(400)])
         m1 = _read_manifest(state, 1)
-        assert m1["files_touched"] / m1["files_total"] > 0.9
-        assert read_replica_manifest(spark, state).count() == 100_000
+        assert 0 < m1["files_touched"] < m1["files_total"]
+        flat_jobs = merge(2, [k * 997 % 100_000 for k in range(400)])
+        m2 = _read_manifest(state, 2)
+        assert m2["files_touched"] == m2["files_total"]
+        assert flat_jobs < hot_jobs, (flat_jobs, hot_jobs)
+        got = {
+            r.order_id: r.invoice_number
+            for r in read_replica_manifest(spark, state).collect()
+        }
+        assert got == want
+
+    def test_hot_batches_after_a_flat_write_prune_again(self, spark, tmp_path):
+        """No compaction: a uniform batch is written flat and leaves files
+        whose ranges overlap. The next hot batch touches them, so it is
+        range-written and re-clusters them; the hot batches after it touch
+        < 15% of the files again, and the replica equals the replay."""
+        state = str(tmp_path / "state")
+        self._bootstrap(spark, state)
+        want = {k: k * 7 for k in range(100_000)}
+
+        def merge(batch_id, keys):
+            rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
+            want.update(rows)
+            return _merge_upserts(spark, state, batch_id, rows, 5_000)
+
+        flat = merge(1, [k * 997 % 100_000 for k in range(400)])
+        assert flat["files_touched"] == flat["files_total"]
+        recluster = merge(2, [60_000 + k for k in range(100)])
+        assert recluster["files_touched"] == len(flat["files"])
+        for batch_id in (3, 4):
+            m = merge(batch_id, [60_000 + k for k in range(100)])
+            assert m["files_touched"] / m["files_total"] < 0.15, m["files_touched"]
+        assert _replica(spark, state) == want
+
+    def test_store_grown_from_empty_splits_and_clusters(self, spark, tmp_path):
+        """No bootstrap, no compaction: batches whose keys interleave with
+        every file grow the store from empty to 20x target_rows_per_file.
+        It still splits into clustered files (a flat write's files are
+        sized by the scan splits, but the next touching batch range-writes
+        them), so hot batches afterwards touch < 15% of them, and the
+        replica equals the replay."""
+        state = str(tmp_path / "state")
+        want = {}
+
+        def merge(batch_id, keys):
+            rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
+            want.update(rows)
+            return _merge_upserts(spark, state, batch_id, rows, 1_000)
+
+        for batch_id in range(10):
+            merge(batch_id, list(range(batch_id, 20_000, 10)))
+        for batch_id in (10, 11, 12):
+            m = merge(batch_id, [10_000 + k for k in range(20)])
+        assert m["files_total"] >= 15
+        assert m["files_touched"] / m["files_total"] < 0.15, m["files_touched"]
+        assert _replica(spark, state) == want
 
     def test_deletes_erase_and_vacuum_reclaims(self, spark, tmp_path):
         from simple_cdc_service_spark.schemas import INVOICE_ROW
@@ -461,6 +568,89 @@ class TestManifestCompaction:
         }
         assert got == ref
 
+    def test_compaction_reclusters_flat_rewrite(self, spark, tmp_path):
+        """A uniform batch is written flat, leaving files whose key ranges
+        overlap, so every later batch would touch them. Compaction
+        re-clusters overlapping files even below min_files: afterwards a
+        hot batch touches < 15% of the files again, and the replica still
+        equals the replay."""
+        from simple_cdc_service_spark.streaming import compact_manifest_store
+
+        state = str(tmp_path / "state")
+        want = {k: k * 7 for k in range(100_000)}
+        bootstrap_manifest_store(
+            spark.range(100_000).selectExpr(
+                "id AS order_id", "CAST(id * 7 AS int) AS invoice_number"
+            ),
+            INVOICE, state, batch_id=0, target_rows_per_file=5_000,
+        )
+
+        def merge(batch_id, keys):
+            rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
+            want.update(rows)
+            return _merge_upserts(spark, state, batch_id, rows, 5_000)
+
+        m1 = merge(1, [k * 997 % 100_000 for k in range(400)])
+        assert m1["files_touched"] == m1["files_total"]
+        compacted = compact_manifest_store(spark, state, target_rows_per_file=5_000)
+        assert compacted is not None
+        spans = sorted((e["min"], e["max"]) for e in compacted["files"])
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+        m2 = merge(2, [60_000 + k for k in range(100)])
+        assert m2["files_touched"] / m2["files_total"] < 0.15
+        assert _replica(spark, state) == want
+
+    def test_compaction_reclusters_range_write_overlap(self, spark, tmp_path):
+        """A range write can overlap too: a batch with a key inside a
+        touched file's range and one in a gap past an untouched file
+        writes a new file spanning the untouched one. Compaction
+        re-clusters that overlap even below min_files, and rereads only
+        the overlapping and small files: the files clear of it are
+        carried by reference."""
+        from simple_cdc_service_spark.streaming import compact_manifest_store
+        from simple_cdc_service_spark.streaming.pipeline import _overlapping
+
+        state = str(tmp_path / "state")
+        keys = [*range(1_000), *range(2_000, 3_000)]
+        want = {k: k * 7 for k in keys}
+        boot = bootstrap_manifest_store(
+            spark.createDataFrame(
+                [(k, k * 7) for k in keys], "order_id long, invoice_number int"
+            ),
+            INVOICE, state, batch_id=0, target_rows_per_file=500,
+        )
+        assert not _overlapping(boot["files"])
+        want.update({10: -1, 1_500: -2})
+        m = _merge_upserts(spark, state, 1, {10: -1, 1_500: -2}, 500)
+        assert 0 < m["files_touched"] < m["files_total"]
+        assert _overlapping(m["files"])
+        clear = sorted(e["path"] for e in boot["files"] if e["min"] >= 2_000)
+        compacted = compact_manifest_store(spark, state, target_rows_per_file=500)
+        assert compacted is not None
+        assert not _overlapping(compacted["files"])
+        assert set(clear) <= {e["path"] for e in compacted["files"]}
+        assert compacted["compacted_from"] < len(m["files"])
+        assert _replica(spark, state) == want
+
+    def test_overlap_sweep(self):
+        """_overlapping finds every file whose exact range meets another's,
+        including a range contained in an earlier, wider one; inexact
+        stats never count as overlapping."""
+        from simple_cdc_service_spark.streaming.pipeline import _overlapping
+
+        def entry(lo, hi, exact=True):
+            return {"min": lo, "max": hi, "exact": exact}
+
+        files = [
+            entry(0, 100), entry(10, 20), entry(30, 40),  # inside a wide one
+            entry(200, 210), entry(210, 220),  # shared endpoint
+            entry(300, 310), entry(320, 330),  # disjoint
+            entry(None, None, exact=False),
+        ]
+        got = _overlapping(files)
+        assert got == {id(e) for e in files[:5]}
+        assert not _overlapping(files[5:])
+
     def test_noop_below_min_files(self, spark, tmp_path):
         from simple_cdc_service_spark.streaming import compact_manifest_store
 
@@ -488,10 +678,10 @@ class TestTimeTravel:
 
     def test_version_read_matches_versioned_replay(self, spark, tmp_path):
         """r11 time travel: read_replica_manifest(version=v) equals the
-        flat versioned store's read_replica(before=v+1) at EVERY
-        committed version on the identical feed — the Delta VERSION AS
-        OF contract, pinned against the independently-implemented
-        versioned merge rather than a replay of the same code."""
+        sequential replay of the feed up to batch v at EVERY committed
+        version — the Delta VERSION AS OF contract, pinned against the
+        pure-Python oracle (generate_envelopes over that prefix, same
+        seed), independent of Spark."""
         from simple_cdc_service_spark.streaming import manifest_store_history
 
         msgs, _ = generate_envelopes(
@@ -500,29 +690,17 @@ class TestTimeTravel:
         chunks = [msgs[:200], msgs[200:450], msgs[450:]]
         state = self._feed(spark, tmp_path, chunks, target_rows_per_file=40)
 
-        vsrc = str(tmp_path / "vsrc")
-        vstate = str(tmp_path / "vstate")
-        vckpt = str(tmp_path / "vckpt")
-        pos = 0
-        for i, chunk in enumerate(chunks):
-            _write_batch(vsrc, f"part{i}.json", chunk, pos)
-            pos += len(chunk)
-            start_replica_merge(
-                read_changelog_stream(spark, vsrc), INVOICE, vstate, vckpt
-            ).awaitTermination()
-
         hist = manifest_store_history(state)
         versions = [h["version"] for h in hist]
         assert versions == [0, 1, 2]
-        for v in versions:
+        for v, prefix in zip(versions, (200, 450, 600)):
             got = {
                 r.order_id: r.invoice_number
                 for r in read_replica_manifest(spark, state, version=v).collect()
             }
-            want = {
-                r.order_id: r.invoice_number
-                for r in read_replica(spark, vstate, before=v + 1).collect()
-            }
+            _, want = generate_envelopes(
+                n=prefix, seed=11, truncate_every=250, key_space=150
+            )
             assert got == want, f"version {v} diverges"
         # history stats are internally consistent with the reads
         for h, v in zip(hist, versions):
@@ -582,9 +760,9 @@ class TestTimeTravel:
 
 class TestMultiTableManifest:
     def test_two_tables_one_stream_manifest_store(self, spark, tmp_path):
-        """r11: start_multi_table_merge(store='manifest') routes each
-        table's slice through the key-stats manifest merge — one stream,
-        N pruned stores; replicas match the versioned route exactly."""
+        """r11: start_multi_table_merge routes each table's slice through
+        the key-stats manifest merge — one stream, N pruned stores, each
+        with its own key."""
         import json as _json
 
         from pyspark.sql import types as T
@@ -626,7 +804,6 @@ class TestMultiTableManifest:
         start_multi_table_merge(
             read_changelog_stream(spark, src), tables,
             str(tmp_path / "state"), str(tmp_path / "ckpt"),
-            store="manifest",
         ).awaitTermination()
 
         inv_state = str(tmp_path / "state" / "invoice")
@@ -640,12 +817,6 @@ class TestMultiTableManifest:
         # each table commits its OWN manifest chain with its own key
         assert _latest_manifest(inv_state)["key"] == "order_id"
         assert _latest_manifest(prod_state)["key"] == "sku"
-
-        with pytest.raises(ValueError):
-            start_multi_table_merge(
-                read_changelog_stream(spark, src), tables,
-                str(tmp_path / "s2"), str(tmp_path / "c2"), store="bogus",
-            )
 
 
 class TestOnePassCollapse:
@@ -684,14 +855,11 @@ class TestOnePassCollapse:
             for k in range(400)
         ]
         parsed = self._parsed(spark, msgs)
-        sc = spark.sparkContext
-        sc.setJobGroup("one-pass-collapse", "one hot micro-batch")
-        try:
-            _merge_manifest_batch(parsed, INVOICE, state, 0, 1_000)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup("one-pass-collapse")
-        assert 0 < len(jobs) <= 7, sorted(jobs)
+        jobs = _count_jobs(
+            spark, "one-pass-collapse",
+            lambda: _merge_manifest_batch(parsed, INVOICE, state, 0, 1_000),
+        )
+        assert 0 < jobs <= 7, jobs
         got = {
             r.order_id: r.invoice_number
             for r in read_replica_manifest(spark, state)

@@ -8,7 +8,10 @@ from pyspark.sql import functions as F
 
 from simple_cdc_service_spark.config import INVOICE
 from simple_cdc_service_spark.sources.changelog import generate_envelopes
-from simple_cdc_service_spark.streaming import read_changelog_stream, start_replica_merge
+from simple_cdc_service_spark.streaming import (
+    read_changelog_stream,
+    start_replica_merge_manifest,
+)
 from simple_cdc_service_spark.streaming.metrics import ProgressRecorder, observed
 
 
@@ -24,7 +27,7 @@ class TestProgressRecorder:
         rec = ProgressRecorder(metrics_path)
         spark.streams.addListener(rec)
         try:
-            start_replica_merge(
+            start_replica_merge_manifest(
                 read_changelog_stream(spark, src), INVOICE,
                 str(tmp_path / "state"), str(tmp_path / "ckpt"),
             ).awaitTermination()

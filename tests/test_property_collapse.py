@@ -283,9 +283,10 @@ def test_interval_distinct_hll_within_bound(spark, pts, ivs, bucket):
 # ---------------------------------------------------------------------------
 # Streaming replica sinks: for ANY envelope stream — c/u/d/t, PK-changing
 # updates, tombstones, corrupt messages, with or without binlog
-# coordinates — split into 1-3 micro-batches, the manifest merge, the
-# versioned merge with its incremental aggregate, and the multi-table
-# manifest route must all land on a sequential replay. With coordinates,
+# coordinates — split into 1-3 micro-batches, the manifest merge on a
+# bootstrapped store, the same merge with its incremental aggregate on an
+# empty one, and the multi-table route must all land on a sequential
+# replay. With coordinates,
 # each batch's lines arrive shuffled (Kafka offset order ≠ source order),
 # so the merges must order by the binlog position.
 # ---------------------------------------------------------------------------
@@ -390,6 +391,12 @@ def _replica(df):
 
 C = lambda k, v: ("c", k, 0, v)  # noqa: E731
 T = ("t", 0, 0, 0)
+# BOOT at 2 rows per file is [0, 2] and [4, 6]: batch 0 (keys 1, 3)
+# touches only [0, 2], which is rewritten as [0, 1] and [2, 3]; batch 1
+# (keys 1, 3, 5) touches all three files
+BOTH_WRITES = (
+    [C(1, 1), C(3, 3), ("u", 1, 0, 2), ("u", 3, 0, 4), C(5, 5)], [2], True, 0
+)
 
 
 @given(stream_spec)
@@ -402,6 +409,9 @@ T = ("t", 0, 0, 0)
 # truncate then inserts in one batch on the bootstrapped manifest stores:
 # the truncate events' NULL-key group must stay out of the pruning keys
 @example(([T, C(3, 30), C(5, 50), ("bad", 0, 0, 0)], [], True, 1))
+# both writes on the bootstrapped stores: batch 0 touches one of the two
+# files (clustered rewrite), batch 1 touches every file (flat rewrite)
+@example(BOTH_WRITES)
 def test_replica_sinks_equal_sequential_replay(spark, spec):
     import os
     import tempfile
@@ -411,11 +421,13 @@ def test_replica_sinks_equal_sequential_replay(spark, spec):
     from simple_cdc_service_spark.streaming import (
         bootstrap_manifest_store,
         read_agg,
-        read_replica,
         read_replica_manifest,
         start_multi_table_merge,
-        start_replica_merge,
         start_replica_merge_manifest,
+    )
+    from simple_cdc_service_spark.streaming.pipeline import (
+        _manifest_versions,
+        _read_manifest,
     )
 
     boot = spark.createDataFrame(
@@ -435,10 +447,12 @@ def test_replica_sinks_equal_sequential_replay(spark, spec):
             target_rows_per_file=2,
         ).awaitTermination()
 
-        versioned = os.path.join(d, "versioned")
-        start_replica_merge(
-            _batches_stream(spark, src), INVOICE, versioned, ckpt("versioned"),
-            agg_col="invoice_number",
+        # the aggregate needs a store that starts empty: a bootstrapped
+        # version carries no aggregate to build on
+        plain = os.path.join(d, "plain")
+        start_replica_merge_manifest(
+            _batches_stream(spark, src), INVOICE, plain, ckpt("plain"),
+            target_rows_per_file=2, agg_col="invoice_number",
         ).awaitTermination()
 
         multi = os.path.join(d, "multi")
@@ -447,7 +461,7 @@ def test_replica_sinks_equal_sequential_replay(spark, spec):
         )
         start_multi_table_merge(
             _batches_stream(spark, src), {"invoice": (INVOICE, INVOICE_ROW)},
-            multi, ckpt("multi"), store="manifest", target_rows_per_file=2,
+            multi, ckpt("multi"), target_rows_per_file=2,
         ).awaitTermination()
 
         # one micro-batch per file, or the split was not exercised
@@ -460,8 +474,20 @@ def test_replica_sinks_equal_sequential_replay(spark, spec):
         assert _replica(
             read_replica_manifest(spark, os.path.join(multi, "invoice"))
         ) == want_boot
-        rep = read_replica(spark, versioned)
+        rep = read_replica_manifest(spark, plain)
         assert (_replica(rep) if rep is not None else {}) == want
-        agg = read_agg(spark, versioned)
+        agg = read_agg(spark, plain)
         got_agg = (agg.sum_value, agg.n_keys) if agg else (0.0, 0)
         assert got_agg == (float(sum(want.values())), len(want))
+        if spec == BOTH_WRITES:
+            for store in (manifest, os.path.join(multi, "invoice")):
+                writes = [
+                    (m["files_touched"], m["files_total"])
+                    for m in (
+                        _read_manifest(store, v)
+                        for v in _manifest_versions(store)
+                        if v >= 0
+                    )
+                ]
+                assert any(0 < t < n for t, n in writes), writes
+                assert any(0 < t == n for t, n in writes), writes

@@ -94,8 +94,11 @@ class TestSchemaChangeDrivesReplica:
         drives the replica merge and the new column materializes."""
         import os
 
-        from simple_cdc_service_spark.streaming import read_changelog_stream, read_replica
-        from simple_cdc_service_spark.streaming.pipeline import start_replica_merge
+        from simple_cdc_service_spark.streaming import (
+            read_changelog_stream,
+            read_replica_manifest,
+        )
+        from simple_cdc_service_spark.streaming.pipeline import start_replica_merge_manifest
 
         tables = table_configs_from_changes(
             _kafka_df(
@@ -121,9 +124,9 @@ class TestSchemaChangeDrivesReplica:
         os.makedirs(src)
         with open(os.path.join(src, "a.json"), "w") as f:
             f.write(json.dumps({"offset": 0, "timestamp": 1, "value": json.dumps(env)}) + "\n")
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), cfg,
             str(tmp_path / "state"), str(tmp_path / "ckpt"), row_schema=row_schema,
         ).awaitTermination()
-        rows = read_replica(spark, str(tmp_path / "state")).collect()
+        rows = read_replica_manifest(spark, str(tmp_path / "state")).collect()
         assert [(r.order_id, r.invoice_number, r.currency) for r in rows] == [(1, 10, "EUR")]

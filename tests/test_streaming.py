@@ -17,9 +17,9 @@ from simple_cdc_service_spark.config import INVOICE
 from simple_cdc_service_spark.sources.changelog import generate_envelopes
 from simple_cdc_service_spark.streaming import (
     read_changelog_stream,
-    read_replica,
+    read_replica_manifest,
     start_event_log_sink,
-    start_replica_merge,
+    start_replica_merge_manifest,
     start_streaming_dedup,
     start_windowed_counts,
 )
@@ -53,15 +53,15 @@ class TestReplicaMerge:
 
         _write_batch(src, "part1.json", msgs[:400], 0)
         s = read_changelog_stream(spark, src)
-        _run(start_replica_merge(s, INVOICE, state, ckpt))
+        _run(start_replica_merge_manifest(s, INVOICE, state, ckpt))
 
         # restart: new file arrives, same checkpoint — only the delta is
         # processed (offsets come from the checkpoint, not `latest`).
         _write_batch(src, "part2.json", msgs[400:], 400)
         s2 = read_changelog_stream(spark, src)
-        _run(start_replica_merge(s2, INVOICE, state, ckpt))
+        _run(start_replica_merge_manifest(s2, INVOICE, state, ckpt))
 
-        replica = read_replica(spark, state)
+        replica = read_replica_manifest(spark, state)
         got = {r.order_id: r.invoice_number for r in replica.collect()}
         assert len(got) == len(expected)
         assert got == expected
@@ -77,26 +77,25 @@ class TestReplicaMerge:
             json.dumps(_envelope("c", None, {"order_id": 2, "invoice_number": 20}, 2, 2)),
         ]
         _write_batch(src, "b1.json", b1, 0)
-        _run(start_replica_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
-        assert read_replica(spark, state).count() == 2
+        _run(start_replica_merge_manifest(read_changelog_stream(spark, src), INVOICE, state, ckpt))
+        assert read_replica_manifest(spark, state).count() == 2
 
         b2 = [
             json.dumps(_envelope("t", None, None, 3, 3)),
             json.dumps(_envelope("c", None, {"order_id": 9, "invoice_number": 90}, 4, 4)),
         ]
         _write_batch(src, "b2.json", b2, 2)
-        _run(start_replica_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        _run(start_replica_merge_manifest(read_changelog_stream(spark, src), INVOICE, state, ckpt))
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == {9: 90}
 
 
 class TestCrashRecoveryReplay:
     def test_rerun_committed_batch_is_skipped(self, spark, tmp_path):
         """foreachBatch re-delivers batch N when the job died between the
-        merge commit and the checkpoint ack. Re-applying must NOT read and
-        overwrite v{N} simultaneously (static overwrite deletes the dir
-        under the reading job → FAILED_READ_FILE crash loop); the committed
-        version short-circuits instead."""
+        merge commit and the checkpoint ack. Re-applying must not rewrite
+        the committed version's files; its manifest short-circuits the
+        batch instead."""
         import glob
 
         from simple_cdc_service_spark.sources.changelog import (
@@ -104,7 +103,7 @@ class TestCrashRecoveryReplay:
             parse_envelopes,
         )
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _merge_manifest_batch,
         )
         from simple_cdc_service_spark.schemas import INVOICE_ROW
 
@@ -112,22 +111,22 @@ class TestCrashRecoveryReplay:
         msgs, expected = generate_envelopes(n=120, seed=7, truncate_every=50, key_space=40)
         parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
 
-        _merge_parsed_batch(parsed, INVOICE, state, batch_id=0)
+        _merge_manifest_batch(parsed, INVOICE, state, batch_id=0)
         files_before = {
             f: os.path.getmtime(f)
-            for f in glob.glob(os.path.join(state, "v0", "*.parquet"))
+            for f in glob.glob(os.path.join(state, "data", "v0", "*.parquet"))
         }
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == expected
 
         # the replay: same batch_id, same data — must be a no-op, not a crash
-        _merge_parsed_batch(parsed, INVOICE, state, batch_id=0)
+        _merge_manifest_batch(parsed, INVOICE, state, batch_id=0)
         files_after = {
             f: os.path.getmtime(f)
-            for f in glob.glob(os.path.join(state, "v0", "*.parquet"))
+            for f in glob.glob(os.path.join(state, "data", "v0", "*.parquet"))
         }
         assert files_after == files_before  # untouched, not rewritten
-        got2 = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        got2 = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got2 == expected
 
 
@@ -156,17 +155,17 @@ class TestPKChangingUpdate:
             ),
         ]
 
-    def test_versioned_merge(self, spark, tmp_path):
+    def test_same_batch(self, spark, tmp_path):
         src = str(tmp_path / "src")
         _write_batch(src, "a.json", self._msgs(), 0)
         _run(
-            start_replica_merge(
+            start_replica_merge_manifest(
                 read_changelog_stream(spark, src), INVOICE,
                 str(tmp_path / "state"), str(tmp_path / "ckpt"),
             )
         )
         got = {r.order_id: r.invoice_number
-               for r in read_replica(spark, str(tmp_path / "state")).collect()}
+               for r in read_replica_manifest(spark, str(tmp_path / "state")).collect()}
         assert got == {2: 11, 5: 50}  # key 1 gone, key 2 present
 
     def test_cross_batch(self, spark, tmp_path):
@@ -177,10 +176,10 @@ class TestPKChangingUpdate:
         state = str(tmp_path / "state")
         ckpt = str(tmp_path / "ckpt")
         _write_batch(src, "a.json", msgs[:2], 0)
-        _run(start_replica_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
+        _run(start_replica_merge_manifest(read_changelog_stream(spark, src), INVOICE, state, ckpt))
         _write_batch(src, "b.json", msgs[2:], 2)
-        _run(start_replica_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        _run(start_replica_merge_manifest(read_changelog_stream(spark, src), INVOICE, state, ckpt))
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == {2: 11, 5: 50}
 
 
@@ -208,13 +207,13 @@ class TestBinlogCoordinateOrdering:
         src = str(tmp_path / "src")
         _write_batch(src, "a.json", msgs, 0)
         _run(
-            start_replica_merge(
+            start_replica_merge_manifest(
                 read_changelog_stream(spark, src), INVOICE,
                 str(tmp_path / "state"), str(tmp_path / "ckpt"),
             )
         )
         got = {r.order_id: r.invoice_number
-               for r in read_replica(spark, str(tmp_path / "state")).collect()}
+               for r in read_replica_manifest(spark, str(tmp_path / "state")).collect()}
         assert got == {1: 99}  # pos 300 is final, despite smaller offset
 
     def test_truncate_epoch_across_partitions_binlog_order(self, spark, tmp_path):
@@ -241,13 +240,13 @@ class TestBinlogCoordinateOrdering:
         _write_batch(src, "partA.json", part_a, 0)
         _write_batch(src, "partB.json", part_b, 500)
         _run(
-            start_replica_merge(
+            start_replica_merge_manifest(
                 read_changelog_stream(spark, src), INVOICE,
                 str(tmp_path / "state"), str(tmp_path / "ckpt"),
             )
         )
         got = {r.order_id: r.invoice_number
-               for r in read_replica(spark, str(tmp_path / "state")).collect()}
+               for r in read_replica_manifest(spark, str(tmp_path / "state")).collect()}
         # k1 (pos 100) dies in the truncate; k7 (pos 700) and k9 (pos 600)
         # survive despite k7's kafka offset preceding the truncate's.
         assert got == {7: 70, 9: 90}
@@ -268,23 +267,26 @@ class TestIncrementalAggMaintenance:
         for i, (a, b) in enumerate([(0, 150), (150, 300), (300, 450)]):
             _write_batch(src, f"c{i}.json", msgs[a:b], a)
             _run(
-                start_replica_merge(
+                start_replica_merge_manifest(
                     read_changelog_stream(spark, src), INVOICE, state, ckpt,
                     agg_col="invoice_number",
                 )
             )
-            replica = read_replica(spark, state)
+            replica = read_replica_manifest(spark, state)
             want_n = replica.count()
             want_sum = (replica.agg(F.sum("invoice_number")).collect()[0][0] or 0)
             agg = read_agg(spark, state)
             assert agg.n_keys == want_n
             assert agg.sum_value == float(want_sum)
         # and the final state matches the sequential replay oracle
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
         assert got == expected
 
     def test_vacuum_covers_agg_versions(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming.pipeline import read_agg, vacuum_state
+        from simple_cdc_service_spark.streaming.pipeline import (
+            read_agg,
+            vacuum_manifest_store,
+        )
 
         msgs, _ = generate_envelopes(n=300, seed=4, truncate_every=None, key_space=100)
         src = str(tmp_path / "src")
@@ -293,20 +295,46 @@ class TestIncrementalAggMaintenance:
         for i, (a, b) in enumerate([(0, 100), (100, 200), (200, 300)]):
             _write_batch(src, f"c{i}.json", msgs[a:b], a)
             _run(
-                start_replica_merge(
+                start_replica_merge_manifest(
                     read_changelog_stream(spark, src), INVOICE, state, ckpt,
                     agg_col="invoice_number",
                 )
             )
         agg_before = read_agg(spark, state)
         assert len(os.listdir(os.path.join(state, "agg"))) >= 3
-        vacuum_state(state, keep=1)
+        vacuum_manifest_store(state, keep=1)
         kept = [d for d in os.listdir(os.path.join(state, "agg")) if d.startswith("v")]
         assert len(kept) == 1
         agg_after = read_agg(spark, state)
         assert (agg_after.sum_value, agg_after.n_keys) == (
             agg_before.sum_value, agg_before.n_keys,
         )
+
+    def test_bootstrapped_store_refuses_agg(self, spark, tmp_path):
+        """A bootstrapped store's version holds rows but no aggregate:
+        starting the sum at 0 would silently leave them out, so agg_col
+        refuses it, naming the version, and commits nothing."""
+        from simple_cdc_service_spark.schemas import INVOICE_ROW
+        from simple_cdc_service_spark.sources.changelog import (
+            envelopes_df,
+            parse_envelopes,
+        )
+        from simple_cdc_service_spark.streaming import bootstrap_manifest_store
+        from simple_cdc_service_spark.streaming.pipeline import (
+            _manifest_versions,
+            _merge_manifest_batch,
+        )
+
+        state = str(tmp_path / "state")
+        bootstrap_manifest_store(
+            spark.range(10).selectExpr("id AS order_id", "id * 7 AS invoice_number"),
+            INVOICE, state,
+        )
+        msgs, _ = generate_envelopes(n=20, seed=2, truncate_every=None, key_space=30)
+        parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
+        with pytest.raises(ValueError, match="manifest version -1"):
+            _merge_manifest_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
+        assert _manifest_versions(state) == [-1]
 
     def test_agg_replay_of_committed_batch_is_stable(self, spark, tmp_path):
         """Re-delivering a fully committed batch must change neither the
@@ -317,16 +345,16 @@ class TestIncrementalAggMaintenance:
             parse_envelopes,
         )
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _merge_manifest_batch,
             read_agg,
         )
 
         msgs, _ = generate_envelopes(n=80, seed=2, truncate_every=None, key_space=30)
         parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
         state = str(tmp_path / "state")
-        _merge_parsed_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
+        _merge_manifest_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
         first = read_agg(spark, state)
-        _merge_parsed_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
+        _merge_manifest_batch(parsed, INVOICE, state, 0, agg_col="invoice_number")
         again = read_agg(spark, state)
         assert (first.sum_value, first.n_keys) == (again.sum_value, again.n_keys)
 
@@ -343,7 +371,7 @@ class TestIncrementalAggMaintenance:
             parse_envelopes,
         )
         from simple_cdc_service_spark.streaming.pipeline import (
-            _merge_parsed_batch,
+            _merge_manifest_batch,
             read_agg,
         )
 
@@ -352,7 +380,7 @@ class TestIncrementalAggMaintenance:
         def merge(batch_id, events):
             msgs = [json.dumps(e) for e in events]
             parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
-            _merge_parsed_batch(
+            _merge_manifest_batch(
                 parsed, INVOICE, state, batch_id, agg_col="invoice_number"
             )
             return read_agg(spark, state)
@@ -584,7 +612,7 @@ class TestMultiTableRouting:
 
         from simple_cdc_service_spark.config import ChangeTableConfig
         from simple_cdc_service_spark.schemas import INVOICE_ROW, row_schema
-        from simple_cdc_service_spark.streaming import read_changelog_stream, read_replica
+        from simple_cdc_service_spark.streaming import read_changelog_stream, read_replica_manifest
         from simple_cdc_service_spark.streaming.pipeline import start_multi_table_merge
 
         def env(table, op, before, after, pos):
@@ -615,10 +643,11 @@ class TestMultiTableRouting:
             str(tmp_path / "ckpt"),
         ).awaitTermination()
 
+        state = tmp_path / "state"
         inv = {r.order_id: r.invoice_number
-               for r in read_replica(spark, str(tmp_path / "state" / "invoice")).collect()}
+               for r in read_replica_manifest(spark, str(state / "invoice")).collect()}
         prod = {r.sku: r.price
-                for r in read_replica(spark, str(tmp_path / "state" / "product")).collect()}
+                for r in read_replica_manifest(spark, str(state / "product")).collect()}
         assert inv == {1: 11}
         assert prod == {8: 42}
 
@@ -644,7 +673,7 @@ class TestSchemaEvolution:
         v1_row = row_schema({"order_id": T.LongType(), "invoice_number": T.LongType()})
         v1_cfg = ChangeTableConfig("invoice", ("order_id",), ("invoice_number",), ("offset",))
         _write_batch(src, "a.json", [env("c", None, {"order_id": 1, "invoice_number": 10})], 0)
-        start_replica_merge(read_changelog_stream(spark, src), v1_cfg, state, ckpt,
+        start_replica_merge_manifest(read_changelog_stream(spark, src), v1_cfg, state, ckpt,
                             row_schema=v1_row).awaitTermination()
 
         v2_row = row_schema({"order_id": T.LongType(), "invoice_number": T.LongType(),
@@ -653,16 +682,17 @@ class TestSchemaEvolution:
                                    ("invoice_number", "currency"), ("offset",))
         _write_batch(src, "b.json",
                      [env("c", None, {"order_id": 2, "invoice_number": 20, "currency": "EUR"})], 1)
-        start_replica_merge(read_changelog_stream(spark, src), v2_cfg, state, ckpt,
+        start_replica_merge_manifest(read_changelog_stream(spark, src), v2_cfg, state, ckpt,
                             row_schema=v2_row).awaitTermination()
 
         got = {r.order_id: (r.invoice_number, r.currency)
-               for r in read_replica(spark, state).collect()}
+               for r in read_replica_manifest(spark, state).collect()}
         assert got == {1: (10, None), 2: (20, "EUR")}
 
 
 class TestVacuum:
     def test_keeps_newest_versions(self, spark, tmp_path):
+        from simple_cdc_service_spark.streaming import read_scd2, start_scd2_merge
         from simple_cdc_service_spark.streaming.pipeline import vacuum_state
 
         msgs, expected = generate_envelopes(n=300, seed=4, truncate_every=None, key_space=100)
@@ -671,13 +701,14 @@ class TestVacuum:
         ckpt = str(tmp_path / "ckpt")
         for i, (a, b) in enumerate([(0, 100), (100, 200), (200, 300)]):
             _write_batch(src, f"c{i}.json", msgs[a:b], a)
-            _run(start_replica_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
+            _run(start_scd2_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
         import os as _os
 
         assert len([d for d in _os.listdir(state) if d.startswith("v")]) >= 3
         removed = vacuum_state(state, keep=1)
         assert len(removed) >= 2
-        got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+        current = read_scd2(spark, state).filter("is_current")
+        got = {r.order_id: r.invoice_number for r in current.collect()}
         assert got == expected  # latest state untouched
 
 

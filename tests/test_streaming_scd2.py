@@ -17,9 +17,9 @@ from simple_cdc_service_spark.sources.changelog import (
 )
 from simple_cdc_service_spark.streaming import (
     read_changelog_stream,
-    read_replica,
+    read_replica_manifest,
     read_scd2,
-    start_replica_merge,
+    start_replica_merge_manifest,
     start_scd2_merge,
 )
 
@@ -94,12 +94,12 @@ def test_scd2_current_versions_equal_replica(spark, tmp_path):
         start_scd2_merge(
             read_changelog_stream(spark, src), INVOICE, hstate, hckpt
         ).awaitTermination()
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, rstate, rckpt
         ).awaitTermination()
     cur = read_scd2(spark, hstate).filter("is_current")
     got = {r.order_id: r.invoice_number for r in cur.collect()}
-    rep = {r.order_id: r.invoice_number for r in read_replica(spark, rstate).collect()}
+    rep = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, rstate).collect()}
     assert got == rep == expected
 
 

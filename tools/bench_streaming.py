@@ -2,8 +2,8 @@
 contract — records the CDC pipeline's end-to-end micro-batch rate).
 
 Feeds the seeded envelope workload through the checkpointed replica merge
-in K chunks (K micro-batch cycles incl. state read-merge-write) and prints
-events/sec overall.
+(start_replica_merge_manifest) in K chunks (K micro-batch cycles incl.
+store read-merge-write) and prints events/sec overall.
 """
 
 from __future__ import annotations
@@ -19,7 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from simple_cdc_service_spark.config import INVOICE
 from simple_cdc_service_spark.session import get_spark
 from simple_cdc_service_spark.sources.changelog import generate_envelopes
-from simple_cdc_service_spark.streaming import read_changelog_stream, read_replica, start_replica_merge
+from simple_cdc_service_spark.streaming import (
+    read_changelog_stream,
+    read_replica_manifest,
+    start_replica_merge_manifest,
+)
 
 
 def main(n_events: int = 50_000, chunks: int = 5) -> None:
@@ -40,12 +44,15 @@ def main(n_events: int = 50_000, chunks: int = 5) -> None:
             for i in range(lo, hi):
                 f.write(json.dumps({"offset": i, "timestamp": i, "value": msgs[i]}) + "\n")
         tb = time.perf_counter()
-        start_replica_merge(
+        start_replica_merge_manifest(
             read_changelog_stream(spark, src), INVOICE, state, ckpt
         ).awaitTermination()
         batch_secs.append(round(time.perf_counter() - tb, 2))
     wall = time.perf_counter() - t0
-    got = {r.order_id: r.invoice_number for r in read_replica(spark, state).collect()}
+    got = {
+        r.order_id: r.invoice_number
+        for r in read_replica_manifest(spark, state).collect()
+    }
     ok = got == expected
     print(json.dumps({
         "metric": "cdc_stream_events_per_sec",
@@ -282,35 +289,30 @@ def bench_replica_store_scale(
     batch — and the question is whether the foreachBatch merge regresses
     to O(store) work beyond the unavoidable store I/O.
 
-    Three legs:
-      * versioned merge (start_replica_merge): per-batch cost is
-        O(store read + store write) BY DESIGN — every batch commits a
-        full _SUCCESS-gated version (that full-copy is the price of the
-        versioned protocol's atomicity/idempotence without a
-        transactional format). Expected: FLAT batch walls (store
-        dominated), merge plan = broadcast anti join (the batch's key
-        set broadcasts; the store NEVER shuffles).
-      * manifest store (start_replica_merge_manifest), HOT-KEY feed
-        (100 distinct keys): file-level key stats prune each batch to
-        the few files its key range lives in.
-      * manifest store, UNIFORM keys over the whole store: every file is
-        touched, so the merge degrades to the flat rewrite. (A hash-
-        bucketed store was measured here too and removed: ~11 s hot-key
-        walls against ~1.5 s for the manifest store, ~50x the flat
-        rewrite on uniform keys — BENCH_streaming_r10_store.json.)
+    Two legs over the manifest store (start_replica_merge_manifest):
+      * HOT-KEY feed (100 distinct keys): file-level key stats prune each
+        batch to the few files its key range lives in, which are
+        rewritten range-partitioned.
+      * UNIFORM keys over the whole store: every file is touched, so
+        nothing is carried by reference; the merge writes the full
+        rewrite flat (no range shuffle) when the store is clustered and
+        range-partitioned when a flat write left it overlapping, so the
+        writes alternate.
 
-    Preload protocol: a 1-event bootstrap batch consumes micro-batch id
-    0, then v0's payload is REPLACED by a synthesized n_store-row
-    replica in the merge's own format (_SUCCESS-gated). The fabricated
-    history is a bench scaffold only: steady-state merge cost depends on
-    the store's SIZE, not its provenance, and feed batch ids 1..K merge
-    strictly on top (before=batch_id semantics)."""
-    from simple_cdc_service_spark.plans import plan_string
-    from simple_cdc_service_spark.streaming import (
-        read_replica,
-        start_replica_merge,
-    )
+    A versioned full-rewrite store used to run here as a third leg and
+    was folded into the manifest store: on a 250k-row store in 25 files
+    (local[2], 12 alternating pairs, replicas exact) it won uniform keys
+    at 669 vs 1,403 ms per batch only because the manifest store
+    range-partitioned rows it could not prune, and it lost hot keys at
+    688 vs 602 ms; the manifest store's flat write on an all-touched
+    batch is that store's write. (A hash-bucketed store was measured
+    here too and removed: ~11 s hot-key walls against ~1.5 s for the
+    manifest store, ~50x the flat rewrite on uniform keys —
+    BENCH_streaming_r10_store.json.)
 
+    Preload: bootstrap at the RESERVED version -1 (ADVICE r10 fix) — the
+    stream's first micro-batch (id 0) merges against the bootstrapped
+    store directly, the bootstrap-then-stream path the fix makes safe."""
     spark = get_spark("bench-replica-store")
     spark.sparkContext.setLogLevel("ERROR")
     load_start = os.getloadavg()[0]
@@ -321,12 +323,12 @@ def bench_replica_store_scale(
         "loadavg_start": round(load_start, 1),
     }
 
-    def feed_chunks(src: str, msgs, start_chunk: int, run_batch) -> list[float]:
+    def feed_chunks(src: str, msgs, run_batch) -> list[float]:
         per = len(msgs) // chunks
         walls = []
         for c in range(chunks):
             lo, hi = c * per, (c + 1) * per if c < chunks - 1 else len(msgs)
-            with open(f"{src}/c{start_chunk + c}.json", "w") as f:
+            with open(f"{src}/c{c}.json", "w") as f:
                 for i in range(lo, hi):
                     f.write(
                         json.dumps(
@@ -339,78 +341,14 @@ def bench_replica_store_scale(
             walls.append(round(time.perf_counter() - tb, 2))
         return walls
 
-    # ---- leg 1: versioned merge ----
-    d = tempfile.mkdtemp()
-    src, state, ckpt = f"{d}/src", f"{d}/state", f"{d}/ckpt"
-    os.makedirs(src)
-    boot, _ = generate_envelopes(n=3, seed=7, truncate_every=None, key_space=1)
-    with open(f"{src}/c_boot.json", "w") as f:
-        for i, m in enumerate(boot):
-            f.write(json.dumps({"offset": i, "timestamp": i, "value": m}) + "\n")
-    start_replica_merge(
-        read_changelog_stream(spark, src), INVOICE, state, ckpt
-    ).awaitTermination()
-    # replace v0's payload with the synthesized store (scaffold, see doc)
-    t0 = time.perf_counter()
-    # INVOICE_ROW types both columns LONG — the preload must match or the
-    # versioned reader hits PARQUET_COLUMN_DATA_TYPE_MISMATCH on mixed files
-    spark.range(n_store).selectExpr(
-        "id AS order_id", "id * 7 AS invoice_number"
-    ).write.mode("overwrite").parquet(f"{state}/v0")
-    out["preload_sec"] = round(time.perf_counter() - t0, 2)
-
-    msgs, _ = generate_envelopes(
-        n=n_events, seed=42, truncate_every=None, key_space=n_events // 3
-    )
-    walls = feed_chunks(
-        src,
-        msgs,
-        1,
-        lambda: start_replica_merge(
-            read_changelog_stream(spark, src), INVOICE, state, ckpt
-        ).awaitTermination(),
-    )
-    final = read_replica(spark, state)
-    out["versioned"] = {
-        "batch_sec": walls,
-        "events_per_sec": round(n_events / sum(walls), 1),
-        "final_rows": final.count(),
-    }
-    # merge plan shape of a representative batch: batch keys broadcast
-    # into the anti join, the store branch carries no Exchange
-    keys = spark.range(n_events // 3).selectExpr("CAST(id AS INT) AS order_id")
-    surv = final.join(keys, ["order_id"], "left_anti")
-    surv.count()
-    plan = plan_string(surv, "simple")
-    out["versioned"]["merge_plan"] = {
-        "broadcast_anti_join": "BroadcastHashJoin" in plan and "LeftAnti" in plan,
-        # only SHUFFLE exchanges count — the key set's BroadcastExchange
-        # is the desired shape (batch keys ship to the store, never the
-        # reverse); a hashpartitioning exchange would mean the 10M-row
-        # store is being shuffled to merge a 10k-event batch
-        "store_shuffled": "Exchange hashpartitioning" in plan
-        or "Exchange rangepartitioning" in plan,
-    }
-
-    # ---- legs 2+3: MANIFEST store (file-level key stats, VERDICT r9 #3)
-    # — hot keys should touch few files; uniform keys degrade gracefully
-    # to ~the flat rewrite. Preload: bootstrap at the RESERVED version -1
-    # (ADVICE r10 fix) — no sacrificial boot batch; the stream's first
-    # micro-batch (id 0) merges against the bootstrapped store directly,
-    # which is exactly the bootstrap-then-stream path the fix makes safe.
-    from simple_cdc_service_spark.streaming import (
-        bootstrap_manifest_store,
-        read_replica_manifest,
-        start_replica_merge_manifest,
-    )
+    from simple_cdc_service_spark.streaming import bootstrap_manifest_store
     from simple_cdc_service_spark.streaming.pipeline import _read_manifest
 
     # manifest_uniform draws keys uniformly from the STORE'S WHOLE key
     # domain (key_space = n_store): every range file contains some of
-    # each batch's keys, so pruning must degrade to the full rewrite —
-    # the honest negative. (A key_space of n_events//3 would cluster
-    # every key inside the first file's range and accidentally re-test
-    # the hot case.)
+    # each batch's keys, so every batch is a full rewrite.
+    # (A key_space of n_events//3 would cluster every key inside the
+    # first file's range and accidentally re-test the hot case.)
     for leg, key_space in (("manifest_hot", 100), ("manifest_uniform", n_store)):
         if legs is not None and leg not in legs:
             continue
@@ -429,7 +367,6 @@ def bench_replica_store_scale(
         walls3 = feed_chunks(
             src3,
             msgs3,
-            0,
             lambda: start_replica_merge_manifest(
                 read_changelog_stream(spark, src3), INVOICE, state3, ckpt3
             ).awaitTermination(),
@@ -546,24 +483,19 @@ def bench_multi_table(
     n_tables: int = 4,
     n_events: int = 40_000,
     chunks: int = 4,
-    store: str = "manifest",
 ) -> None:
     """Multi-table routing throughput (r11): ONE mixed changelog stream
     (``n_tables`` independent seeded workloads, round-robin interleaved,
     discriminated by payload.source.table) through start_multi_table_merge
-    into N per-table replicas — versioned (N full rewrites per batch) vs
-    manifest (each table's slice touches only the files its keys live in).
-    Exactness: every table's replica must equal ITS workload's sequential
+    into N per-table manifest stores (each table's slice touches only the
+    files its keys live in). Exactness: every table's replica must equal ITS workload's sequential
     replay."""
     import dataclasses
 
     from simple_cdc_service_spark.schemas import INVOICE_ROW
     from simple_cdc_service_spark.streaming import (
         read_changelog_stream,
-        read_replica,
         read_replica_manifest,
-    )
-    from simple_cdc_service_spark.streaming.pipeline import (
         start_multi_table_merge,
     )
 
@@ -610,20 +542,18 @@ def bench_multi_table(
         tb = time.perf_counter()
         start_multi_table_merge(
             read_changelog_stream(spark, src), tables, state, ckpt,
-            store=store,
         ).awaitTermination()
         batch_secs.append(round(time.perf_counter() - tb, 2))
     wall = time.perf_counter() - t0
     exact = True
     for name, (_, exp) in relabeled.items():
-        reader = read_replica_manifest if store == "manifest" else read_replica
         got = {
             r.order_id: r.invoice_number
-            for r in reader(spark, os.path.join(state, name)).collect()
+            for r in read_replica_manifest(spark, os.path.join(state, name)).collect()
         }
         exact = exact and got == exp
     print(json.dumps({
-        "metric": f"multi_table_events_per_sec_{store}",
+        "metric": "multi_table_events_per_sec_manifest",
         "value": round(len(interleaved) / wall, 1),
         "unit": "events/sec",
         "events": len(interleaved),
@@ -838,8 +768,7 @@ if __name__ == "__main__":
         bench_replica_store_scale(
             n_store=int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000,
             n_events=int(sys.argv[3]) if len(sys.argv) > 3 else 50_000,
-            # optional leg filter, e.g. "manifest_hot,manifest_uniform" —
-            # the versioned baseline always runs (it is the comparator)
+            # optional leg filter, e.g. "manifest_hot"
             legs=set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None,
         )
     elif len(sys.argv) > 1 and sys.argv[1] == "admission-store":
@@ -859,11 +788,10 @@ if __name__ == "__main__":
     elif len(sys.argv) > 1 and sys.argv[1] == "scd2":
         bench_scd2()
     elif len(sys.argv) > 1 and sys.argv[1] == "multi-table":
-        # multi-table [n_tables] [n_events] [store] — mixed-stream routing
+        # multi-table [n_tables] [n_events] — mixed-stream routing
         bench_multi_table(
             n_tables=int(sys.argv[2]) if len(sys.argv) > 2 else 4,
             n_events=int(sys.argv[3]) if len(sys.argv) > 3 else 40_000,
-            store=sys.argv[4] if len(sys.argv) > 4 else "manifest",
         )
     elif len(sys.argv) > 1 and sys.argv[1] == "imi-index":
         # imi-index [n_vecs] [chunks] — streaming ANN-index maintenance
