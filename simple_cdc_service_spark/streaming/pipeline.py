@@ -14,14 +14,16 @@ checkpoint, and the merge is idempotent per micro-batch (re-running a
 failed batch rewrites the same state version).
 
 Scale notes:
-  * One replica store (start_replica_merge_manifest): versioned manifests
-    that list the store's files with their key stats. A batch rewrites
-    only the files its keys land in and carries the rest by reference —
-    the local stand-in for Delta/Iceberg MERGE. When no file can be
-    carried (uniform keys touch every file of a clustered store) the
-    rewrite is written flat, as the anti-join + union leaves it, with no
-    range shuffle; the next batch that touches those files re-clusters
-    them.
+  * One versioned store, the manifest store, for the replica
+    (start_replica_merge_manifest) and the SCD2 history
+    (start_scd2_merge): versioned manifests that list the store's files
+    with their key stats. A batch rewrites only the files its keys land
+    in and carries the rest by reference — the local stand-in for
+    Delta/Iceberg MERGE. When no file can be carried (uniform keys touch
+    every file of a clustered store) the rewrite is written flat, as the
+    merge leaves it, with no range shuffle; the next batch that touches
+    those files re-clusters them. One vacuum, one compaction and one
+    reader serve both.
   * Each micro-batch is collapsed ONCE (_collapsed_batch): the parse is
     one planned statement and the changelog derivation + last-event-per-
     key another (max_by, one shuffle on the key), materialized with a
@@ -52,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ChangeTableConfig
-from ..operators.cdc import classify_op, last_event_sql
+from ..operators.cdc import changelog_sql, classify_op, last_event_sql, scd2_history
 from ..schemas import INVOICE_ROW
 from ..sources.changelog import parse_envelopes
 
@@ -107,11 +109,6 @@ _ORDER_COORDINATE = (
 )
 
 
-def _order_coordinate() -> F.Column:
-    """_ORDER_COORDINATE as a Column (the SCD2 merge's window order)."""
-    return F.expr(_ORDER_COORDINATE)
-
-
 def start_event_log_sink(
     stream: DataFrame,
     out_dir: str,
@@ -146,18 +143,6 @@ def start_event_log_sink(
     return writer.start()
 
 
-def _state_versions(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for d in os.listdir(state_dir):
-        if d.startswith("v") and d[1:].isdigit() and os.path.exists(
-            os.path.join(state_dir, d, "_SUCCESS")
-        ):
-            out.append(int(d[1:]))
-    return sorted(out)
-
-
 @functools.lru_cache(maxsize=None)
 def _last_event_sql(cfg: ChangeTableConfig) -> str:
     """The micro-batch collapse statement, built once per table config;
@@ -165,184 +150,70 @@ def _last_event_sql(cfg: ChangeTableConfig) -> str:
     return last_event_sql(cfg, _ORDER_COORDINATE)
 
 
-class _Batch(NamedTuple):
-    """One micro-batch, collapsed per key (see _collapsed_batch)."""
+@functools.lru_cache(maxsize=None)
+def _changelog_sql(cfg: ChangeTableConfig) -> str:
+    """The SCD2 merge's batch statement: the flat changelog, each event
+    with its order coordinate as ``__ord``."""
+    return changelog_sql(cfg, {"__ord": _ORDER_COORDINATE})
 
-    live: DataFrame  # last event per key after the truncate epoch, deletes kept
+
+class _Batch(NamedTuple):
+    """One micro-batch, materialized once (see _materialized)."""
+
+    rows: DataFrame  # the batch statement's output
     truncated: bool  # the batch holds a truncate: prior state is wiped
     keys: list  # sorted distinct non-NULL first-key values (manifest pruning)
+    n: int  # output rows
 
 
 @contextlib.contextmanager
-def _collapsed_batch(parsed: DataFrame, cfg: ChangeTableConfig):
-    """Micro-batch collapse of the replica merge, run ONCE per
-    batch: envelope_changelog derivation (same as the batch snapshot —
-    including the PK-changing-update explode into delete(before.key) +
-    insert(after.key)) and last-event-per-key by the binlog-coordinate
-    total order, as one planned statement (last_event_sql) materialized
-    with an eager local checkpoint. Every later step reads that frame:
-    one driver collect of (first key, truncate coordinate) per collapsed
-    row gives emptiness, the truncate decision and the pruning keys; the
-    anti-join keys, the upserts and the incremental aggregate read it
-    too, so the parse and the collapse run once.
+def _materialized(parsed: DataFrame, text: str, key0: str, truncate: F.Column):
+    """Run one batch statement (``text``, a ``{parsed}`` template over the
+    parsed envelopes) ONCE, materialized with an eager local checkpoint
+    that every later step reads. One driver collect of (first key,
+    ``truncate``) per output row gives emptiness, the truncate decision
+    and the pruning keys.
 
-    The truncate epoch is applied to the collapsed rows (last_event_sql):
-    only a batch holding a truncate pays a scalar subquery for it.
-
-    Yields None for an empty batch, else a _Batch. The checkpoint is a
+    Yields None for an empty output, else a _Batch. The checkpoint is a
     local one, not a persist(): a cached plan pins the shuffle's
     configured partition count, where the checkpoint keeps AQE's
     coalesced one or two. Its storage is freed when the with-statement
     exits."""
-    spark = parsed.sparkSession
-    last = spark.sql(_last_event_sql(cfg), parsed=parsed).localCheckpoint(eager=True)
+    rows = parsed.sparkSession.sql(text, parsed=parsed).localCheckpoint(eager=True)
     try:
-        probe = last.select(cfg.key_columns[0], "__tk").collect()
+        probe = rows.select(key0, truncate).collect()
         if not probe:
             yield None
             return
-        truncated = any(r[1] is not None for r in probe)
-        live = last
-        if truncated:
-            epoch = last.select(F.max("__tk")).scalar()
-            live = last.filter(F.col("__ord") > epoch)
-        # the truncate events' group has NULL keys: no file range holds
-        # it, and sorted() cannot order None against keys
+        # the truncate events have NULL keys: no file range holds them,
+        # and sorted() cannot order None against keys
         keys = sorted({r[0] for r in probe if r[0] is not None})
-        yield _Batch(live, truncated, keys)
+        yield _Batch(rows, any(r[1] for r in probe), keys, len(probe))
     finally:
         # the LogicalRDD under the checkpointed frame owns the blocks
-        last._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        rows._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def read_scd2(
-    spark: SparkSession, state_dir: str, before: int | None = None
-) -> DataFrame | None:
-    """Latest committed SCD2 history version (see start_scd2_merge), or
-    None. ``before`` reads the latest version STRICTLY BELOW that batch
-    id — what a batch-N merge must read so that re-running batch N (crash
-    replay) derives from N's true predecessor, never from its own
-    partially-committed output."""
-    versions = _state_versions(state_dir)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    return spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
+@contextlib.contextmanager
+def _collapsed_batch(parsed: DataFrame, cfg: ChangeTableConfig):
+    """Micro-batch collapse of the replica merge, run ONCE per batch:
+    envelope_changelog derivation (same as the batch snapshot — including
+    the PK-changing-update explode into delete(before.key) +
+    insert(after.key)) and last-event-per-key by the binlog-coordinate
+    total order, as one planned statement (last_event_sql), materialized
+    (_materialized). The anti-join keys, the upserts and the incremental
+    aggregate read it, so the parse and the collapse run once.
 
-
-def _merge_scd2_batch(
-    parsed: DataFrame, cfg: ChangeTableConfig, state_dir: str, batch_id: int
-) -> None:
-    """One micro-batch of parsed envelopes → incrementally-maintained SCD2
-    history (the streaming form of operators/cdc.scd2_history). Each
-    batch writes a full version v{batchId}; its _SUCCESS marker is the
-    commit. A re-delivered committed batch is skipped: re-running it would
-    overwrite v{N} while reading from it (FAILED_READ_FILE crash loop),
-    and the committed version was derived from this same batch.
-
-    Within the batch, versions and their closers come from the same
-    lead() window the batch operator uses. Across batches, the only state
-    rows that change are the OPEN versions of keys the batch touches:
-    their valid_to becomes the key's FIRST in-batch event position (any
-    op closes — an update supersedes, a delete terminates). Closed
-    versions are immutable and pass through untouched, so per-batch cost
-    is O(|batch| + one join against state) regardless of history length.
-    A truncate in the batch wipes prior history entirely (only the live
-    epoch is versioned — identical to the batch operator and R10).
-
-    Replaying batches 1..N through this merge yields byte-identical
-    history to running scd2_history over the concatenated changelog
-    (pinned in test_streaming.py)."""
-    from pyspark.sql.window import Window
-
-    from ..operators.cdc import envelope_changelog, truncate_epoch_filter
-
-    spark = parsed.sparkSession
-    out = os.path.join(state_dir, f"v{batch_id}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return
-    changelog = envelope_changelog(
-        parsed.withColumn("__ord", _order_coordinate()), cfg, passthrough_cols=("__ord",)
-    ).persist()
-    try:
-        probe = changelog.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col(cfg.op_column) == "t").cast("int")).alias("nt"),
-        ).collect()[0]
-        if probe.n == 0:
-            return
-        had_truncate = (probe.nt or 0) > 0
-        live = truncate_epoch_filter(changelog, cfg.op_column, "__ord")
-        w = Window.partitionBy(*cfg.key_columns).orderBy("__ord")
-        batch_versions = (
-            live.select(
-                *cfg.key_columns,
-                *cfg.value_columns,
-                F.col(cfg.op_column).alias("__op"),
-                F.col("__ord").alias("valid_from"),
-                F.lead("__ord").over(w).alias("valid_to"),
-            )
-            .filter(F.col("__op") != "d")
-            .drop("__op")
-            .withColumn("is_current", F.col("valid_to").isNull())
-        )
-        current = (
-            None if had_truncate else read_scd2(spark, state_dir, before=batch_id)
-        )
-        if current is not None:
-            closer = live.groupBy(*cfg.key_columns).agg(
-                F.min("__ord").alias("__first")
-            )
-            keys = list(cfg.key_columns)
-            touched_open = F.col("is_current") & F.col("__first").isNotNull()
-            carried = (
-                current.join(closer, keys, "left")
-                .withColumn(
-                    "valid_to",
-                    F.when(touched_open, F.col("__first")).otherwise(
-                        F.col("valid_to")
-                    ),
-                )
-                .withColumn("is_current", F.col("is_current") & F.col("__first").isNull())
-                .drop("__first")
-            )
-            new_state = carried.unionByName(
-                batch_versions, allowMissingColumns=True
-            )
-        else:
-            new_state = batch_versions
-        new_state.write.mode("overwrite").parquet(out)
-    finally:
-        changelog.unpersist(blocking=False)
-
-
-def start_scd2_merge(
-    stream: DataFrame,
-    cfg: ChangeTableConfig,
-    state_dir: str,
-    checkpoint: str,
-    row_schema=INVOICE_ROW,
-    trigger_available_now: bool = True,
-):
-    """SCD Type-2 history sink: the warehouse history table, maintained
-    incrementally from the CDC stream (the streaming counterpart of the
-    cdc_scd2 registry query). Same ordering contract and crash-replay
-    idempotence as start_replica_merge_manifest; current versions of the history
-    always equal the replica's state (pinned in tests)."""
-    parsed_schema = row_schema
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_scd2_batch(parse_envelopes(batch_df, parsed_schema), cfg, state_dir, batch_id)
-
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    Yields None for an empty batch, else a _Batch whose rows are each
+    key's last event after the truncate epoch, deletes kept. The epoch is
+    applied to the collapsed rows (last_event_sql): only a batch holding
+    a truncate pays a scalar subquery for it."""
+    text, key0 = _last_event_sql(cfg), cfg.key_columns[0]
+    with _materialized(parsed, text, key0, F.col("__tk").isNotNull()) as batch:
+        if batch is not None and batch.truncated:
+            epoch = batch.rows.select(F.max("__tk")).scalar()
+            batch = batch._replace(rows=batch.rows.filter(F.col("__ord") > epoch))
+        yield batch
 
 
 def start_streaming_dedup(
@@ -440,82 +311,6 @@ def start_session_windows(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_stateful_replica(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    row_schema=INVOICE_ROW,
-    trigger_available_now: bool = True,
-):
-    """E9: the replica as a CUSTOM STATEFUL OPERATOR — per-key running
-    state via applyInPandasWithState instead of the foreachBatch merge.
-
-    Each micro-batch emits one row per touched key with the post-batch
-    state (latest value by offset, or a tombstone row when the latest event
-    is a delete) — i.e. the update-mode changelog of the replica. State is
-    one (offset, value, deleted) triple per key, checkpointed by Spark.
-
-    Trade-off vs the foreachBatch MERGE (the default path): state lives in
-    the streaming state store (fast key lookups, no target-table rewrite)
-    but the queryable table must be derived from the emitted changelog;
-    truncate events also cannot reach other keys' state from inside a
-    per-key group — route streams with truncates through the foreachBatch
-    path, which handles them exactly (test_streaming.py).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    parsed = parse_envelopes(stream, row_schema)
-    cls = classify_op(F.col("before"), F.col("after"))
-    flat = parsed.select(
-        F.col("offset"),
-        F.coalesce(F.col("after.order_id"), F.col("before.order_id")).alias("order_id"),
-        F.col("after.invoice_number").alias("invoice_number"),
-        cls.alias("op_class"),
-    ).filter(F.col("op_class") != "truncate")
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        max_off, value, deleted = state.get if state.exists else (-1, None, False)
-        for pdf in pdfs:
-            pdf = pdf.sort_values("offset")
-            for off, inv, op in zip(pdf["offset"], pdf["invoice_number"], pdf["op_class"]):
-                if off <= max_off:
-                    continue  # replayed/out-of-order duplicate: idempotent
-                max_off = int(off)
-                if op == "delete":
-                    value, deleted = None, True
-                else:
-                    value, deleted = int(inv), False
-        state.update((max_off, value, deleted))
-        yield pd.DataFrame(
-            [{"order_id": int(key[0]), "invoice_number": value, "is_deleted": deleted}]
-        )
-
-    out = flat.groupBy("order_id").applyInPandasWithState(
-        update,
-        outputStructType="order_id long, invoice_number long, is_deleted boolean",
-        stateStructType="max_off long, invoice_number long, deleted boolean",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-    # The parquet file sink is append-only, while a stateful operator needs
-    # update output mode — bridge with foreachBatch, appending each
-    # micro-batch's state changelog.
-    def append_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    writer = (
-        out.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
@@ -659,8 +454,10 @@ def read_replica_manifest(
     before: int | None = None,
     version: int | None = None,
 ) -> DataFrame | None:
-    """Current state of the manifest store (latest committed manifest),
-    or None. Untouched files are shared ACROSS versions by reference —
+    """Current state of a manifest store (latest committed manifest),
+    or None. It reads either kind of store: a replica
+    (start_replica_merge_manifest) or an SCD2 history (start_scd2_merge).
+    Untouched files are shared ACROSS versions by reference —
     reading version N touches only the files N's manifest lists.
     ``before`` reads the latest version STRICTLY BELOW that batch id.
 
@@ -777,7 +574,7 @@ def _write_agg(
     rows: pruning is exact, so no batch key lives in an untouched file.
     The base is the predecessor manifest's aggregate. Returns the path
     the manifest records."""
-    spark = batch.live.sparkSession
+    spark = batch.rows.sparkSession
     keys = list(cfg.key_columns)
     if cur is not None:
         # __present is an explicit key-existence marker from the state
@@ -789,9 +586,9 @@ def _write_agg(
         old_vals = cur.select(
             *keys, F.col(agg_col).alias("__old"), F.lit(True).alias("__present")
         )
-        j = batch.live.join(old_vals, keys, "left")
+        j = batch.rows.join(old_vals, keys, "left")
     else:
-        j = batch.live.withColumn("__old", F.lit(None).cast("double")).withColumn(
+        j = batch.rows.withColumn("__old", F.lit(None).cast("double")).withColumn(
             "__present", F.lit(None).cast("boolean")
         )
     is_del = F.col("__op") == "d"
@@ -816,6 +613,100 @@ def _write_agg(
     return rel
 
 
+def _prune(
+    spark: SparkSession, state_dir: str, prev: dict | None, keys: list
+) -> tuple[list, list, DataFrame | None]:
+    """Split manifest ``prev``'s files by a batch's sorted first-key
+    values: (touched, untouched, the touched files' rows or None). A file
+    is touched when its [min, max] key span contains at least one batch
+    key (exact bisect, driver-side, O(|batch| log)) or its stats are not
+    exact. Pruning is exact, so no batch key lives in an untouched file:
+    untouched files carry into the next version BY REFERENCE. The touched
+    rows are read under prev's schema: see read_replica_manifest —
+    mixed-vintage files read under the recorded widest schema."""
+    touched, untouched = [], []
+    for e in prev["files"] if prev else ():
+        if not e.get("exact", True) or _any_key_in_range(keys, e["min"], e["max"]):
+            touched.append(e)
+        else:
+            untouched.append(e)
+    if not touched:
+        return touched, untouched, None
+    cur = spark.read.schema(prev["schema_ddl"]).parquet(
+        *[os.path.join(state_dir, e["path"]) for e in touched]
+    )
+    return touched, untouched, cur
+
+
+def _write_version(
+    new_rows: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    key0: str,
+    prev: dict | None,
+    touched: list,
+    untouched: list,
+    batch_rows: int,
+    target_rows_per_file: int,
+) -> dict:
+    """Write a merge's new rows (the touched files' rewrite plus the
+    batch's rows, at most ``batch_rows`` of them) under
+    ``data/v{batch_id}`` and return manifest ``batch_id``: the untouched
+    files by reference, the new files with their key stats, under the
+    widest schema so far. The caller commits it (_commit_manifest)."""
+    # Flat write: the batch touches every file of a CLUSTERED store
+    # (exact, pairwise-disjoint key ranges), so nothing is carried by
+    # reference — the rows are written as they stand, with no
+    # sampling job and no range shuffle. Its files are sized by the
+    # scan splits and the batch's partitions, not by the target, and
+    # their ranges overlap, so the next batch that touches them (hot
+    # or uniform) is range-written and re-clusters them: a flat file
+    # stays unclustered only until a batch touches it, and a uniform
+    # feed alternates the two writes.
+    flat = (
+        bool(touched)
+        and not untouched
+        and all(e.get("exact", True) for e in prev["files"])
+        and not _overlapping(prev["files"])
+    )
+    if not flat:
+        # Range-partition new files by the stats key so hot key ranges
+        # stay CLUSTERED — the property that makes the next batch's
+        # pruning effective. File count scales with the rewritten
+        # mass, not the store.
+        est_rows = sum(e["rows"] for e in touched) + batch_rows
+        n_new = max(1, min(256, -(-est_rows // target_rows_per_file)))
+        new_rows = new_rows.repartitionByRange(n_new, F.col(key0))
+    rel = os.path.join("data", f"v{batch_id}")
+    new_rows.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    entries = untouched + _file_entries(state_dir, rel, key0)
+    # Widest-schema-so-far invariant (ADVICE r10): when pruning left
+    # ``touched`` empty, new_rows is just the batch's rows, whose schema
+    # can be NARROWER than the previous manifest's recorded one —
+    # recording it as-is would read the carried untouched files under a
+    # narrower schema. Union the previous manifest's schema with the
+    # batch's via Spark's own unionByName coercion (the same widening
+    # the touched-path read performs).
+    widest = new_rows.schema
+    if prev is not None:
+        widest = (
+            new_rows.sparkSession.createDataFrame([], prev["schema_ddl"])
+            .unionByName(new_rows.limit(0), allowMissingColumns=True)
+            .schema
+        )
+    return {
+        "batch_id": batch_id,
+        "key": key0,
+        "schema_ddl": ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in widest.fields
+        ),
+        "files": entries,
+        "total_rows": sum(e["rows"] for e in entries),
+        "files_total": len(prev["files"]) if prev else 0,
+        "files_touched": len(touched),
+    }
+
+
 def _merge_manifest_batch(
     parsed: DataFrame,
     cfg: ChangeTableConfig,
@@ -832,7 +723,6 @@ def _merge_manifest_batch(
     # a committed batch re-delivered by foreachBatch is skipped whole.
     if os.path.exists(os.path.join(_manifest_dir(state_dir), f"v{batch_id}.json")):
         return
-    key0 = cfg.key_columns[0]
     cols = [*cfg.key_columns, *cfg.value_columns]
     with _collapsed_batch(parsed, cfg) as batch:
         if batch is None:
@@ -850,28 +740,15 @@ def _merge_manifest_batch(
                 f"of {state_dir} records no aggregate to build on (a "
                 f"bootstrapped store, or batches merged without agg_col)"
             )
-        upserts = batch.live.filter(F.col("__op") != "d").select(*cols)
-        touched, untouched = [], []
-        if prev is not None:
-            # The batch's distinct first-key values, collected SORTED by
-            # the collapse's probe: bounded by the micro-batch contract (a
-            # batch is small; the store is what's big), and the price of
-            # EXACT file pruning.
-            for e in prev["files"]:
-                if not e.get("exact", True) or _any_key_in_range(
-                    batch.keys, e["min"], e["max"]
-                ):
-                    touched.append(e)
-                else:
-                    untouched.append(e)
-        cur = None
-        if touched:
-            # prev manifest's schema: see read_replica_manifest — mixed-
-            # vintage files read under the recorded widest schema
-            cur = spark.read.schema(prev["schema_ddl"]).parquet(
-                *[os.path.join(state_dir, e["path"]) for e in touched]
-            )
-            keys = batch.live.select(*cfg.key_columns)
+        upserts = batch.rows.filter(F.col("__op") != "d").select(*cols)
+        # The batch's distinct first-key values, collected SORTED by the
+        # collapse's probe: bounded by the micro-batch contract (a batch
+        # is small; the store is what's big), and the price of EXACT file
+        # pruning.
+        touched, untouched, cur = _prune(spark, state_dir, prev, batch.keys)
+        new_rows = upserts  # no file holds a batch key
+        if cur is not None:
+            keys = batch.rows.select(*cfg.key_columns)
             # broadcast anti join: the batch's key set broadcasts, the
             # touched-file rows never shuffle
             survivors = cur.join(
@@ -881,65 +758,12 @@ def _merge_manifest_batch(
             # grows a value column (Debezium schema-change events), rows
             # written before it carry NULL for the new column.
             new_rows = survivors.unionByName(upserts, allowMissingColumns=True)
-            # upsert mass sized by the batch's distinct key count (already
-            # collected for pruning)
-            est_rows = sum(e["rows"] for e in touched) + len(batch.keys)
-        else:
-            # no file holds a batch key: the upserts are all the new rows
-            new_rows = upserts
-            est_rows = max(1, len(batch.keys))
-        # Flat write: the batch touches every file of a CLUSTERED store
-        # (exact, pairwise-disjoint key ranges), so nothing is carried by
-        # reference — the rows are written as they stand, with no
-        # sampling job and no range shuffle. Its files are sized by the
-        # scan splits and the batch's partitions, not by the target, and
-        # their ranges overlap, so the next batch that touches them (hot
-        # or uniform) is range-written and re-clusters them: a flat file
-        # stays unclustered only until a batch touches it, and a uniform
-        # feed alternates the two writes.
-        flat = (
-            bool(touched)
-            and not untouched
-            and all(e.get("exact", True) for e in prev["files"])
-            and not _overlapping(prev["files"])
+        # upsert mass sized by the batch's distinct key count (already
+        # collected for pruning)
+        manifest = _write_version(
+            new_rows, state_dir, batch_id, cfg.key_columns[0], prev,
+            touched, untouched, len(batch.keys), target_rows_per_file,
         )
-        if not flat:
-            # Range-partition new files by the stats key so hot key ranges
-            # stay CLUSTERED — the property that makes the next batch's
-            # pruning effective. File count scales with the rewritten
-            # mass, not the store.
-            n_new = max(1, min(256, -(-est_rows // target_rows_per_file)))
-            new_rows = new_rows.repartitionByRange(n_new, F.col(key0))
-        rel = os.path.join("data", f"v{batch_id}")
-        new_rows.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
-        entries = untouched + _file_entries(state_dir, rel, key0)
-        # Widest-schema-so-far invariant (ADVICE r10): when pruning left
-        # ``touched`` empty, new_rows is just this batch's upserts, whose
-        # schema can be NARROWER than the previous manifest's recorded
-        # one — recording it as-is would read the carried untouched files
-        # under a narrower schema. Union the previous manifest's schema
-        # with the batch's via Spark's own unionByName coercion (the same
-        # widening the touched-path read performs).
-        if prev is not None:
-            widest = (
-                spark.createDataFrame([], prev["schema_ddl"])
-                .unionByName(new_rows.limit(0), allowMissingColumns=True)
-                .schema
-            )
-        else:
-            widest = new_rows.schema
-        manifest = {
-            "batch_id": batch_id,
-            "key": key0,
-            "schema_ddl": ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in widest.fields
-            ),
-            "files": entries,
-            "total_rows": sum(e["rows"] for e in entries),
-            "files_total": len(prev["files"]) if prev else 0,
-            "files_touched": len(touched),
-        }
         if agg_col is not None:
             manifest["agg"] = _write_agg(
                 batch, cur, prev, cfg, agg_col, state_dir, batch_id
@@ -1050,9 +874,7 @@ def start_replica_merge_manifest(
     the collapse orders by the binlog-coordinate total order
     (_ORDER_COORDINATE), which is valid ACROSS partitions — offsets alone
     are not. PK-changing updates are handled as delete(before.key) +
-    insert(after.key), identical to the batch snapshot path. If the
-    source can violate cross-batch order, use start_stateful_replica,
-    which tracks per-key max offset in state and skips stale events.
+    insert(after.key), identical to the batch snapshot path.
 
     ``agg_col`` turns on incremental aggregate maintenance (_write_agg).
     It needs every version to carry an aggregate, so it raises
@@ -1072,6 +894,112 @@ def start_replica_merge_manifest(
             target_rows_per_file,
             agg_col,
         )
+
+    writer = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _merge_scd2_batch(
+    parsed: DataFrame,
+    cfg: ChangeTableConfig,
+    state_dir: str,
+    batch_id: int,
+    target_rows_per_file: int = 200_000,
+) -> None:
+    """One micro-batch of parsed envelopes → SCD2 history version
+    ``batch_id`` of a manifest store (see start_scd2_merge).
+
+    The batch's changelog (changelog_sql, each event with its
+    _ORDER_COORDINATE as ``__ord``) is materialized once
+    (_materialized). Its versions come from scd2_history, the batch
+    operator itself. Across batches, the only stored rows that change
+    are the OPEN versions of keys the batch touches: their valid_to
+    becomes the key's FIRST in-batch ``__ord`` (any op closes — an update
+    supersedes, a delete terminates). The previous manifest is pruned by
+    the batch's first-key values, so only the files holding a touched key
+    are read; there the open versions are closed against the broadcast
+    closers, and those rows plus the batch's versions are written as the
+    batch's new files (_write_version). Every other file, closed versions
+    included, carries by reference: per-batch I/O is the touched files
+    plus the batch, not the history. A truncate in the batch wipes prior
+    history by dropping every reference (only the live epoch is
+    versioned — identical to the batch operator and R10).
+
+    Replaying batches 1..N through this merge yields byte-identical
+    history to running scd2_history over the concatenated changelog
+    (pinned in test_streaming_scd2.py)."""
+    spark = parsed.sparkSession
+    if os.path.exists(os.path.join(_manifest_dir(state_dir), f"v{batch_id}.json")):
+        return  # committed: see _merge_manifest_batch
+    key0, op = cfg.key_columns[0], cfg.op_column
+    with _materialized(parsed, _changelog_sql(cfg), key0, F.col(op) == "t") as batch:
+        if batch is None:
+            return
+        changelog = batch.rows
+        versions = scd2_history(
+            changelog,
+            key_cols=cfg.key_columns,
+            value_cols=cfg.value_columns,
+            order_col="__ord",
+            op_col=op,
+        )
+        prev = None if batch.truncated else _latest_manifest(state_dir, before=batch_id)
+        touched, untouched, cur = _prune(spark, state_dir, prev, batch.keys)
+        new_rows = versions
+        if cur is not None:
+            closer = changelog.groupBy(*cfg.key_columns).agg(
+                F.min("__ord").alias("__first")
+            )
+            closing = F.col("is_current") & F.col("__first").isNotNull()
+            carried = (
+                cur.join(F.broadcast(closer), list(cfg.key_columns), "left")
+                .withColumn(
+                    "valid_to",
+                    F.when(closing, F.col("__first")).otherwise(F.col("valid_to")),
+                )
+                .withColumn("is_current", F.col("is_current") & F.col("__first").isNull())
+                .drop("__first")
+            )
+            # allowMissingColumns: schema evolution, as in the replica
+            new_rows = carried.unionByName(versions, allowMissingColumns=True)
+        manifest = _write_version(
+            new_rows, state_dir, batch_id, key0, prev,
+            touched, untouched, batch.n, target_rows_per_file,
+        )
+        _commit_manifest(state_dir, batch_id, manifest)
+
+
+def start_scd2_merge(
+    stream: DataFrame,
+    cfg: ChangeTableConfig,
+    state_dir: str,
+    checkpoint: str,
+    row_schema=INVOICE_ROW,
+    trigger_available_now: bool = True,
+):
+    """SCD Type-2 history sink: the warehouse history table, maintained
+    incrementally from the CDC stream (the streaming counterpart of the
+    cdc_scd2 registry query). One row per version: the key and value
+    columns, valid_from / valid_to (order coordinates; valid_to NULL
+    while open) and is_current.
+
+    The history is a manifest store, the replica's layout
+    (start_replica_merge_manifest) with one row per version instead of
+    one per key: a batch rewrites only the files holding a key it
+    touches (_merge_scd2_batch), and read_replica_manifest (with time
+    travel), vacuum_manifest_store and compact_manifest_store serve it
+    unchanged. Same ordering contract and crash-replay idempotence as the
+    replica; current versions of the history always equal the replica's
+    state (pinned in tests)."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        _merge_scd2_batch(parse_envelopes(batch_df, row_schema), cfg, state_dir, batch_id)
 
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
@@ -1175,9 +1103,9 @@ def compact_manifest_store(
     commit markers (bootstrap -1, stream ids 0..), so _merge_manifest_
     batch's replay guard and the next batch's id are unaffected; the
     superseded files become garbage for vacuum_manifest_store.
-    Rows are merely rewritten (the store holds one row per key by the
-    merge invariant), so replica content is bit-identical — pinned by
-    the replay-equality test on a compacted store.
+    Rows are rewritten, never changed or deduplicated, so the store's
+    content — a replica's rows or a history's versions — is identical —
+    pinned by the replay-equality tests on compacted stores.
 
     No-op (returns None) when no files overlap and fewer than
     ``min_files`` small files exist. Like vacuum, must not run
@@ -1335,22 +1263,6 @@ def start_imi_index_maintenance(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def vacuum_state(state_dir: str, keep: int = 3) -> list[int]:
-    """Drop all but the newest ``keep`` committed versions of an SCD2
-    history store (start_scd2_merge), which accumulates one directory per
-    micro-batch; older versions exist only for readers that started
-    before the latest commit. Returns the removed version numbers. (The
-    replica's manifest store has its own vacuum_manifest_store.)
-    """
-    import shutil
-
-    versions = _state_versions(state_dir)
-    doomed = versions[:-keep] if keep > 0 else versions
-    for v in doomed:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    return doomed
 
 
 def start_enriched_log(

@@ -160,7 +160,7 @@ class TestReplay:
 
     def test_pk_changing_updates_streaming_replay(self, spark, tmp_path):
         """Same workload through the streaming merge across a restart —
-        batch and streaming paths share envelope_changelog, so both must
+        batch and streaming paths share changelog_sql, so both must
         land on the oracle state."""
         import os
 

@@ -397,18 +397,25 @@ T = ("t", 0, 0, 0)
 BOTH_WRITES = (
     [C(1, 1), C(3, 3), ("u", 1, 0, 2), ("u", 3, 0, 4), C(5, 5)], [2], True, 0
 )
+# a truncate mid-batch, between two batches of upserts
+TRUNCATE_MID_BATCH = (
+    [C(1, 1), C(3, 3), ("u", 1, 0, 5), T, C(5, 5), ("d", 5, 0, 0), C(7, 7),
+     ("pk", 7, 1, 8)], [2], True, 3,
+)
+# a batch that is only a truncate
+TRUNCATE_ONLY_BATCH = (
+    [C(1, 1), ("tomb", 0, 0, 0), C(3, 3), T, C(5, 5)], [3, 4], False, 0
+)
+# truncate then inserts in one batch on the bootstrapped manifest stores:
+# the truncate events' NULL-key group must stay out of the pruning keys
+TRUNCATE_THEN_INSERTS = ([T, C(3, 30), C(5, 50), ("bad", 0, 0, 0)], [], True, 1)
 
 
 @given(stream_spec)
 @settings(max_examples=6, deadline=None)
-# a truncate mid-batch, between two batches of upserts
-@example(([C(1, 1), C(3, 3), ("u", 1, 0, 5), T, C(5, 5), ("d", 5, 0, 0), C(7, 7),
-           ("pk", 7, 1, 8)], [2], True, 3))
-# a batch that is only a truncate
-@example(([C(1, 1), ("tomb", 0, 0, 0), C(3, 3), T, C(5, 5)], [3, 4], False, 0))
-# truncate then inserts in one batch on the bootstrapped manifest stores:
-# the truncate events' NULL-key group must stay out of the pruning keys
-@example(([T, C(3, 30), C(5, 50), ("bad", 0, 0, 0)], [], True, 1))
+@example(TRUNCATE_MID_BATCH)
+@example(TRUNCATE_ONLY_BATCH)
+@example(TRUNCATE_THEN_INSERTS)
 # both writes on the bootstrapped stores: batch 0 touches one of the two
 # files (clustered rewrite), batch 1 touches every file (flat rewrite)
 @example(BOTH_WRITES)
@@ -491,3 +498,86 @@ def test_replica_sinks_equal_sequential_replay(spark, spec):
                 ]
                 assert any(0 < t < n for t, n in writes), writes
                 assert any(0 < t == n for t, n in writes), writes
+
+
+# The SCD2 history store starts empty. At 2 rows per file batch 0's four
+# versions are [1, 3] and [5, 7]; batch 1 (key 1) touches only [1, 3],
+# and batch 2 touches every file
+SCD2_BOTH_WRITES = (
+    [C(1, 1), C(3, 3), C(5, 5), C(7, 7), ("u", 1, 0, 2), ("u", 1, 0, 3),
+     ("u", 3, 0, 4), ("u", 5, 0, 6), ("u", 7, 0, 8)], [4, 5], True, 0,
+)
+
+
+@given(stream_spec)
+@settings(max_examples=6, deadline=None)
+@example(TRUNCATE_MID_BATCH)
+@example(TRUNCATE_ONLY_BATCH)
+@example(TRUNCATE_THEN_INSERTS)
+@example(BOTH_WRITES)
+@example(SCD2_BOTH_WRITES)
+def test_scd2_sink_equals_batch_history(spark, spec):
+    """The SCD2 history sink, fed one micro-batch per file at 2 rows per
+    file (so batches prune, and write both ranged and flat), must hold
+    exactly scd2_history over the whole stream's changelog, and its
+    current versions must be the sequential replay."""
+    import os
+    import tempfile
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from simple_cdc_service_spark.config import INVOICE
+    from simple_cdc_service_spark.sources.changelog import parse_envelopes
+    from simple_cdc_service_spark.streaming import read_replica_manifest
+    from simple_cdc_service_spark.streaming.pipeline import (
+        _ORDER_COORDINATE,
+        KAFKA_LIKE_SCHEMA,
+        _manifest_versions,
+        _merge_scd2_batch,
+        _read_manifest,
+    )
+
+    cols = ["order_id", "invoice_number", "valid_from", "valid_to", "is_current"]
+
+    def versions(df):
+        rows = df.select(*cols).collect() if df is not None else []
+        return Counter(tuple(r) for r in rows)
+
+    with tempfile.TemporaryDirectory() as d:
+        src, hist = os.path.join(d, "src"), os.path.join(d, "hist")
+        n_batches = _write_stream(src, spec)
+
+        def merge(batch_df, batch_id):
+            _merge_scd2_batch(
+                parse_envelopes(batch_df), INVOICE, hist, batch_id,
+                target_rows_per_file=2,
+            )
+
+        ckpt = os.path.join(d, "ck_hist")
+        _batches_stream(spark, src).writeStream.foreachBatch(merge).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
+        commits = os.listdir(os.path.join(ckpt, "commits"))
+        assert sum(f.isdigit() for f in commits) == n_batches
+
+        parsed = parse_envelopes(
+            spark.read.schema(KAFKA_LIKE_SCHEMA).json(src)
+        ).withColumn("__ord", F.expr(_ORDER_COORDINATE))
+        want = cdc.scd2_history(
+            cdc.envelope_changelog(parsed, INVOICE, passthrough_cols=("__ord",)),
+            key_cols=("order_id",),
+            value_cols=("invoice_number",),
+            order_col="__ord",
+        )
+        got = read_replica_manifest(spark, hist)
+        assert versions(got) == versions(want)
+        current = {} if got is None else _replica(got.filter("is_current"))
+        assert current == stream_replay(spec[0], {})
+        if spec == SCD2_BOTH_WRITES:
+            writes = [
+                (m["files_touched"], m["files_total"])
+                for m in (_read_manifest(hist, v) for v in _manifest_versions(hist))
+            ]
+            assert any(0 < t < n for t, n in writes), writes
+            assert any(0 < t == n for t, n in writes), writes

@@ -133,7 +133,7 @@ class TestCrashRecoveryReplay:
 class TestPKChangingUpdate:
     """An update whose before.key != after.key must delete the old key and
     insert the new one — same semantics as the batch snapshot path
-    (operators/cdc.py envelope_changelog); previously the streaming merge
+    (operators/cdc.py changelog_sql); previously the streaming merge
     upserted the new key but left the stale old-key row behind."""
 
     @staticmethod
@@ -559,49 +559,6 @@ class TestSessionWindows:
         assert (1, 2) in got and (1, 1) in got and (2, 1) in got
 
 
-class TestStatefulReplica:
-    def test_state_survives_batches(self, spark, tmp_path):
-        from simple_cdc_service_spark.sources.changelog import _envelope
-        from simple_cdc_service_spark.streaming.pipeline import start_stateful_replica
-        from simple_cdc_service_spark.streaming import read_changelog_stream
-
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        b1 = [
-            json.dumps(_envelope("c", None, {"order_id": 1, "invoice_number": 10}, 1, 1)),
-            json.dumps(_envelope("c", None, {"order_id": 2, "invoice_number": 20}, 2, 2)),
-        ]
-        _write_batch(src, "b1.json", b1, 0)
-        start_stateful_replica(read_changelog_stream(spark, src), out, ckpt).awaitTermination()
-
-        # batch 2 updates key 1 and deletes key 2 — state from batch 1 must
-        # still be there (checkpointed GroupState), not recomputed from zero
-        b2 = [
-            json.dumps(_envelope("u", {"order_id": 1, "invoice_number": 10},
-                                 {"order_id": 1, "invoice_number": 11}, 3, 3)),
-            json.dumps(_envelope("d", {"order_id": 2, "invoice_number": 20}, None, 4, 4)),
-        ]
-        _write_batch(src, "b2.json", b2, 2)
-        start_stateful_replica(read_changelog_stream(spark, src), out, ckpt).awaitTermination()
-
-        rows = spark.read.parquet(out).collect()
-        # last emission per key = current state
-        latest = {}
-        for r in sorted(rows, key=lambda r: (r.order_id,)):
-            latest[r.order_id] = r
-        by_key = {}
-        # emissions are append-only; reconstruct per-key final state by the
-        # max invoice progression: batch2 rows have the later values
-        for r in rows:
-            prev = by_key.get(r.order_id)
-            if prev is None or (r.is_deleted and not prev.is_deleted) or (
-                r.invoice_number or 0) > (prev.invoice_number or 0):
-                by_key[r.order_id] = r
-        assert by_key[1].invoice_number == 11 and not by_key[1].is_deleted
-        assert by_key[2].is_deleted
-
-
 class TestMultiTableRouting:
     def test_two_tables_one_stream(self, spark, tmp_path):
         """Interleave two tables' envelopes (different schemas) in one
@@ -692,8 +649,13 @@ class TestSchemaEvolution:
 
 class TestVacuum:
     def test_keeps_newest_versions(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming import read_scd2, start_scd2_merge
-        from simple_cdc_service_spark.streaming.pipeline import vacuum_state
+        """vacuum_manifest_store on an SCD2 history store: older versions'
+        files go, the latest history reads unchanged."""
+        from simple_cdc_service_spark.streaming import (
+            start_scd2_merge,
+            vacuum_manifest_store,
+        )
+        from simple_cdc_service_spark.streaming.pipeline import _manifest_versions
 
         msgs, expected = generate_envelopes(n=300, seed=4, truncate_every=None, key_space=100)
         src = str(tmp_path / "src")
@@ -702,12 +664,12 @@ class TestVacuum:
         for i, (a, b) in enumerate([(0, 100), (100, 200), (200, 300)]):
             _write_batch(src, f"c{i}.json", msgs[a:b], a)
             _run(start_scd2_merge(read_changelog_stream(spark, src), INVOICE, state, ckpt))
-        import os as _os
 
-        assert len([d for d in _os.listdir(state) if d.startswith("v")]) >= 3
-        removed = vacuum_state(state, keep=1)
+        assert len(_manifest_versions(state)) >= 3
+        removed = vacuum_manifest_store(state, keep=1)
         assert len(removed) >= 2
-        current = read_scd2(spark, state).filter("is_current")
+        assert len(_manifest_versions(state)) == 1
+        current = read_replica_manifest(spark, state).filter("is_current")
         got = {r.order_id: r.invoice_number for r in current.collect()}
         assert got == expected  # latest state untouched
 

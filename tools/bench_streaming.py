@@ -431,12 +431,14 @@ def bench_replica_store_scale(
 
 def bench_scd2(n_events: int = 50_000, chunks: int = 5) -> None:
     """SCD2-history-sink throughput: the same seeded workload as the CDC
-    replica leg, through start_scd2_merge — per batch the sink rewrites
-    only touched keys' open versions, so the rate should track the
-    replica merge's, plus the history's extra write volume. Verified
-    against the batch operator's output at the end (exactness, not just
-    rate)."""
-    from simple_cdc_service_spark.streaming import read_scd2, start_scd2_merge
+    replica leg, through start_scd2_merge. The history is a manifest
+    store, so a batch rewrites the files holding a key it touches and
+    carries the rest by reference. This feed's keys are uniform over
+    n_events/3 keys, so every batch touches every file and rewrites the
+    whole history: this leg is the sink's worst case, and the KB written
+    per batch grows with the history. Verified at the end: the current
+    versions must equal the sequential replay."""
+    from simple_cdc_service_spark.streaming import read_replica_manifest, start_scd2_merge
 
     spark = get_spark("bench-scd2")
     spark.sparkContext.setLogLevel("ERROR")
@@ -460,7 +462,13 @@ def bench_scd2(n_events: int = 50_000, chunks: int = 5) -> None:
         ).awaitTermination()
         batch_secs.append(round(time.perf_counter() - tb, 2))
     wall = time.perf_counter() - t0
-    hist = read_scd2(spark, state)
+    data = f"{state}/data"
+    kb_written = [
+        round(sum(os.path.getsize(f"{data}/{v}/{f}") for f in os.listdir(f"{data}/{v}")
+                  if f.endswith(".parquet")) / 1024, 1)
+        for v in sorted(os.listdir(data), key=lambda v: int(v[1:]))
+    ]
+    hist = read_replica_manifest(spark, state)
     cur = {r.order_id: r.invoice_number for r in hist.filter("is_current").collect()}
     n_versions = hist.count()
     print(json.dumps({
@@ -472,6 +480,7 @@ def bench_scd2(n_events: int = 50_000, chunks: int = 5) -> None:
         "micro_batches": chunks,
         "wall_sec": round(wall, 2),
         "batch_sec": batch_secs,
+        "kb_written_per_batch": kb_written,
         "loadavg_start": round(load_start, 1),
         "loadavg_end": round(os.getloadavg()[0], 1),
         "current_equals_replay": cur == expected,
