@@ -17,20 +17,28 @@ Scale notes:
   * One versioned store, the manifest store, for the replica
     (start_replica_merge_manifest) and the SCD2 history
     (start_scd2_merge): versioned manifests that list the store's files
-    with their key stats. A batch rewrites only the files its keys land
+    with their key stats. A rewrite touches only the files its keys land
     in and carries the rest by reference — the local stand-in for
     Delta/Iceberg MERGE. When no file can be carried (uniform keys touch
     every file of a clustered store) the rewrite is written flat, as the
-    merge leaves it, with no range shuffle; the next batch that touches
+    merge leaves it, with no range shuffle; the next rewrite that touches
     those files re-clusters them. One vacuum, one compaction and one
     reader serve both.
-  * Each micro-batch is collapsed ONCE (_collapsed_batch): the parse is
-    one planned statement and the changelog derivation + last-event-per-
-    key another (max_by, one shuffle on the key), materialized with a
-    local checkpoint that every later step reads. Per-batch driver work —
-    plan building and job scheduling — is fixed overhead that dominates a
-    hot-key batch, so the statement texts are built once and each batch
-    runs a handful of jobs (pinned by test).
+  * The replica is MERGE-ON-READ (Iceberg v2 equality deletes, Hudi MOR
+    tables): each micro-batch writes only its collapsed changes, one
+    DELTA file, and readers resolve the deltas over the clustered files.
+    The rewrite above is a FOLD, paid once a target file's worth of delta
+    rows has built up, so a batch costs the batch, not the files it
+    touches. The SCD2 history has no deltas: each batch rewrites its
+    touched files.
+  * Each micro-batch is collapsed ONCE: the parse is one planned
+    statement and the changelog derivation + last-event-per-key another
+    (max_by, one shuffle on the key), written straight to the batch's
+    delta file, from which the driver reads what it needs with pyarrow.
+    Per-batch driver work — plan building and job scheduling — is fixed
+    overhead that dominates a hot-key batch, so the statement texts are
+    built once and a batch that does not fold runs two jobs (pinned by
+    test).
   * Kafka parallelism = topic partitions; OFFSETS ONLY ORDER WITHIN ONE
     PARTITION, so Kafka (partition, offset) is not a total order over a
     multi-partition topic. The batch-local collapse therefore orders by
@@ -192,28 +200,6 @@ def _materialized(parsed: DataFrame, text: str, key0: str, truncate: F.Column):
     finally:
         # the LogicalRDD under the checkpointed frame owns the blocks
         rows._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
-@contextlib.contextmanager
-def _collapsed_batch(parsed: DataFrame, cfg: ChangeTableConfig):
-    """Micro-batch collapse of the replica merge, run ONCE per batch:
-    envelope_changelog derivation (same as the batch snapshot — including
-    the PK-changing-update explode into delete(before.key) +
-    insert(after.key)) and last-event-per-key by the binlog-coordinate
-    total order, as one planned statement (last_event_sql), materialized
-    (_materialized). The anti-join keys, the upserts and the incremental
-    aggregate read it, so the parse and the collapse run once.
-
-    Yields None for an empty batch, else a _Batch whose rows are each
-    key's last event after the truncate epoch, deletes kept. The epoch is
-    applied to the collapsed rows (last_event_sql): only a batch holding
-    a truncate pays a scalar subquery for it."""
-    text, key0 = _last_event_sql(cfg), cfg.key_columns[0]
-    with _materialized(parsed, text, key0, F.col("__tk").isNotNull()) as batch:
-        if batch is not None and batch.truncated:
-            epoch = batch.rows.select(F.max("__tk")).scalar()
-            batch = batch._replace(rows=batch.rows.filter(F.col("__ord") > epoch))
-        yield batch
 
 
 def start_streaming_dedup(
@@ -459,6 +445,10 @@ def read_replica_manifest(
     (start_replica_merge_manifest) or an SCD2 history (start_scd2_merge).
     Untouched files are shared ACROSS versions by reference —
     reading version N touches only the files N's manifest lists.
+    A replica version's live deltas are resolved at read time
+    (_resolve): the base files' rows whose key a delta names give way to
+    that key's newest delta row, and delete rows drop out. A history
+    store has no deltas and reads its files as they stand.
     ``before`` reads the latest version STRICTLY BELOW that batch id.
 
     ``version`` is TIME TRAVEL (r11): read the store exactly as of
@@ -488,34 +478,35 @@ def read_replica_manifest(
         m = _latest_manifest(state_dir, before=before)
     if m is None:
         return None
-    paths = [os.path.join(state_dir, e["path"]) for e in m["files"]]
-    if not paths:
-        return spark.createDataFrame([], m["schema_ddl"])
-    # read under the MANIFEST's schema, not per-file inference: a store
-    # accretes files from many batches, and type widening (int→long on
-    # upsert) or schema evolution (new value column) leaves older
-    # untouched files narrower — the manifest records the widest schema
-    # so far; parquet upcasts/null-fills the old files under it, where
-    # mixed per-file inference refuses the read
-    return spark.read.schema(m["schema_ddl"]).parquet(*paths)
+    rows = _resolve(spark, state_dir, m, m["files"])
+    return rows if rows is not None else spark.createDataFrame([], m["schema_ddl"])
 
 
 def manifest_store_history(state_dir: str) -> list[dict]:
     """Commit history of a manifest store, oldest first — the Delta
     ``DESCRIBE HISTORY`` equivalent. One dict per retained committed
-    version: version (micro-batch id; -1 = bootstrap), total_rows,
-    n_files, files_touched (files rewritten by that batch's merge;
-    0 for bootstrap/full writes), and compacted_from when a compaction
-    has rewritten that version's file list. Driver-side metadata only —
-    reads the manifest JSONs, never the data files."""
+    version: version (micro-batch id; -1 = bootstrap), total_rows (rows
+    of the base files; the live deltas' rows are not resolved against
+    them, so it is the row count only when n_deltas is 0), n_files,
+    files_touched (base files rewritten by that version's batch: 0 for a
+    replica batch that did not fold, and for bootstrap/full writes),
+    n_deltas and delta_rows (the live delta files and their rows),
+    folded (that batch folded the deltas into the base files), and
+    compacted_from when a compaction has rewritten that version's file
+    list. Driver-side metadata only — reads the manifest JSONs, never the
+    data files."""
     out = []
     for v in _manifest_versions(state_dir):
         m = _read_manifest(state_dir, v)
+        deltas = m.get("deltas", [])
         h = {
             "version": v,
             "total_rows": m["total_rows"],
             "n_files": len(m["files"]),
             "files_touched": m.get("files_touched", 0),
+            "n_deltas": len(deltas),
+            "delta_rows": sum(e["rows"] for e in deltas),
+            "folded": m.get("folded", False),
         }
         if "compacted_from" in m:
             h["compacted_from"] = m["compacted_from"]
@@ -558,89 +549,176 @@ def read_agg(spark: SparkSession, state_dir: str):
 
 
 def _write_agg(
-    batch: _Batch,
-    cur: DataFrame | None,
+    spark: SparkSession,
+    m: dict,
+    delta: list[dict],
     prev: dict | None,
-    cfg: ChangeTableConfig,
     agg_col: str,
     state_dir: str,
-    batch_id: int,
 ) -> str:
     """INCREMENTAL AGGREGATE MAINTENANCE (a streaming materialized view):
     a (sum_value, n_keys) row kept at state_dir/agg/v{N}, updated by
     per-key DELTAS — upsert contributes (new − old), delete contributes
     (−old), truncate resets — so the aggregate is never recomputed from
-    the full store. The old values come from ``cur``, the touched files'
-    rows: pruning is exact, so no batch key lives in an untouched file.
-    The base is the predecessor manifest's aggregate. Returns the path
-    the manifest records."""
-    spark = batch.rows.sparkSession
-    keys = list(cfg.key_columns)
-    if cur is not None:
-        # __present is an explicit key-existence marker from the state
-        # join. It must NOT be inferred from __old's nullness: schema
-        # evolution (allowMissingColumns in the merge) backfills NULL for
-        # a new column on pre-evolution rows, so a present key can carry
-        # a NULL agg value — inferring absence from that double-counts the
-        # key on upsert (+1) and drops its delete (0), drifting n_keys.
-        old_vals = cur.select(
-            *keys, F.col(agg_col).alias("__old"), F.lit(True).alias("__present")
+    the full store. The batch's rows are its delta files ``delta`` of
+    version ``m``. The old values come from the previous version resolved
+    over the base files that hold a batch key (_resolve): pruning is
+    exact, so no batch key lives in an untouched file. The base is the
+    predecessor manifest's aggregate. Returns the path the manifest
+    records."""
+    keys = m["keys"]
+    batch = _read(spark, state_dir, m["schema_ddl"] + _DELTA_COLS, delta)
+    d_sum, d_n = 0.0, 0
+    if batch is not None:
+        cur = None
+        if prev is not None:
+            touched, _ = _prune(prev, _delta_keys(state_dir, delta, m["key"]))
+            cur = _resolve(spark, state_dir, prev, touched)
+        if cur is not None:
+            # __present is an explicit key-existence marker from the state
+            # join. It must NOT be inferred from __old's nullness: schema
+            # evolution (allowMissingColumns in the merge) backfills NULL
+            # for a new column on pre-evolution rows, so a present key can
+            # carry a NULL agg value — inferring absence from that
+            # double-counts the key on upsert (+1) and drops its delete
+            # (0), drifting n_keys.
+            old_vals = cur.select(
+                *keys, F.col(agg_col).alias("__old"), F.lit(True).alias("__present")
+            )
+            j = batch.join(old_vals, keys, "left")
+        else:
+            j = batch.withColumn("__old", F.lit(None).cast("double")).withColumn(
+                "__present", F.lit(None).cast("boolean")
+            )
+        is_del = F.col("__op") == "d"
+        present = F.col("__present").isNotNull()
+        old = F.coalesce(F.col("__old").cast("double"), F.lit(0.0))
+        d_sum_col = F.when(is_del, -old).otherwise(F.col(agg_col).cast("double") - old)
+        d_n_col = F.when(is_del, F.when(present, -1).otherwise(0)).otherwise(
+            F.when(present, 0).otherwise(1)
         )
-        j = batch.rows.join(old_vals, keys, "left")
-    else:
-        j = batch.rows.withColumn("__old", F.lit(None).cast("double")).withColumn(
-            "__present", F.lit(None).cast("boolean")
-        )
-    is_del = F.col("__op") == "d"
-    present = F.col("__present").isNotNull()
-    old = F.coalesce(F.col("__old").cast("double"), F.lit(0.0))
-    d_sum = F.when(is_del, -old).otherwise(F.col(agg_col).cast("double") - old)
-    d_n = F.when(is_del, F.when(present, -1).otherwise(0)).otherwise(
-        F.when(present, 0).otherwise(1)
-    )
-    deltas = j.agg(
-        F.coalesce(F.sum(d_sum), F.lit(0.0)).alias("d_sum"),
-        F.coalesce(F.sum(d_n), F.lit(0)).cast("long").alias("d_n"),
-    ).collect()[0]
+        d_sum, d_n = j.agg(
+            F.coalesce(F.sum(d_sum_col), F.lit(0.0)),
+            F.coalesce(F.sum(d_n_col), F.lit(0)).cast("long"),
+        ).collect()[0]
     base = _agg_row(spark, state_dir, prev) if prev else None
     base_sum = base.sum_value if base else 0.0
     base_n = base.n_keys if base else 0
-    rel = os.path.join("agg", f"v{batch_id}")
+    rel = os.path.join("agg", f"v{m['batch_id']}")
     spark.createDataFrame(
-        [(float(base_sum + deltas.d_sum), int(base_n + deltas.d_n))],
+        [(float(base_sum + d_sum), int(base_n + d_n))],
         "sum_value double, n_keys long",
     ).write.mode("overwrite").parquet(os.path.join(state_dir, rel))
     return rel
 
 
-def _prune(
-    spark: SparkSession, state_dir: str, prev: dict | None, keys: list
-) -> tuple[list, list, DataFrame | None]:
-    """Split manifest ``prev``'s files by a batch's sorted first-key
-    values: (touched, untouched, the touched files' rows or None). A file
-    is touched when its [min, max] key span contains at least one batch
-    key (exact bisect, driver-side, O(|batch| log)) or its stats are not
-    exact. Pruning is exact, so no batch key lives in an untouched file:
-    untouched files carry into the next version BY REFERENCE. The touched
-    rows are read under prev's schema: see read_replica_manifest —
-    mixed-vintage files read under the recorded widest schema."""
+# The columns a delta file adds to the store's key and value columns:
+# the op of each key's last event in the batch, and the batch id.
+_DELTA_COLS = ", `__op` string, `__v` bigint"
+
+
+def _read(
+    spark: SparkSession, state_dir: str, ddl: str, entries: list[dict]
+) -> DataFrame | None:
+    """The manifest ``entries``' files as one frame, or None for none.
+    Read under the MANIFEST's schema, not per-file inference: a store
+    accretes files from many batches, and type widening (int→long on
+    upsert) or schema evolution (new value column) leaves older
+    untouched files narrower — the manifest records the widest schema
+    so far; parquet upcasts/null-fills the old files under it, where
+    mixed per-file inference refuses the read."""
+    if not entries:
+        return None
+    return spark.read.schema(ddl).parquet(
+        *[os.path.join(state_dir, e["path"]) for e in entries]
+    )
+
+
+def _resolve(
+    spark: SparkSession, state_dir: str, m: dict, files: list[dict]
+) -> DataFrame | None:
+    """MERGE-ON-READ: manifest ``m``'s base ``files`` with m's live
+    deltas applied, or None when there are neither. A delta holds one
+    row per key (the key's last event in its batch), so a key's last
+    event over the deltas is its row in the newest delta that names it
+    (max_by ``__v``). Base rows whose key a delta names give way to that
+    event, and delete events drop out. The one resolver behind
+    read_replica_manifest (every file), the fold (the touched files) and
+    the aggregate's old values. The delta keys broadcast: the fold bounds
+    the live deltas to about a target file's worth of rows."""
+    base = _read(spark, state_dir, m["schema_ddl"], files)
+    deltas = m.get("deltas")
+    if not deltas:
+        return base
+    keys = m["keys"]
+    last = _read(spark, state_dir, m["schema_ddl"] + _DELTA_COLS, deltas)
+    cols = last.columns[:-2]  # the key and value columns
+    last = last.groupBy(*keys).agg(
+        *[F.max_by(c, "__v").alias(c) for c in [*cols, "__op"] if c not in keys]
+    )
+    upserts = last.filter(F.col("__op") != "d").select(*cols)
+    if base is None:
+        return upserts
+    survivors = base.join(F.broadcast(last.select(*keys)), keys, "left_anti")
+    return survivors.unionByName(upserts)
+
+
+def _delta_keys(state_dir: str, deltas: list[dict], key0: str) -> list:
+    """The sorted distinct first-key values of the ``deltas`` files, read
+    by the driver with pyarrow: one column of a bounded set of small
+    files, no Spark job. NULL keys are left out: no file range holds
+    them, and sorted() cannot order None against keys."""
+    import pyarrow.parquet as pq
+
+    return sorted({
+        k
+        for e in deltas
+        for k in pq.read_table(
+            os.path.join(state_dir, e["path"]), columns=[key0]
+        )[key0].to_pylist()
+        if k is not None
+    })
+
+
+def _prune(prev: dict | None, keys: list) -> tuple[list, list]:
+    """Split manifest ``prev``'s files by sorted first-key values
+    ``keys``: (touched, untouched). A file is touched when its [min, max]
+    key span contains at least one of the keys (exact bisect,
+    driver-side, O(|keys| log)) or its stats are not exact. Pruning is
+    exact, so no key lives in an untouched file: untouched files carry
+    into the next version BY REFERENCE."""
     touched, untouched = [], []
     for e in prev["files"] if prev else ():
         if not e.get("exact", True) or _any_key_in_range(keys, e["min"], e["max"]):
             touched.append(e)
         else:
             untouched.append(e)
-    if not touched:
-        return touched, untouched, None
-    cur = spark.read.schema(prev["schema_ddl"]).parquet(
-        *[os.path.join(state_dir, e["path"]) for e in touched]
-    )
-    return touched, untouched, cur
+    return touched, untouched
+
+
+def _widest_ddl(prev: dict | None, rows: DataFrame) -> str:
+    """The schema DDL a version records: ``rows``' schema widened by the
+    previous manifest's. Widest-schema-so-far invariant (ADVICE r10): a
+    version's new rows can be NARROWER than the previous manifest's
+    recorded schema (a batch's rows alone, or an older value column
+    missing) — recording them as-is would read the carried files under a
+    narrower schema. Union the previous manifest's schema with the rows'
+    via Spark's own unionByName coercion (the same widening the read of
+    mixed-vintage files performs). Analysis only, no job."""
+    widest = rows.schema
+    if prev is not None:
+        widest = (
+            rows.sparkSession.createDataFrame([], prev["schema_ddl"])
+            .unionByName(rows.limit(0), allowMissingColumns=True)
+            .schema
+        )
+    return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in widest.fields)
 
 
 def _write_version(
     new_rows: DataFrame,
     state_dir: str,
+    rel: str,
     batch_id: int,
     key0: str,
     prev: dict | None,
@@ -649,19 +727,19 @@ def _write_version(
     batch_rows: int,
     target_rows_per_file: int,
 ) -> dict:
-    """Write a merge's new rows (the touched files' rewrite plus the
-    batch's rows, at most ``batch_rows`` of them) under
-    ``data/v{batch_id}`` and return manifest ``batch_id``: the untouched
-    files by reference, the new files with their key stats, under the
-    widest schema so far. The caller commits it (_commit_manifest)."""
+    """Write a rewrite's new rows (the touched files' rows merged with
+    the batch's, at most ``batch_rows`` of which are new) under ``rel``
+    and return manifest ``batch_id``: the untouched files by reference,
+    the new files with their key stats, under the widest schema so far.
+    The caller commits it (_commit_manifest)."""
     # Flat write: the batch touches every file of a CLUSTERED store
     # (exact, pairwise-disjoint key ranges), so nothing is carried by
     # reference — the rows are written as they stand, with no
     # sampling job and no range shuffle. Its files are sized by the
     # scan splits and the batch's partitions, not by the target, and
-    # their ranges overlap, so the next batch that touches them (hot
+    # their ranges overlap, so the next rewrite that touches them (hot
     # or uniform) is range-written and re-clusters them: a flat file
-    # stays unclustered only until a batch touches it, and a uniform
+    # stays unclustered only until a rewrite touches it, and a uniform
     # feed alternates the two writes.
     flat = (
         bool(touched)
@@ -671,40 +749,89 @@ def _write_version(
     )
     if not flat:
         # Range-partition new files by the stats key so hot key ranges
-        # stay CLUSTERED — the property that makes the next batch's
+        # stay CLUSTERED — the property that makes the next rewrite's
         # pruning effective. File count scales with the rewritten
         # mass, not the store.
         est_rows = sum(e["rows"] for e in touched) + batch_rows
         n_new = max(1, min(256, -(-est_rows // target_rows_per_file)))
         new_rows = new_rows.repartitionByRange(n_new, F.col(key0))
-    rel = os.path.join("data", f"v{batch_id}")
     new_rows.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
     entries = untouched + _file_entries(state_dir, rel, key0)
-    # Widest-schema-so-far invariant (ADVICE r10): when pruning left
-    # ``touched`` empty, new_rows is just the batch's rows, whose schema
-    # can be NARROWER than the previous manifest's recorded one —
-    # recording it as-is would read the carried untouched files under a
-    # narrower schema. Union the previous manifest's schema with the
-    # batch's via Spark's own unionByName coercion (the same widening
-    # the touched-path read performs).
-    widest = new_rows.schema
-    if prev is not None:
-        widest = (
-            new_rows.sparkSession.createDataFrame([], prev["schema_ddl"])
-            .unionByName(new_rows.limit(0), allowMissingColumns=True)
-            .schema
-        )
     return {
         "batch_id": batch_id,
         "key": key0,
-        "schema_ddl": ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in widest.fields
-        ),
+        "schema_ddl": _widest_ddl(prev, new_rows),
         "files": entries,
         "total_rows": sum(e["rows"] for e in entries),
         "files_total": len(prev["files"]) if prev else 0,
         "files_touched": len(touched),
     }
+
+
+def _write_delta(
+    parsed: DataFrame, cfg: ChangeTableConfig, state_dir: str, batch_id: int
+) -> tuple[list[dict], bool, DataFrame] | None:
+    """Collapse a micro-batch ONCE, straight into its DELTA file under
+    ``data/v{batch_id}``: the envelope_changelog derivation (same as the
+    batch snapshot — including the PK-changing-update explode into
+    delete(before.key) + insert(after.key)) and last-event-per-key by the
+    binlog-coordinate total order, as one planned statement
+    (last_event_sql), plus the batch id as ``__v``. Deletes are kept:
+    they erase the key's state when the deltas are resolved.
+
+    The driver reads the rest from the written file with pyarrow, with no
+    Spark job: emptiness and rows from the footer, the truncate from the
+    ``__tk`` column. Only a batch holding a truncate is written twice:
+    its delta keeps the rows after the truncate epoch, which a scalar
+    subquery over the same statement selects (last_event_sql).
+
+    Returns None for an empty batch, else (the delta's manifest entries,
+    whether the batch truncates, the statement's key and value columns —
+    the batch's schema, for analysis only)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    rows = parsed.sparkSession.sql(_last_event_sql(cfg), parsed=parsed)
+    rel = os.path.join("data", f"v{batch_id}")
+
+    def write(out: DataFrame) -> list[dict]:
+        out = out.drop("__ord").withColumn("__v", F.lit(batch_id).cast("long"))
+        out.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+        return _file_entries(state_dir, rel, cfg.key_columns[0])
+
+    entries = write(rows)
+    if not entries:
+        shutil.rmtree(os.path.join(state_dir, rel))
+        return None
+    truncated = any(
+        pq.read_table(os.path.join(state_dir, e["path"]), columns=["__tk"])[
+            "__tk"
+        ].null_count < e["rows"]
+        for e in entries
+    )
+    if truncated:
+        epoch = rows.select(F.max("__tk")).scalar()
+        entries = write(rows.filter(F.col("__ord") > epoch))
+    return entries, truncated, rows.select(*cfg.key_columns, *cfg.value_columns)
+
+
+def _fold(
+    spark: SparkSession, state_dir: str, m: dict, target_rows_per_file: int
+) -> dict:
+    """Fold version ``m``'s live deltas into its base files: prune m's
+    files by the deltas' keys (_delta_keys), resolve the touched files
+    (_resolve) and write them as version m's new files under
+    ``data/f{B}`` (_write_version: flat, or range-partitioned to keep
+    the store clustered). Returns m with those files and no deltas."""
+    keys = _delta_keys(state_dir, m["deltas"], m["key"])
+    touched, untouched = _prune(m, keys)
+    written = _write_version(
+        _resolve(spark, state_dir, m, touched),
+        state_dir, os.path.join("data", f"f{m['batch_id']}"), m["batch_id"],
+        m["key"], m, touched, untouched, len(keys), target_rows_per_file,
+    )
+    return dict(m, **written, deltas=[], folded=True)
 
 
 def _merge_manifest_batch(
@@ -717,58 +844,42 @@ def _merge_manifest_batch(
 ) -> None:
     """One micro-batch of parsed envelopes → manifest version
     ``batch_id`` (see start_replica_merge_manifest). Shared by the
-    single-table and multi-table sinks."""
+    single-table, multi-table and ``agg_col`` sinks."""
     spark = parsed.sparkSession
     # Idempotent crash replay: the manifest file IS the commit point —
     # a committed batch re-delivered by foreachBatch is skipped whole.
     if os.path.exists(os.path.join(_manifest_dir(state_dir), f"v{batch_id}.json")):
         return
-    cols = [*cfg.key_columns, *cfg.value_columns]
-    with _collapsed_batch(parsed, cfg) as batch:
-        if batch is None:
-            return
-        prev = (
-            None
-            if batch.truncated
-            else _latest_manifest(state_dir, before=batch_id)
+    delta = _write_delta(parsed, cfg, state_dir, batch_id)
+    if delta is None:
+        return
+    entries, truncated, cols = delta
+    prev = None if truncated else _latest_manifest(state_dir, before=batch_id)
+    if agg_col is not None and prev is not None and "agg" not in prev:
+        # starting the sum at 0 would silently leave out every row
+        # the predecessor version holds
+        raise ValueError(
+            f"agg_col={agg_col!r}: manifest version {prev['batch_id']} "
+            f"of {state_dir} records no aggregate to build on (a "
+            f"bootstrapped store, or batches merged without agg_col)"
         )
-        if agg_col is not None and prev is not None and "agg" not in prev:
-            # starting the sum at 0 would silently leave out every row
-            # the predecessor version holds
-            raise ValueError(
-                f"agg_col={agg_col!r}: manifest version {prev['batch_id']} "
-                f"of {state_dir} records no aggregate to build on (a "
-                f"bootstrapped store, or batches merged without agg_col)"
-            )
-        upserts = batch.rows.filter(F.col("__op") != "d").select(*cols)
-        # The batch's distinct first-key values, collected SORTED by the
-        # collapse's probe: bounded by the micro-batch contract (a batch
-        # is small; the store is what's big), and the price of EXACT file
-        # pruning.
-        touched, untouched, cur = _prune(spark, state_dir, prev, batch.keys)
-        new_rows = upserts  # no file holds a batch key
-        if cur is not None:
-            keys = batch.rows.select(*cfg.key_columns)
-            # broadcast anti join: the batch's key set broadcasts, the
-            # touched-file rows never shuffle
-            survivors = cur.join(
-                F.broadcast(keys), list(cfg.key_columns), "left_anti"
-            )
-            # allowMissingColumns: schema evolution. When the table config
-            # grows a value column (Debezium schema-change events), rows
-            # written before it carry NULL for the new column.
-            new_rows = survivors.unionByName(upserts, allowMissingColumns=True)
-        # upsert mass sized by the batch's distinct key count (already
-        # collected for pruning)
-        manifest = _write_version(
-            new_rows, state_dir, batch_id, cfg.key_columns[0], prev,
-            touched, untouched, len(batch.keys), target_rows_per_file,
-        )
-        if agg_col is not None:
-            manifest["agg"] = _write_agg(
-                batch, cur, prev, cfg, agg_col, state_dir, batch_id
-            )
-        _commit_manifest(state_dir, batch_id, manifest)
+    # a truncate drops every file and delta reference of prev
+    m = {
+        "batch_id": batch_id,
+        "key": cfg.key_columns[0],
+        "keys": list(cfg.key_columns),
+        "schema_ddl": _widest_ddl(prev, cols),
+        "files": prev["files"] if prev else [],
+        "deltas": [*(prev.get("deltas", []) if prev else []), *entries],
+        "files_total": len(prev["files"]) if prev else 0,
+        "files_touched": 0,
+    }
+    if agg_col is not None:
+        m["agg"] = _write_agg(spark, m, entries, prev, agg_col, state_dir)
+    if sum(e["rows"] for e in m["deltas"]) >= target_rows_per_file:
+        m = _fold(spark, state_dir, m, target_rows_per_file)
+    m["total_rows"] = sum(e["rows"] for e in m["files"])
+    _commit_manifest(state_dir, batch_id, m)
 
 
 def bootstrap_manifest_store(
@@ -828,40 +939,55 @@ def start_replica_merge_manifest(
     agg_col: str | None = None,
 ):
     """Sink 2: the replica, maintained by an idempotent per-batch merge
-    into a MANIFEST STORE — versioned, with per-batch I/O bounded by
-    FILE-LEVEL KEY STATISTICS.
+    into a MANIFEST STORE — versioned, MERGE-ON-READ, with the rewrite's
+    I/O bounded by FILE-LEVEL KEY STATISTICS.
 
     Store layout:
-      state_dir/data/v{B}/part-*.parquet   — files WRITTEN by batch B
-      state_dir/manifest/v{B}.json         — the COMMIT: the list of
-        files (from any prior batch) composing version B's state, each
-        with (rows, min/max of the first key column).
+      state_dir/data/v{B}/part-*.parquet   — batch B's DELTA: each key's
+        last event in the batch (key and value columns, ``__op``,
+        ``__tk``, and the batch id ``__v``), deletes kept.
+      state_dir/data/f{B}/part-*.parquet   — the clustered files batch B
+        wrote when it folded.
+      state_dir/manifest/v{B}.json         — the COMMIT: the list of base
+        ``files`` (from any prior batch) and live ``deltas`` composing
+        version B's state, each with (rows, min/max of the first key
+        column); ``folded`` marks a batch that folded.
       state_dir/agg/v{B}/                  — with ``agg_col``: the
         incremental (sum_value, n_keys) aggregate of version B, written
         before the manifest that names it (read_agg).
 
-    Per micro-batch: collapse to last-event-per-key ONCE
-    (_collapsed_batch: one planned statement, materialized), prune the
-    previous manifest to files whose [min, max] key span contains at
-    least one batch key (exact bisect over the batch's sorted key set —
-    driver-side, O(|batch| log) ), and anti-join ONLY those files' rows
-    against the broadcast batch keys; survivors + upserts become the
-    batch's new files, and the untouched files carry into the new
-    manifest BY REFERENCE. A truncate in the batch wipes prior state by
-    dropping every reference (files become garbage for
-    vacuum_manifest_store). Re-running a committed batch after a crash is
-    a no-op: its manifest, renamed into place last, is the commit.
+    Per micro-batch: collapse to last-event-per-key ONCE, written
+    straight to the batch's delta (_write_delta: one planned statement,
+    two jobs), and commit a manifest that carries the previous version's
+    files and deltas BY REFERENCE and appends the new delta. Readers
+    resolve the deltas over the files (_resolve). A truncate in the batch
+    wipes prior state by dropping every file and delta reference (they
+    become garbage for vacuum_manifest_store); its delta keeps only the
+    events after the truncate. Re-running a committed batch after a crash
+    is a no-op: its manifest, renamed into place last, is the commit; an
+    uncommitted attempt's files are overwritten by the rerun.
 
-    The write follows the prune result. A hot-key feed (the realistic
-    CDC shape) touches the few files its key range lives in, and the new
-    files are range-partitioned by the key so the range stays clustered:
-    O(touched + batch) I/O. A batch that touches every file of a
-    clustered store (pairwise-disjoint key ranges) can carry nothing by
+    The FOLD rule: once the live deltas hold ``target_rows_per_file``
+    rows or more, the batch that brings them there folds them into the
+    base files (_fold) before it commits: it prunes the files to those
+    whose [min, max] key span contains at least one delta key (exact
+    bisect over the deltas' sorted keys — driver-side, O(|deltas| log)),
+    resolves ONLY those files against the deltas, and writes them as its
+    new files; the untouched files carry into the manifest BY REFERENCE.
+    So the rewrite — the cost the batch used to pay every time — is paid
+    once per target file's worth of changes, and no reader resolves more
+    than about that many delta rows.
+
+    The fold's write follows the prune result. A hot-key feed (the
+    realistic CDC shape) touches the few files its key range lives in,
+    and the new files are range-partitioned by the key so the range stays
+    clustered: O(touched + deltas) I/O. A fold that touches every file of
+    a clustered store (pairwise-disjoint key ranges) can carry nothing by
     reference, so its rows are written as they stand: the full rewrite
     with no sampling job and no range shuffle. Those files overlap, so
-    the next batch that touches them is range-written and re-clusters
+    the next fold that touches them is range-written and re-clusters
     them; a uniform-key feed alternates the two writes. Key-RANGE stats
-    prune by what the batch actually touches; hash buckets, the
+    prune by what the deltas actually touch; hash buckets, the
     alternative, spread a high-entropy batch across 100% of partitions
     (a hash-bucketed store measured ~50x slower than the flat rewrite on
     uniform keys and ~11 s per hot-key batch against ~1.5 s here,
@@ -876,13 +1002,14 @@ def start_replica_merge_manifest(
     are not. PK-changing updates are handled as delete(before.key) +
     insert(after.key), identical to the batch snapshot path.
 
-    ``agg_col`` turns on incremental aggregate maintenance (_write_agg).
-    It needs every version to carry an aggregate, so it raises
-    ValueError on a bootstrapped store.
+    ``agg_col`` turns on incremental aggregate maintenance (_write_agg),
+    from the same delta: no second merge path. It needs every version to
+    carry an aggregate, so it raises ValueError on a bootstrapped store.
 
     This is the parquet-protocol approximation of Delta/Iceberg MERGE
-    with data-file statistics (both publish this design publicly;
-    delta-spark itself is not installable in this container — NOTES.md).
+    with data-file statistics, merge-on-read as in Iceberg v2 and Hudi
+    (each publishes its design; delta-spark is not a dependency of this
+    engine — NOTES.md).
     """
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -950,7 +1077,8 @@ def _merge_scd2_batch(
             op_col=op,
         )
         prev = None if batch.truncated else _latest_manifest(state_dir, before=batch_id)
-        touched, untouched, cur = _prune(spark, state_dir, prev, batch.keys)
+        touched, untouched = _prune(prev, batch.keys)
+        cur = _read(spark, state_dir, prev["schema_ddl"], touched) if touched else None
         new_rows = versions
         if cur is not None:
             closer = changelog.groupBy(*cfg.key_columns).agg(
@@ -966,11 +1094,13 @@ def _merge_scd2_batch(
                 .withColumn("is_current", F.col("is_current") & F.col("__first").isNull())
                 .drop("__first")
             )
-            # allowMissingColumns: schema evolution, as in the replica
+            # allowMissingColumns: schema evolution. When the table config
+            # grows a value column (Debezium schema-change events), rows
+            # written before it carry NULL for the new column.
             new_rows = carried.unionByName(versions, allowMissingColumns=True)
         manifest = _write_version(
-            new_rows, state_dir, batch_id, key0, prev,
-            touched, untouched, batch.n, target_rows_per_file,
+            new_rows, state_dir, os.path.join("data", f"v{batch_id}"), batch_id,
+            key0, prev, touched, untouched, batch.n, target_rows_per_file,
         )
         _commit_manifest(state_dir, batch_id, manifest)
 
@@ -1014,13 +1144,16 @@ def start_scd2_merge(
 def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
     """Delete data files and aggregate versions referenced by NO retained
     manifest (the newest ``keep`` versions are retained, older manifests
-    deleted). Returns the deleted data file paths. Safe order: manifests
-    first, then files — a crash mid-vacuum leaves referenced files intact.
+    deleted). A retained manifest references its base files and its live
+    delta files alike. Returns the deleted data file paths. Safe order:
+    manifests first, then files — a crash mid-vacuum leaves referenced
+    files intact.
 
     Concurrent-merge safety (ADVICE r10): an in-flight merge writes its
-    ``data/v{B}`` files (and ``agg/v{B}``) BEFORE the manifest rename
-    that commits them, so a naive "not referenced by any retained
-    manifest" sweep could delete a batch's output in the commit window.
+    ``data/v{B}`` delta, ``data/f{B}`` fold files and ``agg/v{B}``
+    BEFORE the manifest rename that commits them, so a naive "not
+    referenced by any retained manifest" sweep could delete a batch's
+    output in the commit window.
     Directories with a version NEWER than the latest committed manifest
     are therefore skipped (the Delta-style retention check); within
     committed versions, a file is garbage only once no retained manifest
@@ -1041,7 +1174,7 @@ def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
     live_agg: set[str] = set()
     for v in keep_versions:
         m = _read_manifest(state_dir, v)
-        live.update(e["path"] for e in m["files"])
+        live.update(e["path"] for e in (*m["files"], *m.get("deltas", ())))
         if "agg" in m:
             live_agg.add(m["agg"])
     deleted = []
@@ -1053,7 +1186,7 @@ def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
         if not os.path.isdir(os.path.join(state_dir, root)):
             return
         for d in os.listdir(os.path.join(state_dir, root)):
-            m = re.fullmatch(r"v(-?\d+)", d)
+            m = re.fullmatch(r"[vf](-?\d+)", d)
             if m and (latest_committed is None or int(m.group(1)) > latest_committed):
                 # in-flight (uncommitted) batch output — not garbage yet
                 continue
@@ -1080,16 +1213,17 @@ def compact_manifest_store(
     target_rows_per_file: int = 200_000,
     min_files: int = 8,
 ) -> dict | None:
-    """Re-cluster the store: fold its SMALL files (rows < 3/4 of target)
-    and every file whose key range OVERLAPS another live file's into
-    target-sized range-partitioned files, committing by atomically
-    REPLACING the latest manifest. Every merge batch adds files — hot
-    feeds rewrite few, so version chains grow without bound. Overlap
-    comes from a batch written flat (its files span the batch's keys) and
-    from a range write whose new file spans an untouched one (a batch
-    with keys inside and outside a touched file's range); either way a
-    later batch in that range touches an extra file, so any overlap is
-    re-clustered, and only the overlapping and small files are reread.
+    """Re-cluster the store's base files: merge its SMALL files (rows <
+    3/4 of target) and every file whose key range OVERLAPS another live
+    file's into target-sized range-partitioned files, committing by
+    atomically REPLACING the latest manifest. Every rewrite (a replica's
+    fold, a history batch) adds files — hot feeds rewrite few, so version
+    chains grow without bound. Overlap comes from a rewrite written flat
+    (its files span the rewrite's keys) and from a range write whose new
+    file spans an untouched one (keys inside and outside a touched
+    file's range); either way a later rewrite in that range touches an
+    extra file, so any overlap is re-clustered, and only the overlapping
+    and small files are reread.
     Vacuum reclaims superseded versions; this bounds the LIVE file count
     and restores pruning.
 
@@ -1105,7 +1239,9 @@ def compact_manifest_store(
     superseded files become garbage for vacuum_manifest_store.
     Rows are rewritten, never changed or deduplicated, so the store's
     content — a replica's rows or a history's versions — is identical —
-    pinned by the replay-equality tests on compacted stores.
+    pinned by the replay-equality tests on compacted stores. A replica's
+    live deltas are carried BY REFERENCE, unread: they resolve by key,
+    whatever files the base rows sit in, and the next fold folds them.
 
     No-op (returns None) when no files overlap and fewer than
     ``min_files`` small files exist. Like vacuum, must not run

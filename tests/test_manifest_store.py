@@ -2,7 +2,12 @@
 statistics bound per-batch I/O — the parquet-protocol stand-in for
 Delta/Iceberg MERGE data-file stats, and the r9 bucketing negative's
 own conclusion (key-range stats prune what the batch touches; hash
-buckets spread a high-entropy batch across 100% of partitions)."""
+buckets spread a high-entropy batch across 100% of partitions).
+
+The replica is merge-on-read: a batch writes one delta file, and the
+copy-on-write rewrite these pins describe is the FOLD, which runs once
+the live deltas hold target_rows_per_file rows. A pruning pin therefore
+merges batches of at least target_rows_per_file keys."""
 
 import json
 import os
@@ -67,11 +72,26 @@ def _merge_upserts(spark, state, batch_id, rows, target_rows_per_file):
     return _read_manifest(state, batch_id)
 
 
-def _replica(spark, state) -> dict:
+def _replica(spark, state, **kw) -> dict:
     return {
         r.order_id: r.invoice_number
-        for r in read_replica_manifest(spark, state).collect()
+        for r in read_replica_manifest(spark, state, **kw).collect()
     }
+
+
+def _merge_chunks(spark, state, chunks, target_rows_per_file, first_batch=0):
+    """Merge each chunk of envelope messages as one micro-batch, batch ids
+    counting from ``first_batch``."""
+    from simple_cdc_service_spark.schemas import INVOICE_ROW
+    from simple_cdc_service_spark.sources.changelog import (
+        envelopes_df,
+        parse_envelopes,
+    )
+    from simple_cdc_service_spark.streaming.pipeline import _merge_manifest_batch
+
+    for b, chunk in enumerate(chunks, first_batch):
+        parsed = parse_envelopes(envelopes_df(spark, chunk), INVOICE_ROW)
+        _merge_manifest_batch(parsed, INVOICE, state, b, target_rows_per_file)
 
 
 class TestManifestMergeCorrectness:
@@ -240,7 +260,9 @@ class TestManifestPruning:
         """Keys spanning the whole range touch every file: nothing can be
         carried by reference, so the rewrite is written flat — no range
         sampling job, no shuffle — and runs fewer jobs than the clustered
-        rewrite of a hot batch on the same store. Still exact."""
+        rewrite of a hot batch on the same store. Still exact. Each
+        batch's 400 delta rows reach target_rows_per_file=400, so both
+        batches fold."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import (
             envelopes_df,
@@ -270,7 +292,7 @@ class TestManifestPruning:
             parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
             return _count_jobs(
                 spark, f"merge-{batch_id}",
-                lambda: _merge_manifest_batch(parsed, INVOICE, state, batch_id, 5_000),
+                lambda: _merge_manifest_batch(parsed, INVOICE, state, batch_id, 400),
             )
 
         state = str(tmp_path / "state")
@@ -292,7 +314,8 @@ class TestManifestPruning:
         """No compaction: a uniform batch is written flat and leaves files
         whose ranges overlap. The next hot batch touches them, so it is
         range-written and re-clusters them; the hot batches after it touch
-        < 15% of the files again, and the replica equals the replay."""
+        < 15% of the files again, and the replica equals the replay. At
+        target_rows_per_file=100 every batch (100 or 400 keys) folds."""
         state = str(tmp_path / "state")
         self._bootstrap(spark, state)
         want = {k: k * 7 for k in range(100_000)}
@@ -300,7 +323,7 @@ class TestManifestPruning:
         def merge(batch_id, keys):
             rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
             want.update(rows)
-            return _merge_upserts(spark, state, batch_id, rows, 5_000)
+            return _merge_upserts(spark, state, batch_id, rows, 100)
 
         flat = merge(1, [k * 997 % 100_000 for k in range(400)])
         assert flat["files_touched"] == flat["files_total"]
@@ -317,24 +340,27 @@ class TestManifestPruning:
         It still splits into clustered files (a flat write's files are
         sized by the scan splits, but the next touching batch range-writes
         them), so hot batches afterwards touch < 15% of them, and the
-        replica equals the replay."""
+        replica equals the replay. Every batch folds: 2,000 or 500 keys
+        against target_rows_per_file=500."""
         state = str(tmp_path / "state")
         want = {}
 
         def merge(batch_id, keys):
             rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
             want.update(rows)
-            return _merge_upserts(spark, state, batch_id, rows, 1_000)
+            return _merge_upserts(spark, state, batch_id, rows, 500)
 
         for batch_id in range(10):
             merge(batch_id, list(range(batch_id, 20_000, 10)))
         for batch_id in (10, 11, 12):
-            m = merge(batch_id, [10_000 + k for k in range(20)])
+            m = merge(batch_id, [10_000 + k for k in range(500)])
         assert m["files_total"] >= 15
         assert m["files_touched"] / m["files_total"] < 0.15, m["files_touched"]
         assert _replica(spark, state) == want
 
     def test_deletes_erase_and_vacuum_reclaims(self, spark, tmp_path):
+        """The 500 deletes reach target_rows_per_file=500, so the batch
+        folds and supersedes the files holding the deleted keys."""
         from simple_cdc_service_spark.schemas import INVOICE_ROW
         from simple_cdc_service_spark.sources.changelog import (
             envelopes_df,
@@ -355,7 +381,7 @@ class TestManifestPruning:
             for k in range(500)
         ]
         parsed = parse_envelopes(envelopes_df(spark, dels), INVOICE_ROW)
-        _merge_manifest_batch(parsed, INVOICE, state, 1, 1_000)
+        _merge_manifest_batch(parsed, INVOICE, state, 1, 500)
         rep = read_replica_manifest(spark, state)
         assert rep.count() == 19_500
         assert rep.filter("order_id < 500").count() == 0
@@ -364,6 +390,121 @@ class TestManifestPruning:
         deleted = vacuum_manifest_store(state, keep=1)
         assert deleted, "superseded files should be reclaimed"
         assert read_replica_manifest(spark, state).count() == 19_500
+
+
+class TestMergeOnRead:
+    """A batch appends one delta file to the manifest; the fold writes
+    the deltas into the base files once they hold target_rows_per_file
+    rows. Readers, vacuum, compaction and crash replay see the deltas."""
+
+    @staticmethod
+    def _want(n, **kw):
+        return generate_envelopes(n=n, **kw)[1]
+
+    def test_vacuum_keeps_live_deltas(self, spark, tmp_path):
+        """Batch 1 folds, batches 2 and 3 leave live deltas. Vacuum
+        (keep=2) reclaims the folded deltas but not the live ones: the
+        replica and both retained version= reads equal the replay. The
+        history reports the deltas and the fold from the manifests."""
+        from simple_cdc_service_spark.streaming import manifest_store_history
+        from simple_cdc_service_spark.streaming.pipeline import _read_manifest
+
+        feed = dict(seed=17, truncate_every=None, key_space=300)
+        msgs, _ = generate_envelopes(n=300, **feed)
+        state = str(tmp_path / "state")
+        _merge_chunks(
+            spark, state, [msgs[:100], msgs[100:200], msgs[200:250], msgs[250:]], 150
+        )
+        hist = {h["version"]: h for h in manifest_store_history(state)}
+        assert [hist[v]["folded"] for v in range(4)] == [False, True, False, False]
+        assert hist[1]["n_deltas"] == 0 and hist[1]["files_touched"] == 0
+        assert hist[3]["n_deltas"] >= 2 and hist[3]["files_touched"] == 0
+        assert 0 < hist[3]["delta_rows"] < 150
+        assert hist[3]["total_rows"] == hist[1]["total_rows"]  # base files only
+
+        live = {
+            e["path"]
+            for v in (2, 3)
+            for e in _read_manifest(state, v)["deltas"]
+        }
+        deleted = vacuum_manifest_store(state, keep=2)
+        assert deleted, "the folded deltas should be reclaimed"
+        assert live and not live & set(deleted)
+        assert _replica(spark, state) == self._want(300, **feed)
+        for v, prefix in ((2, 250), (3, 300)):
+            assert _replica(spark, state, version=v) == self._want(prefix, **feed)
+
+    def test_compaction_carries_live_deltas(self, spark, tmp_path):
+        """Compaction re-clusters the base files and carries the live
+        deltas by reference: the deltas list is unchanged, and so is the
+        replica, which differs from its base files alone."""
+        from simple_cdc_service_spark.streaming import compact_manifest_store
+        from simple_cdc_service_spark.streaming.pipeline import _latest_manifest
+
+        feed = dict(seed=19, truncate_every=None, key_space=200)
+        msgs, want = generate_envelopes(n=400, **feed)
+        state = str(tmp_path / "state")
+        _merge_chunks(spark, state, [msgs[:300], msgs[300:]], 100)
+        before = _latest_manifest(state)
+        assert before["deltas"] and before["files"]
+        assert _replica(spark, state) == want
+        base_only = {
+            r.order_id: r.invoice_number
+            for r in spark.read.parquet(
+                *[os.path.join(state, e["path"]) for e in before["files"]]
+            ).collect()
+        }
+        assert base_only != want
+
+        after = compact_manifest_store(spark, state, target_rows_per_file=5_000, min_files=2)
+        assert after is not None
+        assert after["deltas"] == before["deltas"]
+        assert len(after["files"]) < len(before["files"])
+        assert _replica(spark, state) == want
+
+    def _crash_once(self, monkeypatch):
+        from simple_cdc_service_spark.streaming import pipeline
+
+        commit = pipeline._commit_manifest
+        crashed = []
+
+        def crash_once(state_dir, version, manifest):
+            if not crashed:
+                crashed.append(manifest)
+                raise RuntimeError("killed before the commit")
+            commit(state_dir, version, manifest)
+
+        monkeypatch.setattr(pipeline, "_commit_manifest", crash_once)
+        return crashed
+
+    @pytest.mark.parametrize("target, folded, written", [
+        (1_000, False, "v1"),  # killed after the delta write
+        (30, True, "f1"),  # killed after the fold's files are written
+    ])
+    def test_commit_crash_then_rerun_equals_replay(
+        self, spark, tmp_path, monkeypatch, target, folded, written
+    ):
+        """Kill batch 1 between its data writes and its manifest commit,
+        then rerun the same batch id and the next one: every committed
+        version reads as the sequential replay of its prefix."""
+        from simple_cdc_service_spark.streaming.pipeline import _manifest_versions
+
+        feed = dict(seed=23, truncate_every=140, key_space=50)
+        msgs, want = generate_envelopes(n=300, **feed)
+        chunks = [msgs[:100], msgs[100:200], msgs[200:]]
+        state = str(tmp_path / "state")
+        _merge_chunks(spark, state, chunks[:1], target)
+        crashed = self._crash_once(monkeypatch)
+        with pytest.raises(RuntimeError, match="killed"):
+            _merge_chunks(spark, state, chunks[1:2], target, first_batch=1)
+        assert [m.get("folded", False) for m in crashed] == [folded]
+        assert os.listdir(os.path.join(state, "data", written))
+        assert _manifest_versions(state) == [0]
+
+        _merge_chunks(spark, state, chunks[1:], target, first_batch=1)
+        assert _replica(spark, state) == want
+        for v, prefix in ((0, 100), (1, 200)):
+            assert _replica(spark, state, version=v) == self._want(prefix, **feed)
 
 
 class TestAdviceR10Fixes:
@@ -573,7 +714,8 @@ class TestManifestCompaction:
         overlap, so every later batch would touch them. Compaction
         re-clusters overlapping files even below min_files: afterwards a
         hot batch touches < 15% of the files again, and the replica still
-        equals the replay."""
+        equals the replay. Both merges fold: their 400 and 100 keys reach
+        target_rows_per_file=100."""
         from simple_cdc_service_spark.streaming import compact_manifest_store
 
         state = str(tmp_path / "state")
@@ -588,7 +730,7 @@ class TestManifestCompaction:
         def merge(batch_id, keys):
             rows = {key: batch_id * 1_000_000 + k for k, key in enumerate(keys)}
             want.update(rows)
-            return _merge_upserts(spark, state, batch_id, rows, 5_000)
+            return _merge_upserts(spark, state, batch_id, rows, 100)
 
         m1 = merge(1, [k * 997 % 100_000 for k in range(400)])
         assert m1["files_touched"] == m1["files_total"]
@@ -606,7 +748,9 @@ class TestManifestCompaction:
         writes a new file spanning the untouched one. Compaction
         re-clusters that overlap even below min_files, and rereads only
         the overlapping and small files: the files clear of it are
-        carried by reference."""
+        carried by reference. The batch upserts every key of the first
+        file and a key in the gap, and merges at a target_rows_per_file
+        of its own row count, so it folds."""
         from simple_cdc_service_spark.streaming import compact_manifest_store
         from simple_cdc_service_spark.streaming.pipeline import _overlapping
 
@@ -620,8 +764,10 @@ class TestManifestCompaction:
             INVOICE, state, batch_id=0, target_rows_per_file=500,
         )
         assert not _overlapping(boot["files"])
-        want.update({10: -1, 1_500: -2})
-        m = _merge_upserts(spark, state, 1, {10: -1, 1_500: -2}, 500)
+        lo, hi = min((e["min"], e["max"]) for e in boot["files"])
+        batch = {**{k: -1 for k in range(lo, hi + 1)}, 1_500: -2}
+        want.update(batch)
+        m = _merge_upserts(spark, state, 1, batch, len(batch))
         assert 0 < m["files_touched"] < m["files_total"]
         assert _overlapping(m["files"])
         clear = sorted(e["path"] for e in boot["files"] if e["min"] >= 2_000)
@@ -866,6 +1012,46 @@ class TestOnePassCollapse:
             .filter("order_id BETWEEN 5000 AND 5149").collect()
         }
         # key 5000+j last written by the largest k < 400 with k % 150 == j
+        assert got == {5_000 + j: max(range(j, 400, 150)) for j in range(150)}
+
+    def test_non_fold_hot_batch_runs_at_most_three_jobs(self, spark, tmp_path):
+        """The same hot batch below target_rows_per_file does not fold: it
+        only writes its delta, the collapse's shuffle and the write (two
+        jobs observed). The driver reads emptiness and the truncate from
+        the delta file, with no job."""
+        from simple_cdc_service_spark.streaming.pipeline import (
+            _merge_manifest_batch,
+            _read_manifest,
+        )
+
+        state = str(tmp_path / "state")
+        bootstrap_manifest_store(
+            spark.range(20_000).selectExpr("id AS order_id", "id * 7 AS invoice_number"),
+            INVOICE, state, target_rows_per_file=1_000,
+        )
+        msgs = [
+            json.dumps(_envelope(
+                "u",
+                {"order_id": 5_000 + k % 150, "invoice_number": 0},
+                {"order_id": 5_000 + k % 150, "invoice_number": k},
+                100 + k, 100 + k,
+            ))
+            for k in range(400)
+        ]
+        parsed = self._parsed(spark, msgs)
+        jobs = _count_jobs(
+            spark, "delta-only-batch",
+            lambda: _merge_manifest_batch(parsed, INVOICE, state, 0, 1_000),
+        )
+        m = _read_manifest(state, 0)
+        assert not m.get("folded") and m["files_touched"] == 0
+        assert sum(e["rows"] for e in m["deltas"]) == 150
+        assert 0 < jobs <= 3, jobs
+        got = {
+            r.order_id: r.invoice_number
+            for r in read_replica_manifest(spark, state)
+            .filter("order_id BETWEEN 5000 AND 5149").collect()
+        }
         assert got == {5_000 + j: max(range(j, 400, 150)) for j in range(150)}
 
     def test_fifty_batches_hold_no_blocks(self, spark, tmp_path):

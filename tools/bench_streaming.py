@@ -346,7 +346,8 @@ def bench_replica_store_scale(
 
     # manifest_uniform draws keys uniformly from the STORE'S WHOLE key
     # domain (key_space = n_store): every range file contains some of
-    # each batch's keys, so every batch is a full rewrite.
+    # each fold's keys, so every fold is a full rewrite. A batch that
+    # does not fold writes only its delta (files_touched 0).
     # (A key_space of n_events//3 would cluster every key inside the
     # first file's range and accidentally re-test the hot case.)
     for leg, key_space in (("manifest_hot", 100), ("manifest_uniform", n_store)):
