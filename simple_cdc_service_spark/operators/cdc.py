@@ -20,8 +20,9 @@ Scale notes (100 TB):
     the shuffle, so the reducer for a hot key receives at most one row per
     map task. AQE skew-join handling is irrelevant here — this is an agg.
   * The envelope → changelog derivation is SQL text (changelog_sql), so a
-    streaming sink plans it as one statement per micro-batch instead of
-    rebuilding ~100 Column calls; planning is fixed per-batch driver time.
+    streaming sink plans it as one statement, on the stream or per
+    micro-batch, instead of rebuilding ~100 Column calls; planning is
+    fixed per-batch driver time.
 """
 
 from __future__ import annotations
@@ -158,13 +159,13 @@ _OP_CODE = (
 def changelog_sql(cfg: ChangeTableConfig, passthrough: "dict[str, str]") -> str:
     """SELECT text of the envelope → flat changelog derivation (the one
     implementation behind envelope_changelog, snapshot_from_envelopes and
-    the streaming merges' batch collapse), reading the parsed envelopes
+    the streaming merges), reading the parsed envelopes
     from the ``{parsed}`` slot of ``spark.sql(text, parsed=df)``.
 
     ``passthrough`` maps output name → SQL expression over the parsed
     envelopes (order coordinates, raw message, …). The text depends only
     on its arguments, so a sink builds it once and re-plans it per
-    micro-batch."""
+    micro-batch or plans it once on a stream."""
     keys, vals = cfg.key_columns, cfg.value_columns
     names = [sql_ident(n) for n in passthrough]
     pass_exprs = [f"{e} AS {n}" for n, e in zip(names, passthrough.values())]
@@ -207,42 +208,6 @@ def changelog_sql(cfg: ChangeTableConfig, passthrough: "dict[str, str]") -> str:
         f"FROM ({coded})"
     )
     return f"SELECT {', '.join(out)} FROM ({exploded})"
-
-
-def last_event_sql(cfg: ChangeTableConfig, order: str) -> str:
-    """One statement: parsed envelopes → changelog_sql → each key's last
-    event. Output columns: the key columns; ``__op`` and the value
-    columns of the key's last non-truncate event by ``order`` (an SQL
-    expression over the parsed envelopes); ``__ord``, that event's order
-    coordinate; and ``__tk``, the group's last truncate coordinate. Final
-    deletes are KEPT (a merge needs them to erase existing state).
-
-    Truncate events have no row images, so all of them fall in the
-    all-NULL-key group and the batch's truncate epoch is that group's
-    ``__tk`` (NULL everywhere when the batch has no truncate). No epoch
-    filter runs before the aggregate: a key survives the truncate iff its
-    ``__ord`` is after the epoch, and when it survives its last event over
-    the live events is its last event over all of them — so the merge
-    applies truncate_epoch_filter's comparison once, to the collapsed
-    rows, instead of joining the epoch back onto every event.
-
-    Plan shape: one shuffle on the key. ``max_by`` skips rows whose
-    ordering is NULL, which is how truncate events stay out of ``__op``
-    and the values."""
-    op = sql_ident(cfg.op_column)
-    keys = ", ".join(sql_ident(k) for k in cfg.key_columns)
-    live_ord = f"IF({op} <> 't', __ord, NULL)"
-    aggs = [
-        f"max_by({op}, {live_ord}) AS __op",
-        *[
-            f"max_by({sql_ident(v)}, {live_ord}) AS {sql_ident(v)}"
-            for v in cfg.value_columns
-        ],
-        f"max({live_ord}) AS __ord",
-        f"max(IF({op} = 't', __ord, NULL)) AS __tk",
-    ]
-    changelog = changelog_sql(cfg, {"__ord": order})
-    return f"SELECT {keys}, {', '.join(aggs)} FROM ({changelog}) GROUP BY {keys}"
 
 
 def envelope_changelog(

@@ -444,7 +444,9 @@ class TestMergeOnRead:
         feed = dict(seed=19, truncate_every=None, key_space=200)
         msgs, want = generate_envelopes(n=400, **feed)
         state = str(tmp_path / "state")
-        _merge_chunks(spark, state, [msgs[:300], msgs[300:]], 100)
+        # a delta counts events, so the second chunk stays below the
+        # target of 100 and stays live
+        _merge_chunks(spark, state, [msgs[:310], msgs[310:]], 100)
         before = _latest_manifest(state)
         assert before["deltas"] and before["files"]
         assert _replica(spark, state) == want
@@ -461,6 +463,52 @@ class TestMergeOnRead:
         assert after["deltas"] == before["deltas"]
         assert len(after["files"]) < len(before["files"])
         assert _replica(spark, state) == want
+
+    def test_in_batch_binlog_order_survives_resolve_and_fold(self, spark, tmp_path):
+        """Batch 1 holds two updates of key 1, and an update and a
+        PK-changing update of key 2, each pair in the reverse of its
+        binlog order by Kafka offset. The replica equals the binlog-order
+        replay while batch 1 is a live delta, and after a later batch
+        folds it."""
+        from simple_cdc_service_spark.streaming.pipeline import _read_manifest
+
+        def row(kv):
+            return kv and {"order_id": kv[0], "invoice_number": kv[1]}
+
+        def env(op, before, after, pos):
+            msg = json.dumps(_envelope(op, row(before), row(after), pos, pos))
+            return pos, before, after, msg
+
+        batches = [
+            [env("c", None, (k, k * 10), 100 + k) for k in (1, 2, 3)],
+            [
+                env("u", (1, 10), (1, 99), 300),
+                env("u", (1, 10), (1, 55), 200),
+                env("u", (2, 12), (20, 21), 250),  # PK change: 2 → 20
+                env("u", (20, 21), (20, 77), 400),
+                env("u", (2, 20), (2, 12), 210),
+            ],
+            [env("c", None, (4, 40), 500)],
+        ]
+
+        def replay(events):
+            state = {}
+            for _, before, after, _ in sorted(events):
+                if before and (after is None or before[0] != after[0]):
+                    state.pop(before[0], None)
+                if after:
+                    state[after[0]] = after[1]
+            return state
+
+        state = str(tmp_path / "state")
+        msgs = [[e[3] for e in b] for b in batches]
+        _merge_chunks(spark, state, msgs[:2], 1_000)
+        assert not _read_manifest(state, 1).get("folded")
+        assert _replica(spark, state) == replay(batches[0] + batches[1])
+        assert _replica(spark, state) == {1: 99, 3: 30, 20: 77}
+        _merge_chunks(spark, state, msgs[2:], 1, first_batch=2)
+        assert _read_manifest(state, 2)["folded"]
+        assert _replica(spark, state) == replay([e for b in batches for e in b])
 
     def _crash_once(self, monkeypatch):
         from simple_cdc_service_spark.streaming import pipeline
@@ -966,9 +1014,8 @@ class TestMultiTableManifest:
 
 
 class TestOnePassCollapse:
-    """A micro-batch is parsed and collapsed ONCE (one planned statement,
-    materialized), and what the collapse materializes is freed when the
-    batch ends."""
+    """A micro-batch is parsed and derived ONCE, its changelog rows are
+    written as its delta, and nothing a batch materializes outlives it."""
 
     @staticmethod
     def _parsed(spark, msgs):
@@ -1014,11 +1061,12 @@ class TestOnePassCollapse:
         # key 5000+j last written by the largest k < 400 with k % 150 == j
         assert got == {5_000 + j: max(range(j, 400, 150)) for j in range(150)}
 
-    def test_non_fold_hot_batch_runs_at_most_three_jobs(self, spark, tmp_path):
+    def test_non_fold_hot_batch_runs_one_job(self, spark, tmp_path):
         """The same hot batch below target_rows_per_file does not fold: it
-        only writes its delta, the collapse's shuffle and the write (two
-        jobs observed). The driver reads emptiness and the truncate from
-        the delta file, with no job."""
+        only writes its 400 events, uncollapsed, as its delta — one
+        map-only job. The driver reads emptiness and the truncate from
+        the delta file, with no job, and the resolver picks each key's
+        last event."""
         from simple_cdc_service_spark.streaming.pipeline import (
             _merge_manifest_batch,
             _read_manifest,
@@ -1045,8 +1093,8 @@ class TestOnePassCollapse:
         )
         m = _read_manifest(state, 0)
         assert not m.get("folded") and m["files_touched"] == 0
-        assert sum(e["rows"] for e in m["deltas"]) == 150
-        assert 0 < jobs <= 3, jobs
+        assert sum(e["rows"] for e in m["deltas"]) == 400
+        assert jobs == 1, jobs
         got = {
             r.order_id: r.invoice_number
             for r in read_replica_manifest(spark, state)

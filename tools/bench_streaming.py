@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -665,6 +666,7 @@ def bench_manifest_longfeed(
     n_batches: int = 200,
     events_per_batch: int = 200,
     compact_every: int = 25,
+    target_rows_per_file: int = 20_000,
 ) -> None:
     """Long-feed manifest-store leg (r11, VERDICT r10 #5): >=200 hot-key
     micro-batches against a bootstrapped store, with periodic
@@ -674,8 +676,14 @@ def bench_manifest_longfeed(
     batch's hot range moves ((b*9973) % n_store) so touched files vary;
     merges run through _merge_manifest_batch directly (the same code
     foreachBatch drives) so the leg measures merge+stats dynamics, not
-    stream-restart overhead. Ends with a full-store replica_exact diff
-    against the independently computed expected state."""
+    stream-restart overhead. Batches that fold (manifest ``folded``) are
+    reported apart from the rest: their count and median wall beside the
+    non-fold median, since a fold lands once per target file's worth of
+    delta rows and a mean over all batches hides both. The final replica
+    is read in full (a noop write) once, the first full read in the
+    process, and then three more times, warm. Ends with a full-store
+    replica_exact diff against the independently computed expected
+    state."""
     import tempfile as _tf
 
     from simple_cdc_service_spark.schemas import INVOICE_ROW
@@ -702,10 +710,12 @@ def bench_manifest_longfeed(
     base = spark.range(n_store).selectExpr(
         "id AS order_id", "id * 7 AS invoice_number"
     )
-    bootstrap_manifest_store(base, INVOICE, state, target_rows_per_file=20_000)
+    bootstrap_manifest_store(
+        base, INVOICE, state, target_rows_per_file=target_rows_per_file
+    )
     preload_sec = round(time.perf_counter() - t0, 2)
     expected = {k: k * 7 for k in range(n_store)}
-    walls, files_over_time, compact_secs = [], [], []
+    walls, folded, files_over_time, compact_secs = [], [], [], []
     off = 0
     for b in range(n_batches):
         center = (b * 9973) % n_store
@@ -727,14 +737,27 @@ def bench_manifest_longfeed(
             off += 1
         parsed = parse_envelopes(envelopes_df(spark, msgs), INVOICE_ROW)
         tb = time.perf_counter()
-        _merge_manifest_batch(parsed, INVOICE, state, b, 20_000)
+        _merge_manifest_batch(parsed, INVOICE, state, b, target_rows_per_file)
         walls.append(round(time.perf_counter() - tb, 3))
-        files_over_time.append(len(_latest_manifest(state)["files"]))
+        latest = _latest_manifest(state)
+        folded.append(latest.get("folded", False))
+        files_over_time.append(len(latest["files"]))
         if compact_every and (b + 1) % compact_every == 0:
             tc = time.perf_counter()
-            compact_manifest_store(spark, state, target_rows_per_file=20_000)
+            compact_manifest_store(
+                spark, state, target_rows_per_file=target_rows_per_file
+            )
             vacuum_manifest_store(state, keep=3)
             compact_secs.append(round(time.perf_counter() - tc, 2))
+    read_secs = []
+    for _ in range(4):
+        tr = time.perf_counter()
+        read_replica_manifest(spark, state).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        read_secs.append(round(time.perf_counter() - tr, 3))
+    fold_walls = [w for w, f in zip(walls, folded) if f]
+    plain_walls = [w for w, f in zip(walls, folded) if not f]
     final = read_replica_manifest(spark, state)
     exp_df = spark.createDataFrame(
         list(expected.items()), "order_id long, invoice_number long"
@@ -749,6 +772,7 @@ def bench_manifest_longfeed(
         "batches": n_batches,
         "events_per_batch": events_per_batch,
         "compact_every": compact_every,
+        "target_rows_per_file": target_rows_per_file,
         "preload_sec": preload_sec,
         "files_q1_mean": round(sum(files_over_time[:q]) / q, 1),
         "files_q4_mean": round(sum(files_over_time[-q:]) / q, 1),
@@ -756,6 +780,11 @@ def bench_manifest_longfeed(
         "files_max": max(files_over_time),
         "wall_q1_mean": round(sum(walls[:q]) / q, 3),
         "wall_q4_mean": round(sum(walls[-q:]) / q, 3),
+        "folds": len(fold_walls),
+        "fold_wall_median": statistics.median(fold_walls) if fold_walls else None,
+        "nonfold_wall_median": statistics.median(plain_walls) if plain_walls else None,
+        "read_cold_sec": read_secs[0],
+        "read_warm_sec_median": statistics.median(read_secs[1:]),
         "compact_secs": compact_secs,
         "replica_exact": mism == 0,
     }))
@@ -789,11 +818,16 @@ if __name__ == "__main__":
             chunks=int(sys.argv[3]) if len(sys.argv) > 3 else 5,
         )
     elif len(sys.argv) > 1 and sys.argv[1] == "manifest-longfeed":
-        # manifest-longfeed [n_batches] [compact_every] — A/B the
-        # file-count bound: compact_every=0 is the uncompacted control
+        # manifest-longfeed [n_batches] [compact_every] [store_rows]
+        # [target_rows_per_file] — A/B the file-count bound:
+        # compact_every=0 is the uncompacted control; e.g. the fold and
+        # read probe on the freshness benchmark's store shape:
+        #   python tools/bench_streaming.py manifest-longfeed 200 25 250000 10000
         bench_manifest_longfeed(
             n_batches=int(sys.argv[2]) if len(sys.argv) > 2 else 200,
             compact_every=int(sys.argv[3]) if len(sys.argv) > 3 else 25,
+            n_store=int(sys.argv[4]) if len(sys.argv) > 4 else 1_000_000,
+            target_rows_per_file=int(sys.argv[5]) if len(sys.argv) > 5 else 20_000,
         )
     elif len(sys.argv) > 1 and sys.argv[1] == "scd2":
         bench_scd2()
