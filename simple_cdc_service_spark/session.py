@@ -5,6 +5,14 @@ session timezone so timestamp→epoch conversions agree with the DuckDB
 oracle) and for scale (AQE on: runtime join-strategy switching, skew-join
 splitting, partition coalescing — the things a 100 TB run needs that a
 local test never exercises).
+
+Streaming checkpoints are committed through the Hadoop FileSystem API
+(FileSystemBasedCheckpointFileManager) rather than Spark's FileContext
+default. Without native libhadoop, Hadoop's local filesystem starts a
+child process for every permission it sets or reads, and a FileContext
+rename with overwrite does so many times. A trigger writes three log
+entries (source, offsets, commits), so that default put tens of
+milliseconds of process launches into every micro-batch's commit.
 """
 
 from __future__ import annotations
@@ -78,6 +86,19 @@ def get_spark(
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))),
+        )
+        # Checkpoint logs (offsets, commits, the file source's log, state
+        # store files) are written to a temp file and renamed into place.
+        # FileSystem.rename starts no process on the local filesystem;
+        # FileContext.rename(OVERWRITE) starts ~16 when libhadoop is not
+        # loaded. The rename is atomic on POSIX local filesystems and on
+        # HDFS, and a checkpoint has one writer (the streaming contract),
+        # so the FileSystem manager keeps exactly-once there. On object
+        # stores neither manager's rename is atomic.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
         )
     )
     for k, v in (extra_conf or {}).items():

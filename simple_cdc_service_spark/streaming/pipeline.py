@@ -38,6 +38,12 @@ Scale notes:
     map-only job (pinned by test), and the driver reads what it needs
     from the delta file with pyarrow. The per-key collapse (one shuffle
     on the key) is the resolver's, which collapses across batches anyway.
+  * Per-batch commit I/O is fixed overhead too. A trigger writes three
+    checkpoint log entries (the source log, offsets, commits); get_spark
+    commits them through the Hadoop FileSystem API, because without
+    native libhadoop the FileContext default starts child processes for
+    every rename. The store's writes skip the job's _SUCCESS marker
+    (_NO_SUCCESS_MARKER): the manifest rename is their commit.
   * Kafka parallelism = topic partitions; OFFSETS ONLY ORDER WITHIN ONE
     PARTITION, so Kafka (partition, offset) is not a total order over a
     multi-partition topic. A batch's events are therefore ordered by the
@@ -333,6 +339,14 @@ def _read_manifest(state_dir: str, version: int) -> dict:
         return _json.load(f)
 
 
+# The write option every manifest-store write takes: no _SUCCESS marker.
+# The store's commit is the manifest rename (_commit_manifest), and nothing
+# reads its files' markers; without native libhadoop, creating one starts
+# child processes for its permissions. The corpus and stats sinks commit
+# on their markers and keep them.
+_NO_SUCCESS_MARKER = ("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+
+
 def _commit_manifest(state_dir: str, version: int, manifest: dict) -> None:
     """Write manifest ``version`` by one atomic rename: the commit point
     of a batch, a bootstrap or a compaction."""
@@ -603,7 +617,9 @@ def _write_agg(
     spark.createDataFrame(
         [(float(base_sum + d_sum), int(base_n + d_n))],
         "sum_value double, n_keys long",
-    ).write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    ).write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+        os.path.join(state_dir, rel)
+    )
     return rel
 
 
@@ -765,7 +781,9 @@ def _write_version(
         est_rows = sum(e["rows"] for e in touched) + batch_rows
         n_new = max(1, min(256, -(-est_rows // target_rows_per_file)))
         new_rows = new_rows.repartitionByRange(n_new, F.col(key0))
-    new_rows.write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    new_rows.write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+        os.path.join(state_dir, rel)
+    )
     entries = untouched + _file_entries(state_dir, rel, key0)
     return {
         "batch_id": batch_id,
@@ -808,7 +826,9 @@ def _write_delta(
         rows.select(
             *cfg.key_columns, *cfg.value_columns, op.alias("__op"), "__ord",
             F.lit(batch_id).cast("long").alias("__v"),
-        ).write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+        ).write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+            os.path.join(state_dir, rel)
+        )
         return _file_entries(state_dir, rel, cfg.key_columns[0])
 
     entries = write(changes)
@@ -937,7 +957,9 @@ def bootstrap_manifest_store(
     n_files = max(1, min(256, -(-n_rows // target_rows_per_file)))
     df.select(*cfg.key_columns, *cfg.value_columns).repartitionByRange(
         n_files, F.col(key0)
-    ).write.mode("overwrite").parquet(os.path.join(state_dir, rel))
+    ).write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+        os.path.join(state_dir, rel)
+    )
     entries = _file_entries(state_dir, rel, key0)
     manifest = {
         "batch_id": batch_id,
@@ -1316,6 +1338,7 @@ def compact_manifest_store(
         .parquet(*[os.path.join(state_dir, e["path"]) for e in picked])
         .repartitionByRange(n_new, F.col(key0))
         .write.mode("overwrite")
+        .option(*_NO_SUCCESS_MARKER)
         .parquet(os.path.join(state_dir, rel))
     )
     entries = kept + _file_entries(state_dir, rel, key0)

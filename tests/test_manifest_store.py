@@ -327,10 +327,18 @@ class TestManifestPruning:
 
         flat = merge(1, [k * 997 % 100_000 for k in range(400)])
         assert flat["files_touched"] == flat["files_total"]
-        recluster = merge(2, [60_000 + k for k in range(100)])
-        assert recluster["files_touched"] == len(flat["files"])
+        hot = [60_000 + k for k in range(100)]
+        # The flat files are sized by the scan splits, so how many of them
+        # span the hot range depends on how the base files were packed;
+        # the expectation comes from the ranges the flat write recorded.
+        spanning = sum(
+            not e["exact"] or any(e["min"] <= k <= e["max"] for k in hot)
+            for e in flat["files"]
+        )
+        recluster = merge(2, hot)
+        assert recluster["files_touched"] == spanning
         for batch_id in (3, 4):
-            m = merge(batch_id, [60_000 + k for k in range(100)])
+            m = merge(batch_id, hot)
             assert m["files_touched"] / m["files_total"] < 0.15, m["files_touched"]
         assert _replica(spark, state) == want
 

@@ -90,6 +90,59 @@ class TestReplicaMerge:
         assert got == {9: 90}
 
 
+class TestBatchCommitIO:
+    """A micro-batch's commit is file I/O on the checkpoint and the store,
+    paid every batch. Without native libhadoop, Hadoop's local filesystem
+    starts a child process per permission it sets or reads, so the
+    session commits checkpoint logs through the FileSystem API, and the
+    replica writes no _SUCCESS marker (its commit is the manifest)."""
+
+    def test_checkpoint_logs_use_the_filesystem_manager(self, spark, tmp_path):
+        jvm = spark._jvm
+        pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+        manager = getattr(getattr(pkg, "CheckpointFileManager$"), "MODULE$").create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    def test_replica_writes_no_success_marker_admission_keeps_its_own(
+        self, spark, tmp_path
+    ):
+        """The replica's delta and fold directories hold parquet files and
+        no _SUCCESS; a corpus-admission batch still commits on its sigs
+        marker. 120 events against target_rows_per_file=50 fold batch 0."""
+        from simple_cdc_service_spark.streaming.pipeline import (
+            start_corpus_dedup_admission,
+        )
+
+        msgs, expected = generate_envelopes(n=120, seed=5, key_space=60)
+        src = str(tmp_path / "src")
+        state = str(tmp_path / "state")
+        _write_batch(src, "part1.json", msgs, 0)
+        _run(start_replica_merge_manifest(
+            read_changelog_stream(spark, src), INVOICE, state,
+            str(tmp_path / "ckpt"), target_rows_per_file=50,
+        ))
+        for d in ("v0", "f0"):
+            written = os.listdir(os.path.join(state, "data", d))
+            assert any(f.endswith(".parquet") for f in written), (d, written)
+            assert "_SUCCESS" not in written, (d, written)
+        got = {r.order_id: r.invoice_number for r in read_replica_manifest(spark, state).collect()}
+        assert got == expected
+
+        docs = str(tmp_path / "docs")
+        corpus_dir = str(tmp_path / "corpus")
+        os.makedirs(docs)
+        with open(os.path.join(docs, "b0.json"), "w") as f:
+            f.write(json.dumps({"doc_id": 1, "text": "tidal energy turbines"}) + "\n")
+        _run(start_corpus_dedup_admission(
+            spark.readStream.schema("doc_id long, text string").json(docs),
+            corpus_dir, str(tmp_path / "ckpt2"), threshold=0.5,
+        ))
+        assert os.path.exists(os.path.join(corpus_dir, "sigs", "v0", "_SUCCESS"))
+
+
 class TestCrashRecoveryReplay:
     def test_rerun_committed_batch_is_skipped(self, spark, tmp_path):
         """foreachBatch re-delivers batch N when the job died between the
