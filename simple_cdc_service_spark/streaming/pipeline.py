@@ -15,15 +15,16 @@ failed batch rewrites the same state version).
 
 Scale notes:
   * One versioned store, the manifest store, for the replica
-    (start_replica_merge_manifest) and the SCD2 history
-    (start_scd2_merge): versioned manifests that list the store's files
-    with their key stats. A rewrite touches only the files its keys land
+    (start_replica_merge_manifest), the SCD2 history (start_scd2_merge)
+    and the admission corpus (start_corpus_dedup_admission): versioned
+    manifests that list the store's files with their key stats, committed
+    by one rename each. A rewrite touches only the files its keys land
     in and carries the rest by reference — the local stand-in for
     Delta/Iceberg MERGE. When no file can be carried (uniform keys touch
     every file of a clustered store) the rewrite is written flat, as the
     merge leaves it, with no range shuffle; the next rewrite that touches
-    those files re-clusters them. One vacuum, one compaction and one
-    reader serve both.
+    those files re-clusters them. One vacuum and one compaction serve
+    all three, over every file list a manifest holds.
   * The replica is MERGE-ON-READ (Iceberg v2 equality deletes, Hudi MOR
     tables): each micro-batch writes only its changes, one DELTA file,
     and readers resolve the deltas over the clustered files.
@@ -342,8 +343,8 @@ def _read_manifest(state_dir: str, version: int) -> dict:
 # The write option every manifest-store write takes: no _SUCCESS marker.
 # The store's commit is the manifest rename (_commit_manifest), and nothing
 # reads its files' markers; without native libhadoop, creating one starts
-# child processes for its permissions. The corpus and stats sinks commit
-# on their markers and keep them.
+# child processes for its permissions. Only the stats sink still commits
+# on its marker and keeps it.
 _NO_SUCCESS_MARKER = ("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
 
@@ -1197,19 +1198,31 @@ def start_scd2_merge(
     return writer.start()
 
 
+def _entry_lists(m: dict) -> dict[str, list]:
+    """Every file-entry list manifest ``m`` holds, by name: the base
+    ``files`` of every store, a replica's live ``deltas`` and the
+    corpus' ``sigs``. Vacuum and compaction walk these rather than
+    naming them, so one of each serves every store."""
+    return {
+        k: v for k, v in m.items()
+        if isinstance(v, list) and all(isinstance(e, dict) for e in v)
+    }
+
+
 def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
     """Delete data files and aggregate versions referenced by NO retained
     manifest (the newest ``keep`` versions are retained, older manifests
-    deleted). A retained manifest references its base files and its live
-    delta files alike. Returns the deleted data file paths. Safe order:
-    manifests first, then files — a crash mid-vacuum leaves referenced
-    files intact.
+    deleted). A retained manifest references the files of every entry
+    list it holds (_entry_lists): base files, live deltas and the
+    corpus' signatures alike. Returns the deleted data file paths. Safe
+    order: manifests first, then files — a crash mid-vacuum leaves
+    referenced files intact.
 
     Concurrent-merge safety (ADVICE r10): an in-flight merge writes its
-    ``data/v{B}`` delta, ``data/f{B}`` fold files and ``agg/v{B}``
-    BEFORE the manifest rename that commits them, so a naive "not
-    referenced by any retained manifest" sweep could delete a batch's
-    output in the commit window.
+    ``data/v{B}`` delta, ``data/f{B}`` fold files, ``sigs/v{B}`` and
+    ``agg/v{B}`` BEFORE the manifest rename that commits them, so a
+    naive "not referenced by any retained manifest" sweep could delete a
+    batch's output in the commit window.
     Directories with a version NEWER than the latest committed manifest
     are therefore skipped (the Delta-style retention check); within
     committed versions, a file is garbage only once no retained manifest
@@ -1230,7 +1243,7 @@ def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
     live_agg: set[str] = set()
     for v in keep_versions:
         m = _read_manifest(state_dir, v)
-        live.update(e["path"] for e in (*m["files"], *m.get("deltas", ())))
+        live.update(e["path"] for es in _entry_lists(m).values() for e in es)
         if "agg" in m:
             live_agg.add(m["agg"])
     deleted = []
@@ -1248,7 +1261,9 @@ def vacuum_manifest_store(state_dir: str, keep: int = 3) -> list[str]:
                 continue
             yield os.path.join(root, d)
 
-    for rel_dir in committed_dirs("data"):
+    # the roots listed files are written under: every store's data, and
+    # the corpus' signatures
+    for rel_dir in (*committed_dirs("data"), *committed_dirs("sigs")):
         sub = os.path.join(state_dir, rel_dir)
         for fn in os.listdir(sub):
             rel = os.path.join(rel_dir, fn)
@@ -1283,12 +1298,16 @@ def compact_manifest_store(
     Vacuum reclaims superseded versions; this bounds the LIVE file count
     and restores pruning.
 
-    Mechanics: the latest manifest's eligible files are read under the
-    recorded schema, repartitionByRange(key) into
-    ceil(rows/target) files under ``data/c{V}_{k}`` (k = per-version
-    compaction counter, so repeated compactions never collide), and the
-    manifest at version V is atomically rewritten to reference (the
-    other files by reference) + (new compacted files). The version
+    Mechanics: each entry list of the latest manifest whose schema it
+    records — the base ``files`` (``schema_ddl``) and the corpus'
+    ``sigs`` (``sigs_ddl``) — is compacted on its own: its eligible
+    files are read under that schema, repartitionByRange(key) into
+    ceil(rows/target) files under ``{root}/c{V}_{k}`` (root = the
+    list's directory, ``data`` or ``sigs``; k = per-version compaction
+    counter, so repeated compactions never collide), and the manifest at
+    version V is atomically rewritten ONCE to reference (the other files
+    by reference) + (new compacted files) of every list — a corpus'
+    docs and signatures are replaced together. The version
     NUMBER is untouched — manifest versions stay exactly micro-batch
     commit markers (bootstrap -1, stream ids 0..), so _merge_manifest_
     batch's replay guard and the next batch's id are unaffected; the
@@ -1296,13 +1315,14 @@ def compact_manifest_store(
     Rows are rewritten, never changed or deduplicated, so the store's
     content — a replica's rows or a history's versions — is identical —
     pinned by the replay-equality tests on compacted stores. A replica's
-    live deltas are carried BY REFERENCE, unread: they resolve by key,
-    whatever files the base rows sit in, and the next fold folds them.
+    live deltas record no schema of their own and are carried BY
+    REFERENCE, unread: they resolve by key, whatever files the base rows
+    sit in, and the next fold folds them.
 
-    No-op (returns None) when no files overlap and fewer than
-    ``min_files`` small files exist. Like vacuum, must not run
-    concurrently with a merge or another compaction (single-writer, the
-    manifest-store contract).
+    A list is compacted when its files overlap or it holds at least
+    ``min_files`` small files; no-op (returns None) when no list is.
+    Like vacuum, must not run concurrently with a merge or another
+    compaction (single-writer, the manifest-store contract).
 
     100 TB shape: a real deployment runs this as the Delta/Iceberg
     OPTIMIZE equivalent — off the hot path, bounded by the small-file
@@ -1314,39 +1334,42 @@ def compact_manifest_store(
     v = versions[-1]
     m = _read_manifest(state_dir, v)
     key0 = m["key"]
-    overlapping = _overlapping(m["files"])
     # 3/4 of target: merge rewrites naturally fragment into files a
     # shade under target (ceil split), and a half-target threshold
     # misses them; 3/4 catches real fragments while freshly compacted
     # ~target-sized files stay ineligible (no rewrite churn)
     thr = 3 * target_rows_per_file // 4
-    if not overlapping and sum(e["rows"] < thr for e in m["files"]) < min_files:
+    new_m, n_picked = dict(m), 0
+    for name, entries in _entry_lists(m).items():
+        ddl = m["schema_ddl"] if name == "files" else m.get(f"{name}_ddl")
+        overlapping = _overlapping(entries)
+        picked, kept = [], []
+        for e in entries:
+            (picked if e["rows"] < thr or id(e) in overlapping else kept).append(e)
+        n_small = sum(e["rows"] < thr for e in entries)
+        if ddl is None or not picked or (not overlapping and n_small < min_files):
+            continue
+        root = picked[0]["path"].split(os.sep, 1)[0]
+        n_comp = sum(
+            d.startswith(f"c{v}_") for d in os.listdir(os.path.join(state_dir, root))
+        )
+        rel = os.path.join(root, f"c{v}_{n_comp}")
+        picked_rows = sum(e["rows"] for e in picked)
+        n_new = max(1, min(256, -(-picked_rows // target_rows_per_file)))
+        (
+            spark.read.schema(ddl)
+            .parquet(*[os.path.join(state_dir, e["path"]) for e in picked])
+            .repartitionByRange(n_new, F.col(key0))
+            .write.mode("overwrite")
+            .option(*_NO_SUCCESS_MARKER)
+            .parquet(os.path.join(state_dir, rel))
+        )
+        new_m[name] = kept + _file_entries(state_dir, rel, key0)
+        n_picked += len(picked)
+    if not n_picked:
         return None
-    picked, kept = [], []
-    for e in m["files"]:
-        (picked if e["rows"] < thr or id(e) in overlapping else kept).append(e)
-    n_comp = sum(
-        1
-        for d in os.listdir(os.path.join(state_dir, "data"))
-        if d.startswith(f"c{v}_")
-    ) if os.path.isdir(os.path.join(state_dir, "data")) else 0
-    rel = os.path.join("data", f"c{v}_{n_comp}")
-    picked_rows = sum(e["rows"] for e in picked)
-    n_new = max(1, min(256, -(-picked_rows // target_rows_per_file)))
-    (
-        spark.read.schema(m["schema_ddl"])
-        .parquet(*[os.path.join(state_dir, e["path"]) for e in picked])
-        .repartitionByRange(n_new, F.col(key0))
-        .write.mode("overwrite")
-        .option(*_NO_SUCCESS_MARKER)
-        .parquet(os.path.join(state_dir, rel))
-    )
-    entries = kept + _file_entries(state_dir, rel, key0)
-    new_m = dict(
-        m,
-        files=entries,
-        total_rows=sum(e["rows"] for e in entries),
-        compacted_from=len(picked),
+    new_m.update(
+        total_rows=sum(e["rows"] for e in new_m["files"]), compacted_from=n_picked
     )
     _commit_manifest(state_dir, v, new_m)
     return new_m
@@ -1557,39 +1580,23 @@ def start_stream_stream_join(
 # ---------------------------------------------------------------------------
 
 
-def _corpus_parts(corpus_dir: str, kind: str) -> list[str]:
-    """Readable parts for a corpus side: the newest committed compaction
-    base (if any) plus committed delta versions ABOVE its _THROUGH id —
-    deltas at or below it are already folded in (and may linger only
-    until the next vacuum), so they are skipped, never double-counted."""
-    import glob
-
-    base, through = _latest_base(corpus_dir, kind)
-    parts = [base] if base else []
-    for d in sorted(glob.glob(os.path.join(corpus_dir, kind, "v*"))):
-        i = int(os.path.basename(d)[1:])
-        if i > through and os.path.exists(
-            os.path.join(corpus_dir, "sigs", f"v{i}", "_SUCCESS")
-        ):
-            parts.append(d)
-    return parts
-
-
 def read_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame | None:
-    """Committed corpus: newest compaction base + committed deltas (a
-    batch's sig _SUCCESS marker is written LAST, so a delta is visible
-    only when fully committed)."""
-    parts = _corpus_parts(corpus_dir, "docs")
-    if not parts:
+    """The admitted docs of the latest committed manifest (empty when
+    every batch so far admitted none), or None before the first commit.
+    A batch's files become visible only with the manifest that lists
+    them."""
+    m = _latest_manifest(corpus_dir)
+    if m is None:
         return None
-    return spark.read.parquet(*parts)
+    docs = _read(spark, corpus_dir, m["schema_ddl"], m["files"])
+    return docs if docs is not None else spark.createDataFrame([], m["schema_ddl"])
 
 
 def _read_sigs(spark: SparkSession, corpus_dir: str) -> DataFrame | None:
-    parts = _corpus_parts(corpus_dir, "sigs")
-    if not parts:
-        return None
-    return spark.read.parquet(*parts)
+    """The signature store: the (doc_id, band, bv) rows of the latest
+    committed manifest's ``sigs`` files, or None when it lists none."""
+    m = _latest_manifest(corpus_dir)
+    return _read(spark, corpus_dir, m["sigs_ddl"], m["sigs"]) if m else None
 
 
 def probe_corpus_sigs(
@@ -1602,21 +1609,18 @@ def probe_corpus_sigs(
     family: str = "md5",
     shingled: DataFrame | None = None,
     banded: DataFrame | None = None,
-    sigs: DataFrame | None = None,
 ) -> DataFrame | None:
     """Candidate (doc_id_new, dup_of) pairs: the incoming batch is
     shingled + signed fresh (O(batch) map work) and joined on (band, bv)
-    against the accumulated signature store — compaction base plus
-    committed deltas. The batch's band frame is the SMALL side, so AQE
-    broadcasts it onto the store scan: the store side (the 100 TB-scaled
-    side, base included post-compaction) never shuffles — pinned in
-    test_sinks.py against a compacted+vacuumed layout. Returns None when
-    no store exists yet (first batch). Pass ``sigs`` (e.g. the
-    _cached_store frame) to skip the per-batch disk read."""
+    against the accumulated signature store — every sig file the latest
+    manifest lists, compacted or not. The batch's band frame is the
+    SMALL side, so AQE broadcasts it onto the store scan: the store side
+    (the 100 TB-scaled side) never shuffles — pinned in test_sinks.py
+    against a compacted+vacuumed store. Returns None when no signature
+    is stored yet (first batch)."""
     from ..operators.dedup import minhash_banded, shingle_docs
 
-    if sigs is None:
-        sigs = _read_sigs(spark, corpus_dir)
+    sigs = _read_sigs(spark, corpus_dir)
     if sigs is None:
         return None
     if banded is not None:
@@ -1635,153 +1639,6 @@ def probe_corpus_sigs(
     )
 
 
-# ---------------------------------------------------------------------------
-# Cross-batch store cache for admission (OPT-IN, see cache_store): the
-# committed signature store and corpus docs served from executor storage
-# (localCheckpoint = MEMORY_AND_DISK) instead of re-read from parquet
-# every micro-batch. Keyed by corpus_dir; survives stream restarts within
-# a SparkSession (the availableNow re-start harness included).
-# Correctness does not depend on it: the cache key is the exact committed
-# layout (base dir, delta ids, newest commit-marker mtime), so an
-# external compaction, a foreign writer, or a recreated directory all
-# miss and trigger a rebuild from disk — the cache can only ever serve
-# frames content-equal to _read_sigs / read_corpus.
-# ---------------------------------------------------------------------------
-
-_STORE_CACHE: dict[str, dict] = {}
-
-
-def _marker_mtime(corpus_dir: str, base, delta_ids):
-    """Current on-disk mtime of the newest commit marker in the given
-    layout (last delta's _SUCCESS, else the base's _THROUGH), or None if
-    the layout is empty or the marker vanished (→ callers treat the
-    cached legs as stale and rebuild)."""
-    try:
-        if delta_ids:
-            return os.path.getmtime(
-                os.path.join(corpus_dir, "sigs", f"v{delta_ids[-1]}", "_SUCCESS")
-            )
-        if base:
-            return os.path.getmtime(os.path.join(base, "_THROUGH"))
-    except OSError:
-        return None
-    return None
-
-
-def _store_layout_key(corpus_dir: str):
-    """(sigs base, committed delta ids, newest marker mtime) — changes on
-    every commit, compaction, vacuum, or directory recreation."""
-    base, through = _latest_base(corpus_dir, "sigs")
-    deltas = _committed_versions(corpus_dir, through, "sigs")
-    ids = tuple(i for i, _ in deltas)
-    return base, ids, _marker_mtime(corpus_dir, base, ids)
-
-
-def _cached_store(spark: SparkSession, corpus_dir: str):
-    """(sigs, docs) DataFrames equal to the committed store, or
-    (None, None) when no store exists. Frames are unions of
-    lazily-localCheckpointed legs — first use scans parquet once, later
-    batches read executor storage. The docs side caches TEXT, not
-    shingle sets: verify shingles only the candidate-MATCHED rows each
-    batch (bounded by collisions), so caching full-corpus shingle
-    arrays would cost strictly more compute+memory than it saves —
-    measured, NOTES r6; the win is eliminating the per-batch parquet
-    scans of both sides.
-
-    Memory honesty at 100 TB: legs spill to executor disk
-    (MEMORY_AND_DISK); a deployment whose store exceeds cluster storage
-    runs with cache_store=False and keeps the plain parquet probe —
-    the cache is an optimization, never a correctness dependency."""
-    key = _store_layout_key(corpus_dir)
-    base, ids, _ = key
-    if base is None and not ids:
-        return None, None
-    ent = _STORE_CACHE.get(corpus_dir)
-    if ent is not None and ent["key"] == key:
-        return ent["sigs"], ent["docs"]
-    if (
-        ent is not None
-        and ent["key"][0] == base
-        and set(ent["key"][1]) <= set(ids)
-        and ent["key"][2] is not None
-        # The cached legs are only reusable if the newest layout element
-        # the cache already holds is BYTE-UNCHANGED on disk: a delta
-        # rewritten in place (same version id, fresh _SUCCESS) must fall
-        # through to the full rebuild, honoring the "foreign writer
-        # always triggers a rebuild" contract (ADVICE r6).
-        and _marker_mtime(corpus_dir, ent["key"][0], ent["key"][1]) == ent["key"][2]
-    ):
-        # commits landed since the cache entry (normally our own appends
-        # already covered them; this path heals a miss) — top up the legs
-        have = set(ent["key"][1])
-        sig_legs, doc_legs = list(ent["sig_legs"]), list(ent["doc_legs"])
-        new = [i for i in ids if i not in have]
-    else:
-        sig_legs, doc_legs = [], []
-        new = list(ids)
-        if base:
-            sig_legs.append(spark.read.parquet(base).localCheckpoint(eager=False))
-            doc_base, _ = _latest_base(corpus_dir, "docs")
-            if doc_base:
-                doc_legs.append(
-                    spark.read.parquet(doc_base).localCheckpoint(eager=False)
-                )
-    for i in new:
-        sig_legs.append(
-            spark.read.parquet(
-                os.path.join(corpus_dir, "sigs", f"v{i}")
-            ).localCheckpoint(eager=False)
-        )
-        doc_legs.append(
-            spark.read.parquet(
-                os.path.join(corpus_dir, "docs", f"v{i}")
-            ).localCheckpoint(eager=False)
-        )
-    return _store_cache_put(corpus_dir, key, sig_legs, doc_legs)
-
-
-def _store_cache_put(corpus_dir: str, key, sig_legs, doc_legs):
-    """Store legs under ``key``; collapse to one leg per side past 24
-    (bounds both the union plan width and the per-leg storage entries;
-    the collapse itself is one O(store) job every ~24 commits)."""
-    from functools import reduce
-
-    from pyspark.sql import DataFrame as _DF
-
-    if len(sig_legs) > 24:
-        sig_legs = [
-            reduce(_DF.unionByName, sig_legs).localCheckpoint(eager=True)
-        ]
-        doc_legs = [reduce(_DF.unionByName, doc_legs).localCheckpoint(eager=True)]
-    sigs = reduce(_DF.unionByName, sig_legs)
-    docs = reduce(_DF.unionByName, doc_legs)
-    _STORE_CACHE[corpus_dir] = {
-        "key": key, "sigs": sigs, "docs": docs,
-        "sig_legs": sig_legs, "doc_legs": doc_legs,
-    }
-    return sigs, docs
-
-
-def _store_cache_append(corpus_dir: str, batch_id: int, sig_leg, doc_leg) -> None:
-    """After a batch commits, extend the cache with the batch's own
-    in-memory admitted frames (no disk round-trip). No-op when the cache
-    entry is stale/absent — the next _cached_store syncs from disk."""
-    ent = _STORE_CACHE.get(corpus_dir)
-    if ent is None:
-        return
-    base, ids, _ = ent["key"]
-    marker = os.path.join(corpus_dir, "sigs", f"v{batch_id}", "_SUCCESS")
-    if not os.path.exists(marker):
-        return
-    key = (base, ids + (batch_id,), os.path.getmtime(marker))
-    _store_cache_put(
-        corpus_dir,
-        key,
-        list(ent["sig_legs"]) + [sig_leg.localCheckpoint(eager=False)],
-        list(ent["doc_legs"]) + [doc_leg.localCheckpoint(eager=False)],
-    )
-
-
 def start_corpus_dedup_admission(
     stream: DataFrame,
     corpus_dir: str,
@@ -1793,7 +1650,6 @@ def start_corpus_dedup_admission(
     trigger_available_now: bool = True,
     family: str = "md5",
     quality_filter=None,
-    cache_store: bool = False,
     fuse_probe: bool = False,
     allow_checkpoint_rebind: bool = False,
 ):
@@ -1820,13 +1676,19 @@ def start_corpus_dedup_admission(
          against only the candidate-matched corpus docs — per-batch cost
          O(batch + collisions), never O(corpus) (same asymmetry as
          operators.dedup.incremental_dedup_pairs);
-      3. admitted docs land in corpus_dir/docs/v{batchId}, their
-         signatures in corpus_dir/sigs/v{batchId} — the sig _SUCCESS is
-         written last and is the batch's commit marker, so crash replay
-         of a committed batch short-circuits (idempotent, same protocol
-         as the CDC merge sinks).
+      3. admitted docs land in corpus_dir/data/v{batchId}, their
+         signatures in corpus_dir/sigs/v{batchId}, and ONE manifest
+         rename commits both (_commit_manifest): manifest v{batchId}
+         carries the previous manifest's docs (``files``) and sigs
+         (``sigs``) entries by reference and appends the batch's own.
+         Crash replay of a committed batch short-circuits on its
+         manifest — the protocol of the replica and the SCD2 history.
 
-    The version-dir signature layout trades the bucketed store's
+    The corpus is a manifest store: read_corpus and the probe read the
+    latest manifest's lists, and vacuum_manifest_store and
+    compact_manifest_store serve it as they serve the replica (a
+    compaction rewrites the docs and the sigs in one manifest
+    replacement). The per-batch file layout trades the bucketed store's
     shuffle-free probe (persist_signature_store — the batch-mode path)
     for per-batch atomicity + replay idempotence, which streaming needs;
     AQE still broadcasts the small incoming band frame in the probe.
@@ -1843,19 +1705,6 @@ def start_corpus_dedup_admission(
     later GOOD near-duplicate (a rejected doc must not become a cluster
     representative). operators/text.filter_quality is the stock
     Gopher/C4 gate; any batch-safe transform fits.
-
-    ``cache_store`` serves the committed signature store and corpus
-    docs from executor storage across batches (and across availableNow
-    restarts in the same session) instead of re-reading parquet every
-    batch — see _cached_store for the layout-keyed invalidation
-    contract. Default OFF by measurement: on local disk the OS page
-    cache absorbs the re-read, and the cache's per-batch leg
-    materializations measured 8-15% SLOWER at both 1× and 10× batch
-    sizes (A/B in NOTES r6) — the steady-state floor is the fixed
-    per-batch job count, not store I/O. Turn ON only when the store
-    lives on genuinely slow/remote storage (object store with
-    per-request latency) AND fits cluster storage memory; results are
-    identical either way (pinned in tests).
 
     ``fuse_probe`` folds the within-batch collapse INTO the store probe:
     one banded candidate join of the batch against (batch ∪ store) and
@@ -1874,9 +1723,9 @@ def start_corpus_dedup_admission(
     (_bind_checkpoint_to_corpus — refuses the silent-data-loss modes the
     r8 500k-store bench measured: a fresh checkpoint's batch ids restart
     at 0, so its batches are either skipped whole as phantom replays or
-    written below the compaction base and vacuumed). Pass True ONLY for
-    lost-checkpoint recovery where the source re-delivers
-    previously-processed data — there the marker short-circuit is the
+    committed below the latest manifest, where no reader looks). Pass
+    True ONLY for lost-checkpoint recovery where the source re-delivers
+    previously-processed data — there the manifest short-circuit is the
     idempotence you want."""
     from ..operators.dedup import (
         dup_cluster_losers_capped,
@@ -1888,8 +1737,8 @@ def start_corpus_dedup_admission(
 
     def handle(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        marker = os.path.join(corpus_dir, "sigs", f"v{batch_id}", "_SUCCESS")
-        if os.path.exists(marker):
+        # the manifest is the commit: see _merge_changes
+        if os.path.exists(os.path.join(_manifest_dir(corpus_dir), f"v{batch_id}.json")):
             return
         docs = batch_df.select("doc_id", "text")
         if quality_filter is not None:
@@ -1912,13 +1761,8 @@ def start_corpus_dedup_admission(
         banded = minhash_banded(sh, k, bands, family=family).localCheckpoint(
             eager=False
         )
-        store_sigs = store_docs = None
-        if cache_store:
-            store_sigs, store_docs = _cached_store(spark, corpus_dir)
-        sigs = store_sigs
-        if fuse_probe and sigs is None:
-            sigs = _read_sigs(spark, corpus_dir)
-        if fuse_probe and sigs is not None:
+        sigs = _read_sigs(spark, corpus_dir) if fuse_probe else None
+        if sigs is not None:
             # FUSED collapse+probe (see docstring): one banded candidate
             # join of the batch against (batch ∪ store), one verify
             # chain, then split by the carried source tag — in-batch
@@ -1950,11 +1794,7 @@ def start_corpus_dedup_admission(
                 .select(F.col("dup_of").alias("doc_id"))
                 .distinct()
             )
-            corpus = (
-                store_docs
-                if store_docs is not None
-                else read_corpus(spark, corpus_dir)
-            )
+            corpus = read_corpus(spark, corpus_dir)
             sh_matched = shingle_docs(
                 corpus.join(matched_ids, "doc_id", "left_semi"), n
             )
@@ -1993,24 +1833,16 @@ def start_corpus_dedup_admission(
             banded_live = banded.join(losers, "doc_id", "left_anti")
             # 2. cross-batch probe against the accumulated store; probe,
             # verify, and the admission anti-join stay one fused lazy plan
-            # materialized by the pre-write checkpoint below. With
-            # cache_store both store sides come from executor storage
-            # (_cached_store) — the probe and the matched-docs verify read
-            # skip their per-batch parquet scans; shingling still runs only
+            # materialized by the docs write below. Shingling runs only
             # over candidate-MATCHED corpus rows (caching full-corpus
             # shingle sets measured strictly worse, NOTES r6).
             cand0 = probe_corpus_sigs(
                 spark, corpus_dir, docs, n, k, bands, family, banded=banded_live,
-                sigs=store_sigs,
             )
             if cand0 is not None:
                 cand = cand0.localCheckpoint(eager=False)
                 matched_ids = cand.select(F.col("dup_of").alias("doc_id")).distinct()
-                corpus = (
-                    store_docs
-                    if store_docs is not None
-                    else read_corpus(spark, corpus_dir)
-                )
+                corpus = read_corpus(spark, corpus_dir)
                 sh_matched = shingle_docs(
                     corpus.join(matched_ids, "doc_id", "left_semi"), n
                 )
@@ -2018,8 +1850,8 @@ def start_corpus_dedup_admission(
                     sh_live, sh_matched, cand, threshold
                 ).select(F.col("doc_id")).distinct()
                 docs = docs.join(dupped, "doc_id", "left_anti")
-        # 3. idempotent versioned append: docs first, sigs (+marker) last.
-        # The docs write itself materializes the admission chain (probe →
+        # 3. docs, then sigs, then the manifest that commits both. The
+        # docs write itself materializes the admission chain (probe →
         # verify → anti-join, all over the already-checkpointed staging
         # frames); the sigs semi-join then reads the admitted ids BACK
         # from the just-written parquet — replacing the former
@@ -2027,23 +1859,35 @@ def start_corpus_dedup_admission(
         # read-back is a tiny fresh local file). Result frames are
         # byte-identical: the semi-join key set is the same admitted set
         # either way (pinned in test_streaming.py).
-        docs_path = os.path.join(corpus_dir, "docs", f"v{batch_id}")
-        sigs_path = os.path.join(corpus_dir, "sigs", f"v{batch_id}")
-        docs.write.mode("overwrite").parquet(docs_path)
-        admitted_ids = spark.read.parquet(docs_path).select("doc_id")
-        banded.join(admitted_ids, "doc_id", "left_semi").write.mode(
-            "overwrite"
-        ).parquet(sigs_path)
-        if cache_store:
-            # extend the cache with the just-written admitted frames —
-            # read back from parquet so the cached legs are scans, not
-            # replays of this batch's verify chain
-            _store_cache_append(
-                corpus_dir,
-                batch_id,
-                spark.read.parquet(sigs_path),
-                spark.read.parquet(docs_path),
-            )
+        docs_rel = os.path.join("data", f"v{batch_id}")
+        sigs_rel = os.path.join("sigs", f"v{batch_id}")
+        docs.write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+            os.path.join(corpus_dir, docs_rel)
+        )
+        admitted_ids = spark.read.parquet(os.path.join(corpus_dir, docs_rel)).select(
+            "doc_id"
+        )
+        sig_rows = banded.join(admitted_ids, "doc_id", "left_semi")
+        sig_rows.write.mode("overwrite").option(*_NO_SUCCESS_MARKER).parquet(
+            os.path.join(corpus_dir, sigs_rel)
+        )
+        prev = _latest_manifest(corpus_dir, before=batch_id)
+        files = [
+            *(prev["files"] if prev else []),
+            *_file_entries(corpus_dir, docs_rel, "doc_id"),
+        ]
+        _commit_manifest(corpus_dir, batch_id, {
+            "batch_id": batch_id,
+            "key": "doc_id",
+            "schema_ddl": _widest_ddl(prev, spark, docs.schema.fields),
+            "sigs_ddl": _widest_ddl(None, spark, sig_rows.schema.fields),
+            "files": files,
+            "sigs": [
+                *(prev["sigs"] if prev else []),
+                *_file_entries(corpus_dir, sigs_rel, "doc_id"),
+            ],
+            "total_rows": sum(e["rows"] for e in files),
+        })
 
     _bind_checkpoint_to_corpus(checkpoint, corpus_dir, allow_checkpoint_rebind)
     writer = stream.writeStream.foreachBatch(handle).option(
@@ -2063,12 +1907,12 @@ def _bind_checkpoint_to_corpus(
 
       * a FRESH checkpoint restarts micro-batch ids at 0, so against a
         corpus with committed versions its batch N collides with the
-        existing v{N}: if v{N}'s sig marker survives, handle() treats the
+        existing v{N}: if manifest v{N} survives, handle() treats the
         incoming batch as a crash REPLAY and silently drops it whole; if
-        compaction already folded v{N} (marker vacuumed), the batch
-        WRITES below the base's _THROUGH id — invisible to read_corpus
-        and deleted by the next vacuum (measured: 9,999 admitted docs
-        silently absent from the logical corpus);
+        vacuum already removed it, the batch COMMITS manifest v{N} below
+        the latest one — invisible to read_corpus, whose files the next
+        vacuum deletes (measured with the earlier compaction-base layout:
+        9,999 admitted docs silently absent from the logical corpus);
       * a checkpoint bound to corpus A pointed at corpus B replays A's
         batch-id sequence against B's version history — same two
         failure shapes.
@@ -2084,14 +1928,14 @@ def _bind_checkpoint_to_corpus(
 
     ``allow_rebind=True`` is the EXPLICIT recovery escape hatch for a
     lost/discarded checkpoint: it (re)writes the binding and accepts the
-    old marker-skip semantics, which are only safe when the new stream's
+    manifest-skip semantics, which are only safe when the new stream's
     source re-delivers PREVIOUSLY-PROCESSED data (full source replay —
-    committed versions short-circuit, nothing duplicates; writes that
-    land below a compaction base are already-folded content and stay
-    invisible by design). With genuinely NEW data in the re-delivered
-    stream the id collision semantics apply — that is exactly the silent
-    drop this guard exists to refuse, so rebind is an operator assertion,
-    never a default."""
+    committed versions short-circuit, nothing duplicates; versions
+    committed below the latest manifest hold already-admitted content
+    and stay invisible by design). With genuinely NEW data in the
+    re-delivered stream the id collision semantics apply — that is
+    exactly the silent drop this guard exists to refuse, so rebind is an
+    operator assertion, never a default."""
     import json as _json
 
     binding = os.path.join(checkpoint, "corpus_binding.json")
@@ -2123,150 +1967,25 @@ def _bind_checkpoint_to_corpus(
                 f"checkpoint {checkpoint!r} is bound to corpus {bound!r} "
                 f"but was asked to drive {target!r}: batch ids from one "
                 "corpus' history replayed against another lose data "
-                "silently (batches skipped as phantom replays or written "
-                "below the compaction base). Use the corpus' own "
+                "silently (batches skipped as phantom replays or committed "
+                "below the latest manifest). Use the corpus' own "
                 "checkpoint, a new checkpoint with a new corpus_dir, or "
                 "pass allow_checkpoint_rebind=True if this stream "
                 "re-delivers previously-processed source data."
             )
         return
-    has_committed = any(
-        _latest_base(corpus_dir, kind)[0] is not None
-        or _committed_versions(corpus_dir, -1, kind)
-        for kind in ("docs", "sigs")
-    )
-    if has_committed and not allow_rebind:
+    if _manifest_versions(corpus_dir) and not allow_rebind:
         raise ValueError(
             f"corpus {target!r} already has committed versions but "
             f"checkpoint {checkpoint!r} is new: its micro-batch ids "
             "restart at 0 and collide with the existing version history "
-            "(batches silently skipped as replays, or written below the "
-            "compaction base and vacuumed). Resume with the checkpoint "
+            "(batches silently skipped as replays, or committed below the "
+            "latest manifest and vacuumed). Resume with the checkpoint "
             "that built this corpus, start a fresh corpus_dir, or pass "
             "allow_checkpoint_rebind=True if this stream re-delivers "
             "previously-processed source data (lost-checkpoint recovery)."
         )
     _write()
-
-
-def _latest_base(corpus_dir: str, kind: str) -> tuple[str | None, int]:
-    """Newest committed compaction base for ``kind`` ('docs'|'sigs'):
-    (path, through-batch-id), or (None, -1). A base is committed iff its
-    directory rename completed — the _THROUGH file is written inside the
-    temp dir BEFORE the atomic rename, so its presence plus the final
-    name is the whole commit."""
-    import glob
-
-    best, through = None, -1
-    for d in glob.glob(os.path.join(corpus_dir, kind, "base_v*")):
-        name = os.path.basename(d)
-        if name.endswith("_tmp"):
-            continue
-        t = int(name[len("base_v"):])
-        if t > through and os.path.exists(os.path.join(d, "_THROUGH")):
-            best, through = d, t
-    return best, through
-
-
-def _committed_versions(
-    corpus_dir: str, above: int, kind: str = "docs"
-) -> list[tuple[int, str]]:
-    """Delta versions v{i} of ``kind`` with i > ``above`` whose batch
-    committed (sig _SUCCESS marker). Enumerates the kind's OWN directory:
-    after a crash between the docs and sigs base renames the two sides
-    hold different delta sets (a later vacuum removes docs deltas the
-    docs base absorbed while the sigs copies must survive), so deriving
-    one side's fold list from the other's listing loses deltas."""
-    import glob
-
-    out = []
-    for d in glob.glob(os.path.join(corpus_dir, kind, "v*")):
-        i = int(os.path.basename(d)[1:])
-        if i > above and os.path.exists(
-            os.path.join(corpus_dir, "sigs", f"v{i}", "_SUCCESS")
-        ):
-            out.append((i, d))
-    return sorted(out)
-
-
-def compact_corpus(
-    spark: SparkSession,
-    corpus_dir: str,
-    min_versions: int = 8,
-    vacuum: bool = True,
-) -> int:
-    """Fold committed admission deltas into a single base per side — the
-    LSM/Delta-checkpoint move that keeps read_corpus from unioning an
-    ever-growing list of per-micro-batch directories (the streaming
-    small-files problem; see compact_parquet_dir for the event-log
-    flavor).
-
-    Commit protocol (crash-safe at every step):
-      1. write merged parquet + a _THROUGH marker into base_v{N}_tmp
-         (N = highest merged batch id);
-      2. os.rename to base_v{N} — atomic; this IS the commit;
-      3. vacuum: delete merged delta dirs and older bases.
-    Readers (read_corpus/_read_sigs) take the newest committed base plus
-    only deltas ABOVE its _THROUGH id — so a crash after (2) but before
-    (3) double-counts nothing: the stale deltas are ≤ N and skipped; the
-    next compaction retries the vacuum. Returns the number of deltas
-    folded (0 = below min_versions, nothing done)."""
-    import shutil
-
-    # Fold lists are derived PER KIND from that kind's own committed base:
-    # after a crash between the docs rename and the sigs rename the docs
-    # base is ahead of the sigs base, and reusing the docs-derived list for
-    # sigs would exclude the sig deltas in (sigs_through, docs_through] —
-    # once a new sigs base committed past them, readers would skip them and
-    # vacuum would delete them (permanent signature loss). Each kind folds
-    # everything above its OWN through, so the next compaction after a
-    # crash heals the skew instead of baking it in.
-    pending = {
-        kind: _committed_versions(corpus_dir, _latest_base(corpus_dir, kind)[1], kind)
-        for kind in ("docs", "sigs")
-    }
-    if max(len(v) for v in pending.values()) < min_versions:
-        return 0
-    for kind in ("docs", "sigs"):
-        versions = pending[kind]
-        if not versions:
-            continue
-        new_through = versions[-1][0]
-        base, _ = _latest_base(corpus_dir, kind)
-        parts = ([base] if base else []) + [p for _, p in versions]
-        tmp = os.path.join(corpus_dir, kind, f"base_v{new_through}_tmp")
-        final = os.path.join(corpus_dir, kind, f"base_v{new_through}")
-        spark.read.parquet(*parts).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_THROUGH"), "w") as f:
-            f.write(str(new_through))
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)  # the commit point
-    if vacuum:
-        vacuum_corpus(corpus_dir)
-    return max(len(v) for v in pending.values())
-
-
-def vacuum_corpus(corpus_dir: str) -> None:
-    """Delete delta dirs already folded into the newest base, and bases
-    older than the newest — safe to re-run any time (readers never look
-    at either)."""
-    import glob
-    import shutil
-
-    for kind in ("docs", "sigs"):
-        newest, through = _latest_base(corpus_dir, kind)
-        if newest is None:
-            continue
-        for d in glob.glob(os.path.join(corpus_dir, kind, "v*")):
-            if int(os.path.basename(d)[1:]) <= through:
-                shutil.rmtree(d, ignore_errors=True)
-        for d in glob.glob(os.path.join(corpus_dir, kind, "base_v*")):
-            name = os.path.basename(d)
-            if name.endswith("_tmp") or (
-                d != newest and int(name[len("base_v"):]) < through
-            ):
-                shutil.rmtree(d, ignore_errors=True)
 
 
 def start_funnel_state(

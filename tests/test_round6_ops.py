@@ -139,93 +139,6 @@ class TestXxh64Parity:
             assert jvm == py
 
 
-class TestAdmissionStoreCache:
-    """The r6 cross-batch store cache (_cached_store) must be a pure
-    optimization: identical admission decisions with and without it,
-    reuse across stream restarts, and layout-keyed invalidation."""
-
-    DOCS = [
-        (1, "the quick brown fox one jumps over the lazy dog near river "
-            "bend while birds watch the water flow past the old mill"),
-        (2, "completely different content describing distributed storage "
-            "engines compaction strategies and write amplification costs"),
-    ]
-    DOCS2 = [
-        (10, "the quick brown fox one jumps over the lazy dog near river "
-             "bend while birds watch the water flow past the old mill tail"),
-        (30, "entirely novel text on tidal energy turbines and grid "
-             "integration challenges in northern estuaries today"),
-    ]
-
-    def _run(self, spark, src, corpus_dir, ckpt, cache):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            start_corpus_dedup_admission,
-        )
-
-        stream = spark.readStream.schema("doc_id long, text string").json(src)
-        start_corpus_dedup_admission(
-            stream, corpus_dir, ckpt, threshold=0.5, cache_store=cache
-        ).awaitTermination()
-
-    def _feed(self, src, name, rows):
-        import json
-        import os
-
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            for did, text in rows:
-                f.write(json.dumps({"doc_id": did, "text": text}) + "\n")
-
-    def test_cache_and_nocache_equivalent(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            _STORE_CACHE,
-            read_corpus,
-        )
-
-        got = {}
-        for cache in (True, False):
-            base = tmp_path / ("cache" if cache else "nocache")
-            src, cd, ck = str(base / "src"), str(base / "corpus"), str(base / "ckpt")
-            self._feed(src, "b1.json", self.DOCS)
-            self._run(spark, src, cd, ck, cache)
-            # second stream run = the availableNow restart harness; the
-            # cached entry from run 1 must be reused and stay correct
-            self._feed(src, "b2.json", self.DOCS2)
-            self._run(spark, src, cd, ck, cache)
-            got[cache] = sorted(
-                r.doc_id for r in read_corpus(spark, cd).collect()
-            )
-            assert (cd in _STORE_CACHE) == cache
-        assert got[True] == got[False] == [1, 2, 30]
-
-    def test_cache_invalidated_by_compaction(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            _STORE_CACHE,
-            _store_layout_key,
-            compact_corpus,
-            read_corpus,
-        )
-
-        src, cd, ck = (
-            str(tmp_path / "src"), str(tmp_path / "corpus"), str(tmp_path / "ckpt")
-        )
-        self._feed(src, "b1.json", self.DOCS)
-        self._run(spark, src, cd, ck, True)
-        self._feed(src, "b2.json", [self.DOCS2[1]])
-        self._run(spark, src, cd, ck, True)
-        key_before = _STORE_CACHE[cd]["key"]
-        assert compact_corpus(spark, cd, min_versions=1) > 0
-        assert _store_layout_key(cd) != key_before
-        # admission on the compacted store: near-dup of doc 1 still
-        # rejected (the rebuilt cache serves the folded base)
-        self._feed(src, "b3.json", [self.DOCS2[0]])
-        self._run(spark, src, cd, ck, True)
-        assert sorted(r.doc_id for r in read_corpus(spark, cd).collect()) == [
-            1, 2, 30,
-        ]
-        assert _STORE_CACHE[cd]["key"] != key_before
-
-
 class TestCappedLosersGenericIds:
     """dup_cluster_losers_capped derives its schema from the input frame —
     string doc ids must round-trip identically through the capped path

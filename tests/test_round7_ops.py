@@ -134,79 +134,6 @@ class TestHalfMem:
         assert _half_mem("garbage") == "1g"  # conservative fallback
 
 
-class TestStoreCacheInPlaceRewrite:
-    """ADVICE r6 (low): a delta rewritten IN PLACE (same version ids,
-    fresh commit marker) must trigger a full cache rebuild — the top-up
-    branch may only fire when the newest cached layout element is
-    byte-unchanged on disk."""
-
-    DOCS = [
-        (1, "the quick brown fox one jumps over the lazy dog near river "
-            "bend while birds watch the water flow past the old mill"),
-        (2, "completely different content describing distributed storage "
-            "engines compaction strategies and write amplification costs"),
-    ]
-    DOCS2 = [
-        (30, "entirely novel text on tidal energy turbines and grid "
-             "integration challenges in northern estuaries today"),
-    ]
-
-    def _feed(self, src, name, rows):
-        import json
-
-        os.makedirs(src, exist_ok=True)
-        with open(os.path.join(src, name), "w") as f:
-            for did, text in rows:
-                f.write(json.dumps({"doc_id": did, "text": text}) + "\n")
-
-    def _run(self, spark, src, corpus_dir, ckpt):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            start_corpus_dedup_admission,
-        )
-
-        stream = spark.readStream.schema("doc_id long, text string").json(src)
-        start_corpus_dedup_admission(
-            stream, corpus_dir, ckpt, threshold=0.5, cache_store=True
-        ).awaitTermination()
-
-    def test_inplace_delta_rewrite_rebuilds(self, spark, tmp_path):
-        from simple_cdc_service_spark.streaming.pipeline import (
-            _STORE_CACHE,
-            _cached_store,
-        )
-
-        src, cd, ck = (
-            str(tmp_path / "src"), str(tmp_path / "corpus"), str(tmp_path / "ckpt")
-        )
-        self._feed(src, "b1.json", self.DOCS)
-        self._run(spark, src, cd, ck)
-        self._feed(src, "b2.json", self.DOCS2)
-        self._run(spark, src, cd, ck)
-        ent = _STORE_CACHE[cd]
-        ids = ent["key"][1]
-        assert ids, "expected at least one committed delta"
-        last = ids[-1]
-        # rewrite the newest docs delta IN PLACE: same version id, doc 30's
-        # text changed, fresh _SUCCESS mtime on the sigs marker
-        ddir = os.path.join(cd, "docs", f"v{last}")
-        old = spark.read.parquet(ddir).toPandas()
-        old.loc[old.doc_id == 30, "text"] = "REWRITTEN BY FOREIGN WRITER"
-        rewritten = spark.createDataFrame(old)
-        rewritten.write.mode("overwrite").parquet(ddir + ".tmp")
-        import shutil
-
-        shutil.rmtree(ddir)
-        os.rename(ddir + ".tmp", ddir)
-        marker = os.path.join(cd, "sigs", f"v{last}", "_SUCCESS")
-        future = os.path.getmtime(marker) + 10
-        os.utime(marker, (future, future))
-        # the cache must now REBUILD from disk (stale legs hold the old
-        # text) — before the fix the top-up branch returned them as-is
-        _, docs = _cached_store(spark, cd)
-        texts = {r.doc_id: r.text for r in docs.collect()}
-        assert texts[30] == "REWRITTEN BY FOREIGN WRITER"
-
-
 class TestFactorizeDecisionCache:
     """VERDICT r7 #1: the adaptive-factorization decision statistic is
     cached per (source plan, input files + mtimes, shingle params) within

@@ -373,9 +373,9 @@ class TestCheckpointCorpusBinding:
     """The 500k-store admission bench (r8) surfaced a silent-data-loss
     protocol hole: a FRESH checkpoint restarts micro-batch ids at 0, so
     against a corpus with committed versions its batches are either
-    skipped whole (marker present -> treated as crash replay) or written
-    below the compaction base (marker vacuumed -> invisible to
-    read_corpus, deleted by the next vacuum; measured: 9,999 admitted
+    skipped whole (manifest present -> treated as crash replay) or
+    committed below the latest manifest (manifest vacuumed -> invisible
+    to read_corpus, deleted by the next vacuum; measured: 9,999 admitted
     docs silently absent). start_corpus_dedup_admission now binds a
     checkpoint to its corpus on first use and refuses mismatches."""
 
@@ -409,6 +409,24 @@ class TestCheckpointCorpusBinding:
         with _pytest.raises(ValueError, match="bound to corpus"):
             _bind_checkpoint_to_corpus(ckpt, b)
 
+    @staticmethod
+    def _commit(corpus, version, rel):
+        """Commit corpus manifest ``version`` listing one docs and one sig
+        file under ``rel`` — the on-disk shape of a committed batch
+        (rel ``v{B}``) or of a compacted store (rel ``c{V}_0``)."""
+        from simple_cdc_service_spark.streaming.pipeline import _commit_manifest
+
+        entry = {"rows": 1, "min": 0, "max": 0, "exact": True}
+        _commit_manifest(str(corpus), version, {
+            "batch_id": version,
+            "key": "doc_id",
+            "schema_ddl": "`doc_id` bigint, `text` string",
+            "sigs_ddl": "`doc_id` bigint, `band` int, `bv` bigint",
+            "files": [dict(entry, path=f"data/{rel}/part-0.parquet")],
+            "sigs": [dict(entry, path=f"sigs/{rel}/part-0.parquet")],
+            "total_rows": 1,
+        })
+
     def test_new_checkpoint_refuses_corpus_with_committed_delta(self, tmp_path):
         import pytest as _pytest
 
@@ -417,18 +435,17 @@ class TestCheckpointCorpusBinding:
         )
 
         corpus = tmp_path / "corpus"
-        (corpus / "docs" / "v0").mkdir(parents=True)
-        (corpus / "sigs" / "v0").mkdir(parents=True)
-        (corpus / "sigs" / "v0" / "_SUCCESS").touch()
+        self._commit(corpus, 0, "v0")
         with _pytest.raises(ValueError, match="already has committed versions"):
             _bind_checkpoint_to_corpus(
                 str(tmp_path / "fresh_ckpt"), str(corpus)
             )
 
     def test_new_checkpoint_refuses_compacted_corpus(self, tmp_path):
-        """The nastier half: compaction vacuumed the deltas, so only the
-        base betrays the history — a fresh checkpoint's batch 0 would
-        write BELOW the base's _THROUGH id and be invisible/vacuumed."""
+        """The nastier half: compaction and vacuum removed the batch files
+        and every older manifest, so only the latest, compacted manifest
+        betrays the history — a fresh checkpoint's batch 0 would commit
+        BELOW it and be invisible/vacuumed."""
         import pytest as _pytest
 
         from simple_cdc_service_spark.streaming.pipeline import (
@@ -436,8 +453,7 @@ class TestCheckpointCorpusBinding:
         )
 
         corpus = tmp_path / "corpus"
-        (corpus / "docs" / "base_v0").mkdir(parents=True)
-        (corpus / "docs" / "base_v0" / "_THROUGH").touch()
+        self._commit(corpus, 2, "c2_0")
         with _pytest.raises(ValueError, match="already has committed versions"):
             _bind_checkpoint_to_corpus(
                 str(tmp_path / "fresh_ckpt"), str(corpus)
@@ -488,8 +504,7 @@ class TestCheckpointCorpusBinding:
         )
 
         corpus = tmp_path / "corpus"
-        (corpus / "docs" / "base_v0").mkdir(parents=True)
-        (corpus / "docs" / "base_v0" / "_THROUGH").touch()
+        self._commit(corpus, 2, "c2_0")
         ckpt = str(tmp_path / "fresh_ckpt")
         _bind_checkpoint_to_corpus(ckpt, str(corpus), allow_rebind=True)
         # now bound; pointing at another corpus refuses without the flag

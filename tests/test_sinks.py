@@ -183,20 +183,22 @@ class TestSignatureStore:
 
 class TestCompactedSigStoreProbe:
     def test_post_compaction_probe_leaves_store_unshuffled(self, spark, tmp_path):
-        """After compact_corpus + vacuum, the admission probe against the
-        folded signature base must still cost O(batch): the batch's band
-        frame is broadcast onto the store scan (BroadcastHashJoin), and
-        the store side pays NO (band, bv) exchange. Also pins that the
-        sigs side actually folded: the probe reads base_v* parquet, not
-        the vacuumed v* deltas."""
+        """After compact_manifest_store + vacuum, the admission probe
+        against the compacted signature files must still cost O(batch):
+        the batch's band frame is broadcast onto the store scan
+        (BroadcastHashJoin), and the store side pays NO (band, bv)
+        exchange. Also pins that the sigs side actually folded: the probe
+        reads the compacted sig files the manifest lists, not the
+        vacuumed per-batch v* files."""
         import json as _json
         import os as _os
         import re
 
         from simple_cdc_service_spark.streaming.pipeline import (
-            compact_corpus,
+            compact_manifest_store,
             probe_corpus_sigs,
             start_corpus_dedup_admission,
+            vacuum_manifest_store,
         )
 
         src = str(tmp_path / "src")
@@ -216,10 +218,10 @@ class TestCompactedSigStoreProbe:
                 stream, corpus_dir, ckpt, threshold=0.5
             ).awaitTermination()
 
-        assert compact_corpus(spark, corpus_dir, min_versions=2, vacuum=True) == 3
-        assert _os.path.exists(
-            _os.path.join(corpus_dir, "sigs", "base_v2", "_THROUGH")
-        ), "sigs side did not fold"
+        m = compact_manifest_store(spark, corpus_dir, min_files=2)
+        vacuum_manifest_store(corpus_dir, keep=1)
+        compacted = {_os.path.dirname(e["path"]) for e in m["sigs"]}
+        assert compacted == {"sigs/c2_0"}, "sigs side did not fold"
 
         batch = spark.createDataFrame(
             [(99, "delta document cataloguing moths drawn to the lighthouse lens")],
@@ -227,8 +229,8 @@ class TestCompactedSigStoreProbe:
         )
         cand = probe_corpus_sigs(spark, corpus_dir, batch)
         plan = plan_string(cand)
-        # store side folded: scan reads the compacted base, no delta dirs
-        assert "base_v2" in plan, plan
+        # store side folded: scan reads the compacted files, no batch dirs
+        assert "sigs/c2_0" in plan, plan
         assert not re.search(r"sigs/v\d", plan), plan
         # no (band, bv) shuffle anywhere: the store never repartitions and
         # the batch side ships by broadcast, not exchange

@@ -95,7 +95,8 @@ class TestBatchCommitIO:
     paid every batch. Without native libhadoop, Hadoop's local filesystem
     starts a child process per permission it sets or reads, so the
     session commits checkpoint logs through the FileSystem API, and the
-    replica writes no _SUCCESS marker (its commit is the manifest)."""
+    manifest stores write no _SUCCESS marker (their commit is the
+    manifest)."""
 
     def test_checkpoint_logs_use_the_filesystem_manager(self, spark, tmp_path):
         jvm = spark._jvm
@@ -106,13 +107,13 @@ class TestBatchCommitIO:
         )
         assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
-    def test_replica_writes_no_success_marker_admission_keeps_its_own(
-        self, spark, tmp_path
-    ):
+    def test_replica_and_admission_write_no_success_marker(self, spark, tmp_path):
         """The replica's delta and fold directories hold parquet files and
-        no _SUCCESS; a corpus-admission batch still commits on its sigs
-        marker. 120 events against target_rows_per_file=50 fold batch 0."""
+        no _SUCCESS; so do a corpus-admission batch's docs and sigs
+        directories, which manifest v0 commits. 120 events against
+        target_rows_per_file=50 fold batch 0."""
         from simple_cdc_service_spark.streaming.pipeline import (
+            _manifest_versions,
             start_corpus_dedup_admission,
         )
 
@@ -140,7 +141,11 @@ class TestBatchCommitIO:
             spark.readStream.schema("doc_id long, text string").json(docs),
             corpus_dir, str(tmp_path / "ckpt2"), threshold=0.5,
         ))
-        assert os.path.exists(os.path.join(corpus_dir, "sigs", "v0", "_SUCCESS"))
+        assert _manifest_versions(corpus_dir) == [0]
+        for d in ("data", "sigs"):
+            written = os.listdir(os.path.join(corpus_dir, d, "v0"))
+            assert any(f.endswith(".parquet") for f in written), (d, written)
+            assert "_SUCCESS" not in written, (d, written)
 
 
 class TestCrashRecoveryReplay:
@@ -937,17 +942,18 @@ class TestCorpusDedupAdmission:
         assert sorted(got3) == sorted(got2), got3
 
     def test_compaction_folds_versions_without_double_count(self, spark, tmp_path):
-        """compact_corpus folds committed deltas into a base; readers see
-        the same corpus before and after, stale deltas left by a crash
-        between commit and vacuum are skipped (not double-counted), and
-        admission keeps working on top of a compacted corpus."""
+        """compact_manifest_store folds the corpus' per-batch docs and sig
+        files in ONE manifest replacement; readers see the same corpus
+        before and after, the superseded batch files left while vacuum
+        has not run are not double-counted, and admission keeps working
+        on top of a compacted corpus."""
         import glob
 
         from simple_cdc_service_spark.streaming.pipeline import (
-            compact_corpus,
+            compact_manifest_store,
             read_corpus,
             start_corpus_dedup_admission,
-            vacuum_corpus,
+            vacuum_manifest_store,
         )
 
         src = str(tmp_path / "src")
@@ -975,15 +981,19 @@ class TestCorpusDedupAdmission:
         before = {r.doc_id for r in read_corpus(spark, corpus_dir).collect()}
         assert before == {1, 2, 3}
 
-        # crash window: base committed, vacuum skipped — deltas linger
-        folded = compact_corpus(spark, corpus_dir, min_versions=2, vacuum=False)
-        assert folded == 3
-        assert glob.glob(os.path.join(corpus_dir, "docs", "v*")), "deltas linger"
+        # compaction committed, vacuum not run — the batch files linger
+        m = compact_manifest_store(spark, corpus_dir, min_files=2)
+        assert {os.path.dirname(e["path"]) for e in m["files"]} == {"data/c2_0"}
+        assert {os.path.dirname(e["path"]) for e in m["sigs"]} == {"sigs/c2_0"}
+        assert glob.glob(os.path.join(corpus_dir, "data", "v*", "*.parquet")), (
+            "batch files linger"
+        )
         again = [r.doc_id for r in read_corpus(spark, corpus_dir).collect()]
         assert sorted(again) == [1, 2, 3], f"double count: {again}"
 
-        vacuum_corpus(corpus_dir)
-        assert not glob.glob(os.path.join(corpus_dir, "docs", "v*"))
+        vacuum_manifest_store(corpus_dir, keep=1)
+        assert not glob.glob(os.path.join(corpus_dir, "data", "v*"))
+        assert not glob.glob(os.path.join(corpus_dir, "sigs", "v*"))
         assert sorted(
             r.doc_id for r in read_corpus(spark, corpus_dir).collect()
         ) == [1, 2, 3]
@@ -997,72 +1007,102 @@ class TestCorpusDedupAdmission:
         final = {r.doc_id for r in read_corpus(spark, corpus_dir).collect()}
         assert final == {1, 2, 3, 11}, final
 
-    def test_compaction_crash_between_docs_and_sigs_fold_loses_no_sigs(
-        self, spark, tmp_path
+    def test_commit_crash_then_rerun_equals_uncrashed_run(
+        self, spark, tmp_path, monkeypatch
     ):
-        """Crash window between the docs base rename and the sigs base
-        rename: the docs base is ahead of the sigs base. The next
-        compaction must fold each kind from its OWN through (not reuse the
-        docs-derived delta list for sigs), or the sig deltas in
-        (sigs_through, docs_through] are silently excluded, then vacuumed
-        — permanent signature loss, and future near-dups of those docs
-        would be admitted."""
+        """Kill batch 1 after its docs and sigs are written, before its
+        manifest commit, then rerun the stream on the same checkpoint: the
+        corpus and the signature store equal an uncrashed run's. The
+        checkpoint then loses batch 1's ack, so the committed batch is
+        delivered again — and skipped, its files untouched."""
         import glob
-        import shutil
 
-        from simple_cdc_service_spark.streaming.pipeline import (
-            compact_corpus,
-            read_corpus,
-            start_corpus_dedup_admission,
-        )
+        from simple_cdc_service_spark.streaming import pipeline
 
-        src = str(tmp_path / "src")
-        corpus_dir = str(tmp_path / "corpus")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
+        t1 = ("the quick brown fox one jumps over the lazy dog near river "
+              "bend while birds watch the water flow past the old mill")
+        t3 = ("a third unrelated document about medieval falconry traditions "
+              "and the training of hunting birds across the centuries")
+        batches = [
+            [(1, t1), (2, "completely different content describing distributed "
+                          "storage engines compaction strategies and costs")],
+            [(10, t1 + " tail"), (20, t3), (21, t3 + " extra"),
+             (30, "entirely novel text on tidal energy turbines and grid "
+                  "integration challenges in northern estuaries today")],
+        ]
 
-        texts = {
-            1: "alpha document about rivers and old mills turning slowly in the current",
-            2: "beta document describing compaction strategies for log structured storage",
-            3: "gamma document on falconry and the patience required to train wild birds",
-        }
+        def start(root):
+            stream = spark.readStream.schema("doc_id long, text string").json(
+                str(root / "src")
+            )
+            return pipeline.start_corpus_dedup_admission(
+                stream, str(root / "corpus"), str(root / "ckpt"), threshold=0.5
+            )
 
-        def feed_and_run(name, rows):
-            with open(os.path.join(src, name), "w") as f:
-                for did, text in rows:
+        def feed(root, i):
+            os.makedirs(root / "src", exist_ok=True)
+            with open(root / "src" / f"b{i}.json", "w") as f:
+                for did, text in batches[i]:
                     f.write(json.dumps({"doc_id": did, "text": text}) + "\n")
-            stream = spark.readStream.schema("doc_id long, text string").json(src)
-            start_corpus_dedup_admission(
-                stream, corpus_dir, ckpt, threshold=0.5
-            ).awaitTermination()
 
-        for i, (did, text) in enumerate(texts.items()):
-            feed_and_run(f"b{i}.json", [(did, text)])
+        def state(root):
+            corpus_dir = str(root / "corpus")
+            docs = sorted(
+                r.doc_id for r in pipeline.read_corpus(spark, corpus_dir).collect()
+            )
+            sigs = sorted(
+                (r.doc_id, r.band, r.bv)
+                for r in pipeline._read_sigs(spark, corpus_dir).collect()
+            )
+            return docs, sigs
 
-        # simulate the crash: run a full compaction (vacuum off), then rip
-        # out the sigs base — on-disk state is exactly "crashed after the
-        # docs rename, before the sigs rename": docs base_v2 committed,
-        # sigs side still all-deltas.
-        assert compact_corpus(spark, corpus_dir, min_versions=2, vacuum=False) == 3
-        for d in glob.glob(os.path.join(corpus_dir, "sigs", "base_v*")):
-            shutil.rmtree(d)
+        clean = tmp_path / "clean"
+        for i in range(2):
+            feed(clean, i)
+            start(clean).awaitTermination()
 
-        # next admission batch, then the healing compaction (with vacuum —
-        # the step that would have destroyed the skipped sig deltas)
-        feed_and_run("b3.json", [
-            (4, "delta document cataloguing moths drawn to the lighthouse lens at dusk"),
-        ])
-        folded = compact_corpus(spark, corpus_dir, min_versions=1, vacuum=True)
-        assert folded == 4, folded  # sigs side folds all 4, docs side only v3
+        crashy = tmp_path / "crashy"
+        feed(crashy, 0)
+        start(crashy).awaitTermination()
+        commit = pipeline._commit_manifest
+        crashed = []
 
-        # signatures for docs 1-3 must have survived into the new sigs
-        # base: a near-copy of doc 2 is rejected, novel text admitted
-        feed_and_run("b4.json", [
-            (20, texts[2] + " tail"),
-            (21, "novel text about tidal turbines spinning in northern estuaries"),
-        ])
-        final = {r.doc_id for r in read_corpus(spark, corpus_dir).collect()}
-        assert final == {1, 2, 3, 4, 21}, final
+        def crash_once(state_dir, version, manifest):
+            if not crashed:
+                crashed.append(version)
+                raise RuntimeError("killed before the commit")
+            commit(state_dir, version, manifest)
+
+        monkeypatch.setattr(pipeline, "_commit_manifest", crash_once)
+        feed(crashy, 1)
+        with pytest.raises(Exception, match="killed before the commit"):
+            start(crashy).awaitTermination()
+        corpus_dir = str(crashy / "corpus")
+        assert crashed == [1]
+        for d in ("data", "sigs"):
+            assert glob.glob(os.path.join(corpus_dir, d, "v1", "*.parquet")), d
+        assert pipeline._manifest_versions(corpus_dir) == [0]
+
+        start(crashy).awaitTermination()
+        assert pipeline._manifest_versions(corpus_dir) == [0, 1]
+        assert state(crashy) == state(clean)
+        assert state(clean)[0] == [1, 2, 20, 30]
+
+        # batch 1 delivered again: drop its ack from the checkpoint
+        def batch1_files():
+            return {
+                f: os.path.getmtime(f)
+                for f in glob.glob(os.path.join(corpus_dir, "*", "v1*", "*"))
+                + [os.path.join(corpus_dir, "manifest", "v1.json")]
+            }
+
+        written = batch1_files()
+        for f in glob.glob(str(crashy / "ckpt" / "commits" / "*1*")):
+            os.remove(f)
+        start(crashy).awaitTermination()
+        assert os.path.exists(crashy / "ckpt" / "commits" / "1")  # re-ran
+        assert batch1_files() == written
+        assert state(crashy) == state(clean)
 
     def test_within_batch_collapse_is_cluster_representative(
         self, spark, tmp_path

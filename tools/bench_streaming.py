@@ -173,7 +173,7 @@ def bench_admission_store_scale(
     import duckdb
 
     from simple_cdc_service_spark.streaming.pipeline import (
-        compact_corpus,
+        compact_manifest_store,
         read_corpus,
         start_corpus_dedup_admission,
     )
@@ -215,7 +215,7 @@ def bench_admission_store_scale(
     ).awaitTermination()
     preload_sec = round(time.perf_counter() - t_pre, 2)
     t_cmp = time.perf_counter()
-    compact_corpus(spark, corpus_dir, min_versions=1)
+    compact_manifest_store(spark, corpus_dir, min_files=1)
     compact_sec = round(time.perf_counter() - t_cmp, 2)
     store_docs = read_corpus(spark, corpus_dir)
     store_n = store_docs.count()

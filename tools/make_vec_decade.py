@@ -18,9 +18,9 @@ are the structureless worst case the r10 recall numbers were read
 on). N total vectors over K seeded unit-norm centers; each vector is
 normalize(center + sigma·gauss). sigma=0.09 at dim 64 puts
 within-cluster cosine ≈ 0.8 — the ballpark of same-topic sentence
-embeddings. Used by tools/recall_curves.py to make the
-adaptive_imi_nprobe docstring claim ("clustered corpora reach the
-same recall at far smaller probed fractions") load-bearing.
+embeddings. The recall curves in RECALL_CURVES_r11.json were measured
+on it, backing the adaptive_imi_nprobe docstring claim ("clustered
+corpora reach the same recall at far smaller probed fractions").
 """
 
 from __future__ import annotations

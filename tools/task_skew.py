@@ -12,9 +12,9 @@ counts — which the Spark UI's REST API exposes per completed stage.
 ``stage_skew(spark, since_stage)`` returns one record per completed
 stage (id > since_stage) whose max-task-records exceeds ``ratio`` ×
 mean-task-records — with a floor so trivially small stages (a 50-row
-dimension scan on one task) don't alarm. Used by scale100_proof.py
-after every (entry, sf) cell; any hit lands in the sweep artifact's
-"skew" field for the cell.
+dimension scan on one task) don't alarm. Call it after each measured
+query with the last stage id seen before it; the scale sweep behind
+SCALE100VEC_r10.json recorded its hits in each cell's "skew" field.
 
 Pure observer: REST reads against the local UI (enabled by default in
 the repo session factory), no listener registration, no effect on the
